@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
+from osm_changesets_to_parquet_spark.operators.iterutils import checkpoint_metrics
 
 
 def forest_closure(
@@ -50,18 +50,15 @@ def forest_closure(
     (this is a forest closure, not a DAG closure); supply
     deduplicated edges.  ``rounds`` must satisfy 2^rounds >= height.
 
-    ``rounds`` is a BUDGET, not a fixed cost: each doubling round's
-    lineage-cut checkpoint must materialize the new pointers anyway,
-    so a convergence counter rides along as an ``observe()`` metric of
-    that same job (the connected-components discipline — no extra
-    aggregate, no extra action), and the loop exits after the first
-    round that moved NO pointer.  A no-op round proves every pointer
+    ``rounds`` is a BUDGET, not a fixed cost: each doubling round is
+    one :func:`iterutils.checkpoint_metrics` job that also counts the
+    moved pointers, and the loop exits after the first round that
+    moved NO pointer.  A no-op round proves every pointer
     sits on a root (or on a missing parent, which never changes), so
     all remaining rounds would be no-ops too — the early exit is
     exact.  Provision ``rounds`` for the worst-case height; pay only
     ceil(log2(actual height)) + 1 confirming round.
     """
-    from pyspark.sql import Observation
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     n = nodes.select(F.col(node_col).alias("node"))
@@ -93,25 +90,19 @@ def forest_closure(
         # inconsistent node/edge inputs surface as (node, missing_id,
         # depth) rows rather than vanished output.  For consistent
         # forests every ptr resolves and this is the inner join.
-        obs = Observation()
-        state = truncate_lineage(
-            state.join(hop, "ptr", "left")
-            .observe(
-                obs,
-                F.sum(
-                    (
-                        F.col("__ptr2").isNotNull()
-                        & (F.col("__ptr2") != F.col("ptr"))
-                    ).cast("long")
-                ).alias("changed"),
-            )
-            .select(
+        # __moved rides the cut; the next projections drop it.
+        state, m = checkpoint_metrics(
+            state.join(hop, "ptr", "left").select(
                 "node",
                 F.coalesce("__ptr2", F.col("ptr")).alias("ptr"),
                 (F.col("depth") + F.coalesce("__d2", F.lit(0))).alias("depth"),
-            )
+                (
+                    F.col("__ptr2").isNotNull() & (F.col("__ptr2") != F.col("ptr"))
+                ).alias("__moved"),
+            ),
+            changed=F.sum(F.col("__moved").cast("long")),
         )
-        if (obs.get["changed"] or 0) == 0:
+        if m["changed"] == 0:
             converged = True
             break
     if not converged:

@@ -27,20 +27,15 @@ any topology) — same primitives, same storage shape, same contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
-
-
-# Single-task union-find cap: 1M symmetric edge rows == two long
-# columns ~16 MB through Arrow — trivially one task's work (a
-# union-find over 1M edges runs in well under a second), while any
-# graph a 100 TB corpus makes *hard* exceeds it and takes the
-# iterative path.  Data-derived (observed row count), not a core-count
-# constant.
-_LOCAL_FINISH_MAX_EDGES = 1_000_000
+from osm_changesets_to_parquet_spark.operators import iterutils
+from osm_changesets_to_parquet_spark.operators.iterutils import (
+    checkpoint_metrics,
+    truncate_lineage,
+)
 
 
 def _components_single_task(edges: DataFrame) -> DataFrame:
@@ -92,7 +87,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iters: int = 50,
-    local_finish_max_edges: int = _LOCAL_FINISH_MAX_EDGES,
 ) -> DataFrame:
     """Resolve components of the undirected pair graph.
 
@@ -100,13 +94,10 @@ def connected_components(
     where ``cluster_id`` is the smallest node id in the component.
     Deterministic for any edge order.
 
-    Cost shape: exactly ONE job per iteration.  The lineage-cut
-    checkpoint must materialize the new labels anyway, so the
-    convergence counter rides along as an ``observe()`` metric of that
-    same job (labels monotonically decrease, so "changed" = strict
-    decreases vs the previous label, carried through the aggregation)
-    — no separate join + count action per round, which at 100 TB is
-    one full scheduling round-trip saved per iteration.
+    Cost shape: exactly ONE job per iteration, the
+    :func:`iterutils.checkpoint_metrics` cut that also counts changed
+    labels (labels monotonically decrease, so "changed" = strict
+    decreases vs the previous label, carried through the aggregation).
 
     Convergence guard (ADVICE r10): min-label propagates one hop per
     round, so a graph whose diameter exceeds ``max_iters`` would leave
@@ -116,19 +107,13 @@ def connected_components(
     O(log^2 n) rounds converge within the same budget on any topology
     — correctness never depends on a diameter assumption.
 
-    Single-task finish (r14, guide §1.2 "the distributed algorithm"):
-    when the deduped symmetric edge set fits comfortably in ONE task
-    (<= _LOCAL_FINISH_MAX_EDGES rows — ~16 MB of long pairs), the
-    components are resolved by a union-find inside one ``mapInPandas``
-    task instead of O(diameter) scheduling round-trips, exactly the
-    local endgame of Kiveris et al.'s contraction algorithms (every
-    distributed CC finishes small remainders locally).  The size gate
-    rides the edge checkpoint as an ``observe()`` metric — no extra
-    action — and is data-derived, not a core-count constant: pair
-    graphs over the cap (any genuinely large near-dup/co-purchase
-    graph at 100 TB) take the iterative path unchanged.  Union-by-min
-    with path compression returns the identical (id, component-min)
-    labeling, deterministic for any edge order.
+    Single-task finish: when the deduped symmetric edge set has at
+    most ``iterutils.LOCAL_FINISH_MAX_ROWS`` rows (counted on the edge
+    checkpoint's job), a union-find inside one ``mapInPandas`` task
+    replaces O(diameter) scheduling round-trips — the local endgame of
+    Kiveris et al.'s contraction algorithms.  Larger graphs take the
+    iterative path.  Union-by-min returns the identical (id,
+    component-min) labeling, deterministic for any edge order.
     """
     sym = pairs.select(
         F.col(src_col).cast("long").alias("src"), F.col(dst_col).cast("long").alias("dst")
@@ -136,11 +121,8 @@ def connected_components(
     edges = sym.unionByName(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    size_obs = Observation()
-    edges = truncate_lineage(
-        edges.observe(size_obs, F.count(F.lit(1)).alias("n"))
-    )
-    if (size_obs.get["n"] or 0) <= local_finish_max_edges:
+    edges, m = checkpoint_metrics(edges, n=F.count(F.lit(1)))
+    if m["n"] <= iterutils.LOCAL_FINISH_MAX_ROWS:
         return _components_single_task(edges)
 
     labels = truncate_lineage(
@@ -166,22 +148,16 @@ def connected_components(
         merged = labels.withColumn("__old", F.col("label")).unionByName(
             nbr.withColumn("__old", F.lit(None).cast("long"))
         )
-        obs = Observation()
-        observed = (
-            merged.groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("label") < F.col("__old")).cast("long")
-                ).alias("changed"),
-            )
-            .select("id", "label")
-        )
         # the checkpoint is the iteration's single action; the metric is
         # available as soon as it completes
-        labels = truncate_lineage(observed)
-        if (obs.get["changed"] or 0) == 0:
+        labels, m = checkpoint_metrics(
+            merged.groupBy("id").agg(
+                F.min("label").alias("label"), F.max("__old").alias("__old")
+            ),
+            changed=F.sum((F.col("label") < F.col("__old")).cast("long")),
+        )
+        labels = labels.select("id", "label")
+        if m["changed"] == 0:
             converged = True
             break
     if not converged:
@@ -289,17 +265,15 @@ def connected_components_star(
     converged = False
     for _ in range(max_iters):
         stepped = _small_star(_large_star(edges))
-        obs = Observation()
-        observed = stepped.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
+        edges, m = checkpoint_metrics(
+            stepped,
+            n=F.count(F.lit(1)),
             # bit_xor: order-independent and overflow-free (a SUM of
             # xxhash64 trips ANSI long overflow); edges are distinct so
             # no pair can self-cancel
-            F.coalesce(F.expr("bit_xor(xxhash64(src, dst))"), F.lit(0)).alias("hs"),
+            hs=F.expr("bit_xor(xxhash64(src, dst))"),
         )
-        edges = truncate_lineage(observed)
-        sig = (obs.get["n"], obs.get["hs"])
+        sig = (m["n"], m["hs"])
         if sig == prev:
             converged = True
             break

@@ -16,10 +16,13 @@ how the q84 oracle verifies every rank value.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
+from osm_changesets_to_parquet_spark.operators.iterutils import (
+    checkpoint_metrics,
+    truncate_lineage,
+)
 
 
 def copurchase_pairs(
@@ -186,12 +189,8 @@ def k_core(
     drops edges touching an under-k node (two semi-joins), until an
     edge-count fixpoint.  Rounds are bounded by the peeling depth of
     the graph — O(log n) on real-world skewed graphs — and each round
-    is ONE job: the lineage-cut checkpoint must materialize the
-    surviving edges anyway, so the fixpoint counter rides along as an
-    ``observe()`` metric of that same job (the connected-components
-    discipline; previously a separate count() action per round paid a
-    second scheduling round-trip for a frame already materialized);
-    no driver-side adjacency ever exists.
+    is ONE job, the :func:`iterutils.checkpoint_metrics` cut that also
+    counts the surviving edges; no driver-side adjacency ever exists.
 
     ``max_rounds`` is a runaway backstop (a path graph peels in O(n)
     rounds; real corpora don't) — hitting it raises rather than
@@ -206,9 +205,8 @@ def k_core(
         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
         .distinct()
     )
-    obs0 = Observation()
-    cur = truncate_lineage(cur.observe(obs0, F.count(F.lit(1)).alias("n")))
-    n_edges = obs0.get["n"] or 0
+    cur, m = checkpoint_metrics(cur, n=F.count(F.lit(1)))
+    n_edges = m["n"]
     for _ in range(max_rounds):
         if n_edges == 0:
             return cur
@@ -224,9 +222,8 @@ def k_core(
         nxt = cur.join(
             keep.withColumnRenamed("n", "u"), "u", "semi"
         ).join(keep.withColumnRenamed("n", "v"), "v", "semi").select("u", "v")
-        obs = Observation()
-        nxt = truncate_lineage(nxt.observe(obs, F.count(F.lit(1)).alias("n")))
-        n_next = obs.get["n"] or 0
+        nxt, m = checkpoint_metrics(nxt, n=F.count(F.lit(1)))
+        n_next = m["n"]
         if n_next == n_edges:
             return nxt
         cur, n_edges = nxt, n_next

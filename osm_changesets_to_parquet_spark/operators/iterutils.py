@@ -25,11 +25,27 @@ GC'd AND ``spark.cleaner.referenceTracking.cleanCheckpoints`` is true —
 session.get_spark sets it, so a 20-iteration loop does not retain 20
 dataset copies for the application lifetime.  Sessions built elsewhere
 should set the same conf before configuring a checkpoint dir.
+
+:func:`checkpoint_metrics` is the one spelling of "cut the lineage and
+read a count from the same job": the cut must materialize the frame
+anyway, so the metrics ride it as an ``observe()`` of that job instead
+of costing a separate action.  Iterative loops read their convergence
+counter from it, and size-gated operators read the row count that
+decides between a single-task finish (at most
+:data:`LOCAL_FINISH_MAX_ROWS` rows) and the distributed path: the
+composable core-set pattern of contracting distributed and solving
+the small remainder locally.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+
+# Single-task finish cap: 1M rows of a few long/short-string columns is
+# tens of MB through Arrow, one task's work in well under a second,
+# while any input a 100 TB corpus makes *hard* exceeds it and takes the
+# distributed path.  Gated on an observed row count, not on core count.
+LOCAL_FINISH_MAX_ROWS = 1_000_000
 
 
 def truncate_lineage(df: DataFrame) -> DataFrame:
@@ -42,3 +58,15 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
     if has_dir:
         return df.checkpoint(eager=True)
     return df.localCheckpoint()
+
+
+def checkpoint_metrics(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Cut the lineage of ``df`` and return it with ``metrics`` (name ->
+    aggregate Column) observed on that same job: exactly one Spark job
+    per call.  A NULL metric (e.g. a SUM over no rows) reads as 0."""
+    obs = Observation()
+    cut = truncate_lineage(
+        df.observe(obs, *[c.alias(name) for name, c in metrics.items()])
+    )
+    got = obs.get
+    return cut, {name: got[name] or 0 for name in metrics}

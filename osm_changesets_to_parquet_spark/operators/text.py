@@ -57,7 +57,9 @@ def bigram_stream(
     spelling it replaces (single-token docs contribute NULL grams via
     out-of-range array access, NULL text propagates to no rows) —
     callers' oracle contracts depend on them; :func:`bigrams` is the
-    cleaned-up variant with a ``size >= 2`` guard for new code.
+    cleaned-up variant with a ``size >= 2`` guard for new code.  The
+    access goes through ``get`` so an ANSI session yields those NULL
+    grams instead of raising INVALID_ARRAY_INDEX.
     """
     keep = keep or []
     return docs.select(
@@ -67,7 +69,7 @@ def bigram_stream(
         F.explode(
             F.expr(
                 "transform(sequence(1, size(__ws) - 1), "
-                "i -> concat(__ws[i - 1], ' ', __ws[i]))"
+                "i -> concat(get(__ws, i - 1), ' ', get(__ws, i)))"
             )
         ).alias("g"),
     )

@@ -95,57 +95,6 @@ def register(
 # pins that the head of _PRIORITY equals the tool's choice).
 _PRIORITY: tuple[str, ...] = (
     # ---- window (50): oldest-witnessed-first ----
-    "q36_cosine_topk",
-    "q37_centroid",
-    "q38_token_freq",
-    "q39_bigrams",
-    "q40_tfidf",
-    "s11_left_outer_stream_join",
-    "s12_python_stream_source",
-    "t41_language_id",
-    "t42_quality_score",
-    "t43_token_count",
-    "t44_fingerprint",
-    "t45_simhash",
-    "q152_unigram_entropy",
-    "q153_group_jaccard",
-    "q154_incremental_agg",
-    "q155_grid_join_2d",
-    "q156_event_transitions",
-    "q157_rolling_median",
-    "q158_variant_shred",
-    "q159_manifest_skipping",
-    "q160_log_odds_terms",
-    "q161_sql_surface",
-    "q162_group_ols",
-    "q163_zorder_skipping",
-    "q164_recursive_cte",
-    "q165_mmr_rerank",
-    "q166_nearest_centroid",
-    "q167_targeted_delete",
-    "q168_budget_select",
-    "q169_rolling_dau",
-    "q170_autocorrelation",
-    "q171_frequent_pairs",
-    "q172_roc_auc",
-    "q173_ab_ztest",
-    "q174_sorted_neighborhood",
-    "q175_cms_join_estimate",
-    "q176_inverted_index",
-    "q177_kcenter_coreset",
-    "q178_pca_power",
-    "q180_rfm_segments",
-    "q181_twap",
-    "q182_cusum_changepoint",
-    "q183_attribution",
-    "q184_benford_audit",
-    "q185_windowed_funnel",
-    "q186_path_mining",
-    "q187_pareto_concentration",
-    "q188_column_mi",
-    "q189_key_gini",
-    "q190_skyline",
-    # ---- next-oldest tail (14) ----
     "q191_dynamic_partition_pruning",
     "q192_emd_drift",
     "q193_decile_lift",
@@ -160,6 +109,57 @@ _PRIORITY: tuple[str, ...] = (
     "cs12_python_datasource_writer",
     "cs14_single_file_publish",
     "e46_embedding_neardup",
+    "q121_ndcg_eval",
+    "q132_contrastive_mining",
+    "q142_neardup_persisted_index",
+    "q143_repeated_spans",
+    "q144_bpe_merges",
+    "q145_bpe_encode",
+    "q146_quantized_rerank",
+    "q147_dsir_weights",
+    "q148_tokenizer_fertility",
+    "q149_decontaminate_spans",
+    "q150_ann_persisted_index",
+    "q151_ann_incremental",
+    "q179_knn_label_audit",
+    "q194_embedding_dim_stats",
+    "q195_negative_sampling",
+    "q196_poisson_bootstrap",
+    "q198_weighted_median",
+    "q199_linear_interpolation",
+    "q201_hll_overlap",
+    "q202_matrix_projection",
+    "q203_grouped_percentiles",
+    "q204_nearest_score_match",
+    "q205_sequential_patterns",
+    "q206_stratified_sample",
+    "q207_reservoir_sample",
+    "q208_isotonic_calibration",
+    "q209_session_entropy",
+    "q210_bipartite_projection",
+    "q211_haversine_join",
+    "q212_theil_sen",
+    "q213_mann_whitney",
+    "q214_chi2_feature_select",
+    "q215_winsorized_stats",
+    "q216_bloom_antijoin",
+    "q217_recency_weighted_ctr",
+    "q218_triangle_count",
+    # ---- next-oldest tail (14) ----
+    "q219_kaplan_meier",
+    "q220_dow_seasonality",
+    "q221_anomaly_zscore",
+    "q222_bigram_perplexity",
+    "q223_ks_drift",
+    "s13_partitioned_stream_source",
+    "s14_streaming_neardup",
+    "s15_streaming_quality_router",
+    "s20_python_stream_sink",
+    "s21_streaming_topk",
+    "cs13_parse_diagnostics",
+    "cs15_xml_expr_roundtrip",
+    "m53_phash_neardup",
+    "q224_gram_novelty",
 )
 # no rows-only queries remain (a51/a52 carry tolerance oracles now)
 _LAST: tuple[str, ...] = ()

@@ -976,15 +976,6 @@ ORDER BY rk
 """
 
 
-# Single-task greedy cap: 1M (doc_id, gram) rows through Arrow is tens
-# of MB in one task and the k-round greedy is k numpy bincounts over
-# the pair arrays — sub-second — while k sequential distributed rounds
-# pay k scheduling round-trips.  Data-derived (observed row count on
-# the checkpoint job), the connected_components local-finish
-# discipline; corpora over the cap take the iterative path unchanged.
-_Q272_LOCAL_FINISH_MAX_ROWS = 1_000_000
-
-
 def _q272_greedy_single_task(dg: DataFrame) -> DataFrame:
     """The full k-round greedy inside ONE ``mapInPandas`` task over the
     checkpointed distinct (doc_id, g) frame.
@@ -1071,21 +1062,23 @@ def _q272_greedy_single_task(dg: DataFrame) -> DataFrame:
     tables=("documents",),
 )
 def q272(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
+    from osm_changesets_to_parquet_spark.operators import iterutils
     from osm_changesets_to_parquet_spark.operators.text import bigram_stream
 
     docs = load_table(spark, sf_dir, "documents")
-    dg = bigram_stream(docs, keep=["doc_id"]).distinct()
-    from pyspark.sql import Observation
-
-    size_obs = Observation()
-    dg = truncate_lineage(
-        dg.observe(size_obs, F.count(F.lit(1)).alias("n"))
+    # single-token docs make NULL grams (bigram_stream's out-of-range
+    # access); the oracle's UNNEST makes none, so neither path may see
+    # them — np.unique cannot sort None among str, and the distributed
+    # universe would count NULL as a gram
+    dg = (
+        bigram_stream(docs, keep=["doc_id"])
+        .where(F.col("g").isNotNull())
+        .distinct()
     )
-    if (size_obs.get["n"] or 0) <= _Q272_LOCAL_FINISH_MAX_ROWS:
+    # k-round greedy in one task when the (doc, gram) frame is small:
+    # k numpy bincounts instead of k scheduling round-trips
+    dg, m = iterutils.checkpoint_metrics(dg, n=F.count(F.lit(1)))
+    if m["n"] <= iterutils.LOCAL_FINISH_MAX_ROWS:
         return _q272_greedy_single_task(dg).orderBy("rk")
 
     universe = dg.select("g").distinct().count()

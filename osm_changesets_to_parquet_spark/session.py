@@ -35,6 +35,17 @@ DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 _SHIP_MARKER = "spark.osm_changesets.pkg_shipped"
 
+# engine defaults that can also be set on a running session
+# (``configure_existing``); ``get_spark`` adds its static confs
+_RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def ship_package(spark: SparkSession) -> None:
     """Distribute this package to executor Python workers via addPyFile.
@@ -78,13 +89,8 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = builder.master(master)
     conf = {
-        "spark.sql.session.timeZone": "UTC",
+        **_RUNTIME_CONF,
         "spark.sql.shuffle.partitions": str(cpus),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.parquet.compression.codec": "snappy",
         # reliable checkpoints (iterutils.truncate_lineage) are deleted
         # once their RDD is GC'd — without this, every iteration of a
@@ -107,14 +113,7 @@ def get_spark(
 def configure_existing(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to a session we did not build
     (the driver hands us one in ``__spark_entry__.entry``)."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-    }.items():
+    for k, v in _RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # static conf on a started session — best effort

@@ -10,6 +10,7 @@ order-insensitive value hash.
 from __future__ import annotations
 
 import math
+import os
 from datetime import date, datetime
 
 import duckdb
@@ -30,8 +31,12 @@ TABLES = (
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One view per table file present in ``sf_dir`` (a hand-built input
+    dir may hold only the tables its query reads)."""
     con = duckdb.connect()
     for t in TABLES:
+        if not os.path.exists(f"{sf_dir}/{t}.parquet"):
+            continue
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )

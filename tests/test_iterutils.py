@@ -1,0 +1,88 @@
+"""The shared lineage-cut primitive and the size-gated local finish:
+``iterutils.checkpoint_metrics`` costs one job and reads its metrics,
+and q272 gives the oracle's answer on both sides of
+``iterutils.LOCAL_FINISH_MAX_ROWS``, on text the fixtures lack."""
+
+from __future__ import annotations
+
+import time
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from osm_changesets_to_parquet_spark.operators import iterutils
+from tests.oracle_utils import compare
+
+
+def _jobs_started_by(spark, fn) -> tuple[object, int]:
+    """Run ``fn`` under a fresh job group; return its result and the
+    number of Spark jobs the group started."""
+    sc = spark.sparkContext
+    group = f"iterutils-{uuid.uuid4().hex}"
+    barrier = f"{group}-barrier"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(barrier, barrier)
+        # the status store applies listener events in order, so once the
+        # barrier job is visible every job of ``group`` is visible too
+        spark.range(1).collect()
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(barrier) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(barrier), "barrier job never reported"
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "bound, want",
+    [(10, {"n": 10, "s": 45}), (0, {"n": 0, "s": 0})],
+    ids=["rows", "empty"],
+)
+def test_checkpoint_metrics_one_job_and_null_reads_zero(spark, bound, want):
+    df = spark.range(0, 10, 1, 2).where(F.col("id") < bound)
+    (cut, metrics), jobs = _jobs_started_by(
+        spark,
+        lambda: iterutils.checkpoint_metrics(
+            df, n=F.count(F.lit(1)), s=F.sum("id")
+        ),
+    )
+    # SUM over no rows is NULL; the helper reads it as 0
+    assert metrics == want
+    assert jobs == 1
+    assert cut.count() == want["n"]
+
+
+_DOCS = [
+    (0, "a b c d"),
+    (1, "c d e"),
+    (2, "solo"),  # single token: no bigram on either side
+    (3, None),  # NULL text
+    (4, "b c x y"),
+    (5, ""),
+]
+
+
+@pytest.mark.parametrize("cap", ["default", 0], ids=["local", "distributed"])
+def test_q272_short_and_null_docs_match_oracle(spark, tmp_path, monkeypatch, cap):
+    from osm_changesets_to_parquet_spark.queries.curation import _Q272_SQL, q272
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _ in _DOCS], pa.int64()),
+                "text": pa.array([t for _, t in _DOCS], pa.string()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    if cap == 0:
+        monkeypatch.setattr(iterutils, "LOCAL_FINISH_MAX_ROWS", 0)
+    assert compare(q272(spark, str(tmp_path)), _Q272_SQL, str(tmp_path), "q272") == []

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from osm_changesets_to_parquet_spark.operators import iterutils
 from osm_changesets_to_parquet_spark.operators.asof import merge_asof
 from osm_changesets_to_parquet_spark.operators.clusters import (
     connected_components,
@@ -70,10 +71,9 @@ def test_connected_components_matches_union_find(spark, pairs):
     want = _union_find([tuple(r) for r in pdf.itertuples(index=False)])
     assert got == want
     # cap 0: the ITERATIVE min-label path must produce the same labels
-    got_iter = {
-        r.id: r.label
-        for r in connected_components(df, local_finish_max_edges=0).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(iterutils, "LOCAL_FINISH_MAX_ROWS", 0)
+        got_iter = {r.id: r.label for r in connected_components(df).collect()}
     assert got_iter == want
 
 
@@ -123,7 +123,7 @@ def test_connected_components_star_no_fixpoint_raises(spark):
         connected_components_star(pairs, max_iters=2).collect()
 
 
-def test_connected_components_unconverged_falls_back_to_star(spark):
+def test_connected_components_unconverged_falls_back_to_star(spark, monkeypatch):
     """ADVICE r10: min-label propagation moves the component minimum one
     hop per round, so a path longer than max_iters would leave WRONG
     labels.  The guard must detect the exhausted-but-still-changing loop,
@@ -134,16 +134,15 @@ def test_connected_components_unconverged_falls_back_to_star(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
+    # cap 0 bypasses the single-task union-find (which would solve this
+    # 59-edge path without ever iterating) so the ITERATIVE guard stays
+    # exercised
+    monkeypatch.setattr(iterutils, "LOCAL_FINISH_MAX_ROWS", 0)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         got = {
             r.id: r.label
-            # local_finish_max_edges=0 bypasses the r14 single-task
-            # union-find (which would solve this 59-edge path without
-            # ever iterating) so the ITERATIVE guard stays exercised
-            for r in connected_components(
-                pairs, max_iters=8, local_finish_max_edges=0
-            ).collect()
+            for r in connected_components(pairs, max_iters=8).collect()
         }
     assert got == {i: 0 for i in range(n)}
     assert any(
@@ -152,7 +151,7 @@ def test_connected_components_unconverged_falls_back_to_star(spark):
     )
 
 
-def test_connected_components_diameter_equals_max_iters_converges(spark):
+def test_connected_components_diameter_equals_max_iters_converges(spark, monkeypatch):
     """ADVICE r11: a path of diameter exactly max_iters finishes its last
     label-changing propagation on round max_iters; only the NEXT round can
     observe changed==0.  The spare confirming round must let the guard see
@@ -164,15 +163,14 @@ def test_connected_components_diameter_equals_max_iters_converges(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
+    # cap 0 bypasses the single-task finish: this pins the ITERATIVE
+    # path's spare confirming round (ADVICE r11)
+    monkeypatch.setattr(iterutils, "LOCAL_FINISH_MAX_ROWS", 0)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         got = {
             r.id: r.label
-            # bypass the r14 local finish: this pins the ITERATIVE
-            # path's spare confirming round (ADVICE r11)
-            for r in connected_components(
-                pairs, max_iters=n - 1, local_finish_max_edges=0
-            ).collect()
+            for r in connected_components(pairs, max_iters=n - 1).collect()
         }
     assert got == {i: 0 for i in range(n)}
     assert not any(issubclass(w.category, RuntimeWarning) for w in caught)
