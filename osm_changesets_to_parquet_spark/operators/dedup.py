@@ -1110,12 +1110,8 @@ def group_token_jaccard(
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     pairs = (
-        F.broadcast(sizes.select(F.col("g").alias("ga"), F.col("sz").alias("n_a")))
-        .crossJoin(
-            F.broadcast(
-                sizes.select(F.col("g").alias("gb"), F.col("sz").alias("n_b"))
-            )
-        )
+        sizes.select(F.col("g").alias("ga"), F.col("sz").alias("n_a"))
+        .crossJoin(sizes.select(F.col("g").alias("gb"), F.col("sz").alias("n_b")))
         .where(F.col("ga") < F.col("gb"))
     )
     nc = F.coalesce(F.col("n_common"), F.lit(0))

@@ -18,7 +18,6 @@ def fk_orphans(
     child_key: str,
     parent: DataFrame,
     parent_key: str,
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """Rows of ``child`` whose ``child_key`` has no match in
     ``parent.parent_key`` (NULL child keys are orphans too — a NULL FK
@@ -28,8 +27,6 @@ def fk_orphans(
     keys = parent.select(F.col(parent_key).alias("__pk")).where(
         F.col(parent_key).isNotNull()
     ).distinct()
-    if broadcast_parent:
-        keys = F.broadcast(keys)
     return child.join(
         keys, child[child_key].eqNullSafe(F.col("__pk")), "left_anti"
     )

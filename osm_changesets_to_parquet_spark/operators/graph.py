@@ -160,7 +160,7 @@ def pagerank(
         )
         ranks = truncate_lineage(
             nodes.join(contribs, "id", "left")
-            .crossJoin(F.broadcast(dangling))
+            .crossJoin(dangling)
             .select(
                 "id",
                 (

@@ -237,7 +237,7 @@ def targeted_delete(
     rewritten = (
         state.where(F.col("__pb").isin(touched))
         .join(
-            F.broadcast(kb.select(F.col("__k").alias(key_col))),
+            kb.select(F.col("__k").alias(key_col)),
             key_col,
             "left_anti",
         )

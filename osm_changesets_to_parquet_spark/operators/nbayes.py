@@ -47,7 +47,7 @@ def naive_bayes_predict(
     )
     ptot = prior.agg(F.sum("d_l").alias("d"))
     labels = (
-        prior.crossJoin(F.broadcast(ptot))
+        prior.crossJoin(ptot)
         .crossJoin(F.broadcast(v))
         .join(nl, "label")
         .select(

@@ -105,7 +105,7 @@ def global_cumsum(
     ).select("__bucket", "__offset")
     shift = F.col(value_col) if exclusive else F.lit(0)
     return (
-        local.join(F.broadcast(off), "__bucket")
+        local.join(off, "__bucket")
         .withColumn(out_col, (F.col("__local") + F.col("__offset") - shift))
         .drop("__bucket", "__local", "__offset")
     )
@@ -216,7 +216,7 @@ def global_ntile(
         .otherwise(r + F.floor((rn - r * (q + 1) - 1) / F.greatest(q, F.lit(1))) + 1)
         .cast("long")
     )
-    out = ranked.crossJoin(F.broadcast(n_row)).withColumn(out_col, tile)
+    out = ranked.crossJoin(n_row).withColumn(out_col, tile)
     if rank_col:
         out = out.withColumnRenamed("__gr", rank_col)
     else:

@@ -299,7 +299,7 @@ def rebalance_sources(
     counts = docs.groupBy(source_col).agg(F.count(F.lit(1)).alias("n_docs"))
     total = counts.agg(F.sum("n_docs").alias("__total"))
     rates = (
-        counts.crossJoin(F.broadcast(total))
+        counts.crossJoin(total)
         .withColumn(
             "cap", F.floor(F.col("__total") * F.lit(max_share_permille) / F.lit(1000))
         )

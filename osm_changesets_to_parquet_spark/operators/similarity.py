@@ -70,7 +70,7 @@ def cosine_topk(
     if round_to is not None:
         sim = F.round(sim, round_to)
     return (
-        embeddings.crossJoin(F.broadcast(query))
+        embeddings.crossJoin(query)
         .select(id_col, sim.alias("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
@@ -144,7 +144,7 @@ def quantized_rerank_topk(
         )
     )
     cand = (
-        codes.crossJoin(F.broadcast(qcodes))
+        codes.crossJoin(qcodes)
         .where(cosine_similarity_col(F.col("__cv"), F.col("__qv")) >= tau)
         .select("qid", id_col)
     )
@@ -154,7 +154,7 @@ def quantized_rerank_topk(
     sim = F.round(cosine_similarity_col(F.col(vec_col), F.col("__qe")), 4)
     reranked = (
         cand.join(embeddings.select(id_col, vec_col), id_col)
-        .join(F.broadcast(full_q), "qid")
+        .join(full_q, "qid")
         .select("qid", id_col, sim.alias("sim"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col(id_col))
@@ -206,7 +206,7 @@ def lsh_topk(
             id_col, vec_col, srp_signature(F.col(vec_col), planes).alias("sig")
         )
         q_sig = query.select("q", srp_signature(F.col("q"), planes).alias("sig"))
-        c = e_sig.join(F.broadcast(q_sig), "sig").select(id_col, vec_col, "q")
+        c = e_sig.join(q_sig, "sig").select(id_col, vec_col, "q")
         cand = c if cand is None else cand.unionByName(c)
     cand = cand.dropDuplicates([id_col])
     sim = F.round(cosine_similarity_col(F.col(vec_col), F.col("q")), 4)
@@ -381,14 +381,6 @@ def quantize_int8(df: DataFrame, vec_col: str = "embedding"):
                 "tinyint"
             ),
         ),
-    )
-
-
-def dequantize_int8(df: DataFrame, q_col: str = "q", scale_col: str = "scale", out_col: str = "embedding"):
-    """Inverse of :func:`quantize_int8` (lossy by <= scale/2 per component)."""
-    return df.withColumn(
-        out_col,
-        F.transform(F.col(q_col), lambda x: x.cast("double") * F.col(scale_col)),
     )
 
 
@@ -704,7 +696,7 @@ def kmeans_lloyd(
             F.array_sort(F.collect_list(F.struct("cid", "c"))).alias("cs")
         )
         assigned = (
-            e.crossJoin(F.broadcast(cent_arr))
+            e.crossJoin(cent_arr)
             .select("id", "v", best_cid.alias("cid"))
         )
         # materialize each round's assignment (the q84 lineage
@@ -870,7 +862,7 @@ def mmr_rerank(
     pool = cosine_topk(
         embeddings, query, pool_k, id_col=id_col, vec_col=vec_col
     )
-    pv = embeddings.join(F.broadcast(pool.select(id_col)), id_col).select(
+    pv = embeddings.join(pool.select(id_col), id_col).select(
         F.col(id_col).alias("__a"), F.col(vec_col).alias("__va")
     )
     pw = (
@@ -1045,7 +1037,7 @@ def pca_power_top(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm")
     )
     return (
-        w_df.crossJoin(F.broadcast(nrm))
+        w_df.crossJoin(nrm)
         .select(
             (F.col("pos") + 1).cast("long").alias("pos"),
             F.round(F.col("w") / F.col("nrm"), 6).alias("loading"),

@@ -61,13 +61,6 @@ def cms_build(tokens: DataFrame, token_col: str = "token") -> DataFrame:
     return rows.groupBy("j", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two sketches built with the same constants (counter sum)."""
-    return (
-        a.unionByName(b).groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def cms_estimate(sketch: DataFrame, queries: DataFrame, token_col: str = "token") -> DataFrame:
     """Estimate each query token's count: min over rows of its counters.
 
@@ -162,7 +155,7 @@ def bloom_prefilter(
     for i, p in enumerate(pos):
         b = bloom.select(F.col("bit").alias(f"__b{i}"))
         out = out.join(
-            F.broadcast(b), p == F.col(f"__b{i}"), "left_semi"
+            b, p == F.col(f"__b{i}"), "left_semi"
         )
     return out
 
@@ -324,7 +317,7 @@ def heavy_hitters_exact(df: DataFrame, item_col: str, k: int) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     return (
-        counts.crossJoin(F.broadcast(n_row))
+        counts.crossJoin(n_row)
         .where(F.col("cnt") * F.lit(k) > F.col("__n"))
         .select(item_col, "cnt")
     )

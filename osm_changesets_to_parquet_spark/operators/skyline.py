@@ -74,7 +74,7 @@ def skyline_2d_max(
     )
     per_x = Window.partitionBy("__bucket", "x")
     scored = (
-        bucketed.join(F.broadcast(suffix), "__bucket")
+        bucketed.join(suffix, "__bucket")
         .withColumn("__gmx", F.max("y").over(in_bucket))
         .withColumn("__xmax", F.max("y").over(per_x))
         .withColumn(

@@ -116,7 +116,7 @@ def tf_idf(
     n_docs = docs.agg(F.countDistinct(doc_id_col).alias("n_docs"))
     return (
         tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .withColumn("score", F.col("tf") * F.log(F.col("n_docs") / F.col("df")))
     )
 
@@ -178,8 +178,8 @@ def bm25_topk(
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
+        tf.join(dfreq, "term")
+        .crossJoin(stats)
         .withColumn(
             "idf",
             F.log(

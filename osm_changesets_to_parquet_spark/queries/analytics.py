@@ -421,7 +421,7 @@ def q156(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = trans.groupBy("src").agg(F.sum("cnt").alias("__tot"))
     return (
-        trans.join(F.broadcast(tot), "src")
+        trans.join(tot, "src")
         .select(
             "src",
             "dst",
@@ -477,7 +477,7 @@ def q169(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     )
     return (
-        exploded.join(F.broadcast(observed), "day")
+        exploded.join(observed, "day")
         .distinct()
         .groupBy("day")
         .agg(F.count(F.lit(1)).alias("rolling_users"))
@@ -1072,7 +1072,7 @@ def q273(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the frequent-pair frame is tiny (63-3445 rows) — broadcast the
     # self-join and the pruning semi-join instead of SMJ-ing them
-    x = F.broadcast(fp).alias("x")
+    x = fp.alias("x")
     y = F.broadcast(fp).alias("y")
     cand = (
         x.join(y, F.col("x.pa") == F.col("y.pa"))

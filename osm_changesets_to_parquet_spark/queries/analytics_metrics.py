@@ -659,7 +659,7 @@ def q184(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(v) for v in _BENFORD]), F.col("digit").cast("int")
     )
     return (
-        d.crossJoin(F.broadcast(t))
+        d.crossJoin(t)
         .select(
             "digit",
             F.col("n").cast("long").alias("n_obs"),
@@ -732,7 +732,7 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = c.agg(
         F.sum("cents").alias("total"), F.count(F.lit(1)).alias("n")
     )
-    wt = w.crossJoin(F.broadcast(t))
+    wt = w.crossJoin(t)
     k80 = wt.where(
         5 * (F.col("cum") - F.col("cents")) < 4 * F.col("total")
     ).agg(F.count(F.lit(1)).alias("k80"))
@@ -742,8 +742,8 @@ def q187(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("top10_raw")
     )
     return (
-        t.crossJoin(F.broadcast(k80))
-        .crossJoin(F.broadcast(top10))
+        t.crossJoin(k80)
+        .crossJoin(top10)
         .select(
             F.col("n").cast("long").alias("n_customers"),
             F.col("total").cast("long").alias("total_cents"),
@@ -778,7 +778,8 @@ ORDER BY j.lang, j.source
         "column-dependence audit: the (lang, source) contingency table "
         "with per-cell pointwise mutual information — the feature-"
         "relevance / leakage screen run before training on categorical "
-        "columns.  One keyed count, two tiny broadcast marginals; the "
+        "columns.  One keyed count, two tiny marginals that broadcast "
+        "by size; the "
         "ln argument is a ratio of exact integer products, so both "
         "engines round the same double"
     ),
@@ -792,8 +793,8 @@ def q188(spark: SparkSession, sf_dir: str) -> DataFrame:
     ms = j.groupBy("source").agg(F.sum("n").alias("ns"))
     return (
         j.crossJoin(F.broadcast(t))
-        .join(F.broadcast(ml), "lang")
-        .join(F.broadcast(ms), "source")
+        .join(ml, "lang")
+        .join(ms, "source")
         .select(
             "lang",
             "source",
@@ -1259,7 +1260,7 @@ def q198(spark: SparkSession, sf_dir: str) -> DataFrame:
         bounds=[1.0e6 * i for i in range(1, 12)],
     )
     return (
-        c.crossJoin(F.broadcast(t))
+        c.crossJoin(t)
         .where(2 * F.col("cw") >= F.col("tw"))
         .groupBy("tw")
         .agg(F.round(F.min("cents") / F.lit(100.0), 2).alias("weighted_median"))
@@ -1503,7 +1504,7 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("event_type") == "purchase").cast("long")).alias("np"),
     )
     a = u.agg(F.avg("np").alias("mean_np"))
-    u = u.crossJoin(F.broadcast(a))
+    u = u.crossJoin(a)
     # the as-of order key must be a total order: fold (score, user_id)
     # into one integer key (scores are bounded event counts << 2^20)
     key = (F.col("score") * F.lit(1 << 20) + F.col("user_id")).alias("k")

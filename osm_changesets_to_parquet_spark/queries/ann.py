@@ -601,8 +601,8 @@ def q176(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.sum("doc_id"), F.lit(0)).cast("long").alias("docsum"),
     )
     return (
-        stats_a.crossJoin(F.broadcast(stats_b))
-        .crossJoin(F.broadcast(stats_i))
+        stats_a.crossJoin(stats_b)
+        .crossJoin(stats_i)
         .select("df_a", "df_b", "n_both", "docsum")
     )
 

@@ -208,7 +208,7 @@ def q132(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = (
-        e.crossJoin(F.broadcast(a))
+        e.crossJoin(a)
         .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -547,7 +547,7 @@ def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = (
-        e.crossJoin(F.broadcast(a))
+        e.crossJoin(a)
         .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -700,7 +700,7 @@ def q195(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.withColumn(
             "j", F.explode(F.array(*[F.lit(i) for i in range(1, _Q195_K + 1)]))
         )
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .withColumn(
             "nid",
             (
@@ -1221,7 +1221,7 @@ def q348(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("rmse"),
         )
-        .crossJoin(F.broadcast(nx))
-        .crossJoin(F.broadcast(nq))
+        .crossJoin(nx)
+        .crossJoin(nq)
         .select("n_users", "n_items", "n_ratings", "rmse")
     )

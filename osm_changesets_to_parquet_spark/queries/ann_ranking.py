@@ -133,7 +133,7 @@ def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = (
-        e.crossJoin(F.broadcast(a))
+        e.crossJoin(a)
         .where(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
@@ -520,7 +520,7 @@ def q264(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "m", "j")
         .agg(F.sum(diff * diff).alias("qd"))
     )
-    not_query = F.broadcast(qpanel.withColumnRenamed("qid", "vec_id"))
+    not_query = qpanel.withColumnRenamed("qid", "vec_id")
     adc = (
         codes.join(not_query, "vec_id", "anti")
         .join(F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"])
@@ -760,7 +760,7 @@ def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "m", "j")
         .agg(F.sum(diff * diff).alias("qd"))
     )
-    not_query = F.broadcast(qpanel.withColumnRenamed("qid", "vec_id"))
+    not_query = qpanel.withColumnRenamed("qid", "vec_id")
     adc = (
         codes.join(not_query, "vec_id", "anti")
         .join(F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"])

@@ -908,7 +908,7 @@ def q245(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nn = docs.agg(F.count(F.lit(1)).alias("n"))
     mapped = (
-        src_rank.crossJoin(F.broadcast(nn))
+        src_rank.crossJoin(nn)
         .withColumn("k", F.expr(
             "((2 * r - 1) * n + 2 * n_s - 1) div (2 * n_s)"
         ))

@@ -375,7 +375,7 @@ def e46(spark: SparkSession, sf_dir: str) -> DataFrame:
     others = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     sim = F.round(cosine_similarity_col(F.col("va"), F.col("vb")), 4)
     return (
-        F.broadcast(anchors)
+        anchors
         .join(others, F.col("id_b") != F.col("id_a"))
         .select("id_a", "id_b", sim.alias("sim"))
         .where(F.col("sim") >= 0.3)
@@ -758,7 +758,7 @@ def q127(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("cluster_id").alias("n_clusters"),
         )
-        .crossJoin(F.broadcast(leak))
+        .crossJoin(leak)
         .select(
             "split",
             "n_docs",
@@ -1418,7 +1418,7 @@ def q285(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ts.join(per_t, "t", "left")
-        .crossJoin(F.broadcast(corpus))
+        .crossJoin(corpus)
         .select(
             F.col("t").alias("threshold"),
             F.coalesce("n_removed", F.lit(0)).cast("long").alias("n_removed"),
@@ -1610,8 +1610,8 @@ def q295(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_wedges = wedge.agg(F.count(F.lit(1)).alias("n_wedges"))
     n_closed = closed.agg(F.count(F.lit(1)).alias("n_closed"))
     return (
-        n_pairs.crossJoin(F.broadcast(n_wedges))
-        .crossJoin(F.broadcast(n_closed))
+        n_pairs.crossJoin(n_wedges)
+        .crossJoin(n_closed)
         .select(
             "n_pairs",
             "n_wedges",
@@ -1689,8 +1689,8 @@ def q298(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_hit")
     )
     return (
-        n_c.crossJoin(F.broadcast(n_t))
-        .crossJoin(F.broadcast(n_h))
+        n_c.crossJoin(n_t)
+        .crossJoin(n_h)
         .select(
             "n_candidates",
             "n_truth",

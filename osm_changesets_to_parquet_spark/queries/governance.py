@@ -150,7 +150,8 @@ ORDER BY check_name
         "null-safe so NULL FKs count as violations instead of slipping "
         "through null-rejecting equality) plus two row-level "
         "expectations (positive quantity, discount in [0,1]); each "
-        "check shuffles only the key column, parents broadcast.  The "
+        "check shuffles only the key column, and parents broadcast "
+        "when under Spark's size threshold.  The "
         "fixtures are constraint-clean (all-zero counts — the honest "
         "pass state); the violation branches are pinned with planted "
         "orphans/NULLs/out-of-range rows in "
@@ -170,7 +171,7 @@ def q305(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def key_set(df: DataFrame, key: str, marker: str) -> DataFrame:
-        return F.broadcast(
+        return (
             df.select(F.col(key).alias(f"__{marker}_k"))
             .where(F.col(key).isNotNull())
             .distinct()
@@ -457,11 +458,9 @@ def q313(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("sv"), F.lit(-1)).alias("sv"),
         )
     )
-    tot = F.broadcast(
-        base.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.count_distinct("sv").cast("long").alias("m"),
-        )
+    tot = base.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.count_distinct("sv").cast("long").alias("m"),
     )
     glob = F.broadcast(
         base.groupBy("sv").agg(F.count(F.lit(1)).cast("long").alias("gq"))

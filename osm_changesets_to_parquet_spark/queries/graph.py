@@ -335,7 +335,7 @@ def q218(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = truncate_lineage(
         e.join(F.broadcast(du), "u")
-        .join(F.broadcast(dv), "v")
+        .join(dv, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
@@ -609,11 +609,11 @@ def q258(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         sym.join(
-            F.broadcast(deg.select(F.col("n").alias("src"), F.col("d").alias("x"))),
+            deg.select(F.col("n").alias("src"), F.col("d").alias("x")),
             "src",
         )
         .join(
-            F.broadcast(deg.select(F.col("n").alias("dst"), F.col("d").alias("y"))),
+            deg.select(F.col("n").alias("dst"), F.col("d").alias("y")),
             "dst",
         )
         .select("x", "y")
@@ -747,7 +747,7 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = truncate_lineage(
         e.join(F.broadcast(du_), "u")
-        .join(F.broadcast(dv_), "v")
+        .join(dv_, "v")
         .select(
             F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
@@ -804,7 +804,7 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = per_edge.orderBy(F.col("tri").desc(), "u", "v").limit(_Q308_TOPK)
     return (
         top.join(F.broadcast(du_.withColumnRenamed("d_u", "du")), "u")
-        .join(F.broadcast(dv_.withColumnRenamed("d_v", "dv")), "v")
+        .join(dv_.withColumnRenamed("d_v", "dv"), "v")
         .select(
             "u",
             "v",
@@ -1012,7 +1012,7 @@ def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("s").cast("long").alias("s"))
     )
     th1 = h1.agg(F.sum("s").cast("long").alias("t"))
-    h1q = h1.crossJoin(F.broadcast(th1)).select(
+    h1q = h1.crossJoin(th1).select(
         "c",
         F.floor(F.col("s") * F.lit(float(_Q324_Q)) / F.col("t") + 0.5)
         .cast("long")
@@ -1022,7 +1022,7 @@ def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.join(h1q, "c").groupBy("p").agg(F.sum("q").cast("long").alias("s"))
     )
     ta2 = a2.agg(F.sum("s").cast("long").alias("t"))
-    a2q = a2.crossJoin(F.broadcast(ta2)).select(
+    a2q = a2.crossJoin(ta2).select(
         "p",
         F.floor(F.col("s") * F.lit(float(_Q324_Q)) / F.col("t") + 0.5)
         .cast("long")
@@ -1032,12 +1032,12 @@ def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.join(a2q, "p").groupBy("c").agg(F.sum("q").cast("long").alias("s"))
     )
     th2 = h2.agg(F.sum("s").cast("long").alias("t"))
-    auth = a2.crossJoin(F.broadcast(ta2)).select(
+    auth = a2.crossJoin(ta2).select(
         F.lit("auth").alias("side"),
         F.col("p").alias("id"),
         F.round(F.col("s") * F.lit(1.0) / F.col("t"), 6).alias("score"),
     )
-    hub = h2.crossJoin(F.broadcast(th2)).select(
+    hub = h2.crossJoin(th2).select(
         F.lit("hub").alias("side"),
         F.col("c").alias("id"),
         F.round(F.col("s") * F.lit(1.0) / F.col("t"), 6).alias("score"),
@@ -1428,7 +1428,7 @@ def q342(spark: SparkSession, sf_dir: str) -> DataFrame:
         - (F.col("d_c") * F.lit(1.0) / (2 * F.col("m")))
         * (F.col("d_c") * F.lit(1.0) / (2 * F.col("m")))
     )
-    terms = dg.join(mc, "lbl", "left").crossJoin(F.broadcast(m))
+    terms = dg.join(mc, "lbl", "left").crossJoin(m)
     return terms.select(q.alias("q"), "m").agg(
         F.first("m").cast("long").alias("n_edges"),
         F.count(F.lit(1)).cast("long").alias("n_communities"),

@@ -460,9 +460,9 @@ def q337(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("sz").cast("long").alias("max_cluster"),
     )
     return (
-        n_points.crossJoin(F.broadcast(n_core))
-        .crossJoin(F.broadcast(n_border))
-        .crossJoin(F.broadcast(cl))
+        n_points.crossJoin(n_core)
+        .crossJoin(n_border)
+        .crossJoin(cl)
         .select(
             "n_points",
             "n_core",
@@ -819,7 +819,7 @@ def q347(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cat.crossJoin(F.broadcast(rc))
-        .crossJoin(F.broadcast(rd))
+        .crossJoin(rd)
         .select(
             "n_catalog",
             "n_items_with_recs",

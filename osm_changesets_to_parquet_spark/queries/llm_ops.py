@@ -608,8 +608,8 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bg.join(u1, "w1")
         .join(u2, "w2")
-        .crossJoin(F.broadcast(ntok))
-        .crossJoin(F.broadcast(nbg_src))
+        .crossJoin(ntok)
+        .crossJoin(nbg_src)
         .select("w1", "w2", "c2", pmi.alias("pmi"))
         .orderBy(F.col("pmi").desc(), "w1", "w2")
         .limit(20)
@@ -1006,8 +1006,8 @@ def q160(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (
         tf.where(F.col("y") >= _Q160_MIN)
         .join(cw, "token")
-        .join(F.broadcast(nl), "lang")
-        .crossJoin(F.broadcast(g))
+        .join(nl, "lang")
+        .crossJoin(g)
     )
     yq = F.col("cw") - F.col("y")
     d = F.log((F.col("y") + a) / (F.col("nl") + a * F.col("v") - F.col("y") - a)) - F.log(
@@ -1081,7 +1081,7 @@ def q166(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.avg("v"), 6).alias("m"))
     )
     d = (
-        px.join(F.broadcast(c), "pos")
+        px.join(c, "pos")
         .groupBy("vec_id", "label", "clabel")
         .agg(
             F.round(F.sum((F.col("v") - F.col("m")) * (F.col("v") - F.col("m"))), 6).alias(

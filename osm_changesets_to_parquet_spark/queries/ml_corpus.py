@@ -124,7 +124,7 @@ def q241(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("coverage")
         )
-        .crossJoin(F.broadcast(vocab_size))
+        .crossJoin(vocab_size)
         .select("k", "vocab_size", "coverage")
         .orderBy("k")
     )
@@ -208,7 +208,7 @@ def q256(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_seen = grams.groupBy("g").agg(F.min("drk").cast("long").alias("fr"))
     per_doc = grams.groupBy("drk").agg(F.count(F.lit(1)).alias("toks"))
     ck = spark.createDataFrame([(p,) for p in _Q256_PCTS], "p LONG")
-    ckn = ck.crossJoin(F.broadcast(nd)).select(
+    ckn = ck.crossJoin(nd).select(
         "p", F.expr("(p * nd + 99) div 100").alias("kdoc")
     )
     n_tokens = (
@@ -237,7 +237,7 @@ def q256(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("k") * F.col("sxx") - F.col("sx") * F.col("sx")
     )
     return (
-        pts.crossJoin(F.broadcast(fit))
+        pts.crossJoin(fit)
         .select(
             F.col("p").alias("pct"),
             "n_tokens",
@@ -311,7 +311,7 @@ def q260(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("s1").cast("double") * F.col("s1") / F.col("n")
     ) / F.col("s1")
     return (
-        s.crossJoin(F.broadcast(nd))
+        s.crossJoin(nd)
         .select(
             "w",
             F.col("s1").alias("total_count"),
@@ -617,7 +617,7 @@ def q271(spark: SparkSession, sf_dir: str) -> DataFrame:
             moved.cast("long").alias("moved"),
             F.round(moved * 1.0 / F.count(F.lit(1)), 4).alias("moved_frac"),
         )
-        .crossJoin(F.broadcast(bal))
+        .crossJoin(bal)
         .select("n_keys", "moved", "moved_frac", "max_shard", "min_shard")
     )
 
@@ -686,12 +686,12 @@ def q278(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         pairs.join(
-            F.broadcast(norms.select(F.col("event_type").alias("ta"),
-                                     F.col("nn").alias("na"))), "ta"
+            norms.select(F.col("event_type").alias("ta"), F.col("nn").alias("na")),
+            "ta",
         )
         .join(
-            F.broadcast(norms.select(F.col("event_type").alias("tb"),
-                                     F.col("nn").alias("nb"))), "tb"
+            norms.select(F.col("event_type").alias("tb"), F.col("nn").alias("nb")),
+            "tb",
         )
         .select(
             "ta",
@@ -830,14 +830,14 @@ def q281(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         pair.join(
-            F.broadcast(item.select(F.col("event_type").alias("ta"),
-                                    F.col("supp").alias("sa"))), "ta"
+            item.select(F.col("event_type").alias("ta"), F.col("supp").alias("sa")),
+            "ta",
         )
         .join(
-            F.broadcast(item.select(F.col("event_type").alias("tb"),
-                                    F.col("supp").alias("sb"))), "tb"
+            item.select(F.col("event_type").alias("tb"), F.col("supp").alias("sb")),
+            "tb",
         )
-        .crossJoin(F.broadcast(n_s))
+        .crossJoin(n_s)
         .select(
             "ta",
             "tb",
@@ -1015,7 +1015,7 @@ def q293(spark: SparkSession, sf_dir: str) -> DataFrame:
     ck = docs.sparkSession.createDataFrame(
         [(p,) for p in (20, 40, 60, 80, 100)], "p LONG"
     )
-    ckn = ck.crossJoin(F.broadcast(nd)).select(
+    ckn = ck.crossJoin(nd).select(
         "p", F.expr("(p * nd + 99) div 100").alias("kdoc")
     )
     n_tokens = (
@@ -1054,7 +1054,7 @@ def q293(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(m,) for m in _Q293_MULTIPLIERS], "m LONG"
     )
     return (
-        ms.crossJoin(F.broadcast(coef))
+        ms.crossJoin(coef)
         .crossJoin(F.broadcast(now_pt))
         .select(
             F.col("m").alias("tokens_multiplier"),
@@ -1152,7 +1152,7 @@ def q222(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         big.join(bc, ["w1", "w2"])
         .join(uc, "w1")
-        .crossJoin(F.broadcast(v))
+        .crossJoin(v)
         .select("doc_id", nll.alias("nll"))
         .groupBy("doc_id")
         .agg(
@@ -1456,7 +1456,7 @@ def q307(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         top.join(uc, "w1")
         .join(pre, "w2")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select("w1", "w2", "cb", p_kn.alias("p_kn"))
         .orderBy(F.col("cb").desc(), "w1", "w2")
     )
@@ -1613,7 +1613,7 @@ def q332(spark: SparkSession, sf_dir: str) -> DataFrame:
         te.join(bc, ["w1", "w2"], "left")
         .join(uc, "w1", "left")
         .join(pre, "w2", "left")
-        .crossJoin(F.broadcast(sc))
+        .crossJoin(sc)
     )
     pc = (F.coalesce(F.col("npre"), F.lit(0)) + 1) * F.lit(1.0) / (
         F.col("ntypes") + F.col("v")

@@ -471,7 +471,7 @@ def q283(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = e.agg(F.max("d").alias("max_d"))
     per_user = (
-        e.crossJoin(F.broadcast(h))
+        e.crossJoin(h)
         .groupBy("user_id")
         .agg(
             F.sum(
@@ -501,7 +501,7 @@ def q283(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.pow(cov, 2) / (varx * vary)).alias("rho2"),
     )
     adj = (
-        per_user.crossJoin(F.broadcast(theta))
+        per_user.crossJoin(theta)
         .groupBy("arm")
         .agg(
             F.count(F.lit(1)).alias("n_arm"),
@@ -524,7 +524,7 @@ def q283(spark: SparkSession, sf_dir: str) -> DataFrame:
     rho2 = theta.select(F.round("rho2", 4).alias("variance_reduction"))
     return (
         a1.crossJoin(a0)
-        .crossJoin(F.broadcast(rho2))
+        .crossJoin(rho2)
         .select(
             "n_treated",
             "n_control",
@@ -745,7 +745,7 @@ def q329(spark: SparkSession, sf_dir: str) -> DataFrame:
     vb = vc.select(
         "pc",
         F.coalesce(F.sum("c").over(wv), F.lit(0)).cast("long").alias("cb"),
-    ).crossJoin(F.broadcast(nt))
+    ).crossJoin(nt)
     dc = vb.select(
         "pc",
         F.least(
@@ -968,7 +968,7 @@ def q345(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("nt") * F.lit(1.0) / F.col("n")).alias("t0"),
         (F.col("sy") * F.lit(1.0) / F.col("n")).alias("y0"),
     )
-    w = g1.crossJoin(F.broadcast(g0))
+    w = g1.crossJoin(g0)
     return w.select(
         "n1",
         "n0",
@@ -1131,7 +1131,7 @@ def q346(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("ar"),
         F.col("b").alias("br"),
     )
-    return left.crossJoin(F.broadcast(right)).select(
+    return left.crossJoin(right).select(
         "n_left",
         "n_right",
         F.round("al", 6).alias("intercept_left"),
@@ -1295,8 +1295,8 @@ def q349(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_matched"),
             F.sum("cents").cast("long").alias("s_m"),
         )
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(nd))
+        .crossJoin(tot)
+        .crossJoin(nd)
         .select(
             "n_days",
             "n_matched",

@@ -401,7 +401,7 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_t"), F.sum("v").alias("s_t")
     )
     loo = (F.col("s_t") - F.col("v")).cast("double") / (F.col("n_t") - 1)
-    enc = e.join(F.broadcast(stats), "event_type").select(
+    enc = e.join(stats, "event_type").select(
         "dow", loo.alias("loo")
     )
     return (
@@ -488,7 +488,7 @@ def q252(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     err = (
         e.join(F.broadcast(per_fold), ["event_type", "fold"])
-        .join(F.broadcast(per_type), "event_type")
+        .join(per_type, "event_type")
         .select(
             "event_type",
             "fold",
@@ -685,7 +685,7 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
     nr = F.col("neg").cast("double") / F.col("tn")
     woe = F.log(pr / nr)
     return (
-        cell.crossJoin(F.broadcast(tot))
+        cell.crossJoin(tot)
         .select(
             F.col("bin").cast("long").alias("bin"),
             "pos",
@@ -771,7 +771,7 @@ def q279(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = e.agg(F.max("d").alias("max_d"))
     per_user = (
-        e.crossJoin(F.broadcast(h))
+        e.crossJoin(h)
         .groupBy("user_id")
         .agg(
             F.sum(
@@ -977,7 +977,7 @@ def q287(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = e.agg(F.max("d").alias("max_d"))
     per_user = (
-        e.crossJoin(F.broadcast(h))
+        e.crossJoin(h)
         .groupBy("user_id")
         .agg(
             F.sum(
@@ -1130,7 +1130,7 @@ def q302(spark: SparkSession, sf_dir: str) -> DataFrame:
         "double"
     ) * F.col("y")
     return (
-        bins.crossJoin(F.broadcast(tot))
+        bins.crossJoin(tot)
         .groupBy("n", "y")
         .agg(
             F.round(

@@ -157,7 +157,7 @@ def q232(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ty"),
         )
     )
-    j = cells.join(F.broadcast(xr), ["g", "x"]).join(F.broadcast(yr), ["g", "y"])
+    j = cells.join(xr, ["g", "x"]).join(yr, ["g", "y"])
     s = j.groupBy("g").agg(
         F.sum("cnt").alias("n"),
         F.sum(F.col("cnt") * F.col("tx")).alias("sx"),
@@ -280,7 +280,7 @@ def q234(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("s1c").cast("double") / F.col("n_c")
         - F.col("s1").cast("double") / F.col("n_g")
     ) / F.sqrt(var_g / F.col("n_c"))
-    z = cell.crossJoin(F.broadcast(g)).select(
+    z = cell.crossJoin(g).select(
         "event_type", "dow", "n_c", zs.alias("zs")
     )
     # |cells|-row frame (5 types x 7 dows): bh_stepup's unpartitioned
@@ -452,9 +452,9 @@ def _q242_pair(base: DataFrame, name: str, a: str, b: str) -> DataFrame:
     )
     e = F.col("ra").cast("double") * F.col("rb") / F.col("tot")
     j = (
-        cell.join(F.broadcast(ra), "av")
-        .join(F.broadcast(rb), "bv")
-        .crossJoin(F.broadcast(tot))
+        cell.join(ra, "av")
+        .join(rb, "bv")
+        .crossJoin(tot)
         .select("o", e.alias("e"))
     )
     return (
@@ -462,7 +462,7 @@ def _q242_pair(base: DataFrame, name: str, a: str, b: str) -> DataFrame:
             F.sum("o").alias("n"),
             F.sum(F.pow(F.col("o") - F.col("e"), 2) / F.col("e")).alias("chi2r"),
         )
-        .crossJoin(F.broadcast(card))
+        .crossJoin(card)
         .select(
             F.lit(name).alias("pair"),
             F.col("n"),
@@ -856,9 +856,9 @@ def q276(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 1
     )
     return (
-        n1.crossJoin(F.broadcast(n2))
-        .crossJoin(F.broadcast(m))
-        .crossJoin(F.broadcast(truth))
+        n1.crossJoin(n2)
+        .crossJoin(m)
+        .crossJoin(truth)
         .select(
             "n1",
             "n2",
@@ -1068,7 +1068,7 @@ def q289(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gv = e.groupBy("g", "v").agg(F.count(F.lit(1)).alias("cg"))
     rg = (
-        gv.join(F.broadcast(tr), "v")
+        gv.join(tr, "v")
         .groupBy("g")
         .agg(
             F.sum("cg").alias("n_g"),
@@ -1091,7 +1091,7 @@ def q289(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("double") * n * n - n
     )
     return (
-        tot.crossJoin(F.broadcast(ties))
+        tot.crossJoin(ties)
         .select(
             "n",
             "n_groups",
@@ -1634,7 +1634,7 @@ def q319(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("s1").cast("double") / F.col("n_g")
     ) / F.sqrt(var_g / F.col("n_c"))
     p = (
-        cell.crossJoin(F.broadcast(g))
+        cell.crossJoin(g)
         .select("event_type", "dow", zs.alias("zs"))
         .withColumn("pv", 1.0 / (1.0 + F.col("zs") * F.col("zs")))
     )
@@ -1760,7 +1760,7 @@ def q328(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         u.where(hash_bucket("user_id", 100) < _Q328_PANEL)
-        .crossJoin(F.broadcast(ab))
+        .crossJoin(ab)
         .select(
             "user_id",
             "n",

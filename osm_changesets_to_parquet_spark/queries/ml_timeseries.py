@@ -296,7 +296,8 @@ GROUP BY x.src ORDER BY x.src
         "the other 20%): per-user LAG windows are bounded by a "
         "user's event count (the q156 shape), the model is the "
         "|types|^2 count rollup argmaxed with a dst tie-break and "
-        "BROADCAST onto the test transitions — splitting by USER not "
+        "joined onto the test transitions (|types|^2 rows, broadcast "
+        "by size) — splitting by USER not "
         "by row is the leakage discipline (a row split would let a "
         "user's own future leak into training)"
     ),
@@ -327,7 +328,7 @@ def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hit = F.when(F.col("dst") == F.col("pred"), 1).otherwise(0)
     return (
-        test.join(F.broadcast(model), "src")
+        test.join(model, "src")
         .groupBy("src")
         .agg(
             F.count(F.lit(1)).alias("n_test"),
@@ -441,8 +442,8 @@ def q259(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resid = (
         ma.where(F.col("w") == 7)
-        .join(F.broadcast(dw), ["event_type", "dow"])
-        .join(F.broadcast(g), "event_type")
+        .join(dw, ["event_type", "dow"])
+        .join(g, "event_type")
         .select(
             "event_type",
             "y",
@@ -562,7 +563,7 @@ def q261(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rev").over(w).alias("cum_rev"),
     )
     return (
-        cum.join(F.broadcast(cohort_size), "cohort")
+        cum.join(cohort_size, "cohort")
         .select(
             "cohort",
             "age",
@@ -644,7 +645,7 @@ def q270(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("last_d") < F.col("max_d") - _Q270_QUIET_DAYS, 1
     ).otherwise(0)
     return (
-        per_user.crossJoin(F.broadcast(horizon))
+        per_user.crossJoin(horizon)
         .groupBy(F.expr("first_d div 7").alias("cohort_week"))
         .agg(
             F.count(F.lit(1)).alias("n_users"),
@@ -978,7 +979,7 @@ def q294(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand = t.agg(F.sum("c").alias("n"))
     p = F.col("c").cast("double") / F.col("rt")
     h = (
-        t.join(F.broadcast(row_tot), "src")
+        t.join(row_tot, "src")
         .groupBy("src")
         .agg(
             F.round(-F.sum(p * F.log(p)) / F.lit(float(__import__("math").log(2))), 6).alias("h_row"),
@@ -988,8 +989,8 @@ def q294(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_states = h.agg(F.count(F.lit(1)).alias("ns"))
     ln2 = float(__import__("math").log(2))
     return (
-        h.crossJoin(F.broadcast(grand))
-        .crossJoin(F.broadcast(n_states))
+        h.crossJoin(grand)
+        .crossJoin(n_states)
         .groupBy("n", "ns")
         .agg(
             F.sum(F.col("h_row") * F.col("rt") / F.col("n")).alias("er_raw"),
@@ -1370,7 +1371,7 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = prof.groupBy("event_type").agg(F.sum("cnt").alias("t"))
     return (
-        prof.join(F.broadcast(tot), "event_type")
+        prof.join(tot, "event_type")
         .select(
             "event_type",
             "dow",
@@ -1751,7 +1752,7 @@ def q321(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("y")
     )
     dense = (
-        types.crossJoin(F.broadcast(days))
+        types.crossJoin(days)
         .join(cnt, ["event_type", "day"], "left")
         .select(
             "event_type", "day", F.coalesce("y", F.lit(0)).alias("y")

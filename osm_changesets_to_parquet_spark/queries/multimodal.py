@@ -243,7 +243,7 @@ def m52(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("dedup_saving"),
         )
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .select(
             "n_docs",
             "n_chunks",

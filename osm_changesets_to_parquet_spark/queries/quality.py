@@ -386,7 +386,8 @@ GROUP BY lang ORDER BY lang
     doc=(
         "two-pass adaptive filter: exact p5/p95 length percentiles "
         "(linear interpolation — identical definition in both "
-        "engines), broadcast back as scalars, re-scan with the bounds "
+        "engines), joined back as a 1-row frame Spark broadcasts by "
+        "size, re-scan with the bounds "
         "predicate; the second scan's filter needs no shuffle"
     ),
     tables=("documents",),
@@ -398,7 +399,7 @@ def q93(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(n_chars, 0.95)").alias("hi"),
     )
     return (
-        docs.crossJoin(F.broadcast(bounds))
+        docs.crossJoin(bounds)
         .where((F.col("n_chars") >= F.col("lo")) & (F.col("n_chars") <= F.col("hi")))
         .groupBy("lang")
         .agg(
@@ -534,9 +535,10 @@ FROM tok GROUP BY lang ORDER BY lang
     _Q96_SQL,
     doc=(
         "vocabulary coverage: build the top-K token vocabulary "
-        "(deterministic tie-break), broadcast it, and measure the "
-        "out-of-vocabulary token rate per lang — the vocab side is "
-        "O(K) rows so the probe never shuffles for the membership test"
+        "(deterministic tie-break) and measure the out-of-vocabulary "
+        "token rate per lang — the vocab side is O(K) rows, under "
+        "Spark's broadcast size threshold, so the probe never shuffles "
+        "for the membership test"
     ),
     tables=("documents",),
 )
@@ -553,7 +555,7 @@ def q96(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("t")
         .withColumn("__v", F.lit(1))
     )
-    flagged = tok.join(F.broadcast(vocab), "t", "left")
+    flagged = tok.join(vocab, "t", "left")
     return (
         flagged.groupBy("lang")
         .agg(
@@ -673,7 +675,7 @@ def q98(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_orderkey").alias("y_lo"),
         F.max("o_orderkey").alias("y_hi"),
     )
-    d = o.crossJoin(F.broadcast(stats)).select(
+    d = o.crossJoin(stats).select(
         LO.scale_to_bits(
             F.col("o_custkey"), F.col("x_lo"), F.col("x_hi"), _ZBITS
         ).alias("sx"),
@@ -961,8 +963,9 @@ def q120(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = o.where(F.col("b") < 50).groupBy("bin").agg(F.count(F.lit(1)).alias("cb"))
     cur = o.where(F.col("b") >= 50).groupBy("bin").agg(F.count(F.lit(1)).alias("cc"))
-    # totals ride a broadcast 1-row frame — no driver action, the whole
-    # monitor stays one lazy plan over two map-side-partial aggregates
+    # totals ride a 1-row frame (broadcast by size) — no driver action,
+    # the whole monitor stays one lazy plan over two map-side-partial
+    # aggregates
     tot = base.agg(F.sum("cb").alias("nb")).crossJoin(
         cur.agg(F.sum("cc").alias("nc"))
     )
@@ -970,7 +973,7 @@ def q120(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = (
         bins.join(base, "bin", "left")
         .join(cur, "bin", "left")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .select(
             "bin",
             (
@@ -1040,11 +1043,11 @@ def q128(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = ev.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("med")
     )
-    with_med = ev.join(F.broadcast(med), "event_type")
+    with_med = ev.join(med, "event_type")
     mad = with_med.groupBy("event_type").agg(
         F.round(F.expr("percentile(abs(value - med), 0.5)"), 6).alias("mad")
     )
-    j = with_med.join(F.broadcast(mad), "event_type")
+    j = with_med.join(mad, "event_type")
     return (
         j.groupBy("event_type")
         .agg(
@@ -1105,8 +1108,8 @@ def q129(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     n = freq.agg(F.sum("c").cast("double").alias("n"))
     scored = (
-        tok.join(F.broadcast(freq), "w")
-        .crossJoin(F.broadcast(n))
+        tok.join(freq, "w")
+        .crossJoin(n)
         .groupBy("doc_id", "lang")
         .agg(F.round(F.avg(-F.log(F.col("c") / F.col("n"))), 6).alias("nll"))
     )
@@ -1289,7 +1292,7 @@ def q147(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_r").cast("double").alias("nr"),
         F.count(F.lit(1)).cast("double").alias("v"),
     )
-    lw = vocab.crossJoin(F.broadcast(tot)).select(
+    lw = vocab.crossJoin(tot).select(
         "w",
         (
             F.log((F.col("c_t") + 1) / (F.col("nt") + F.col("v")))
@@ -1527,7 +1530,7 @@ def q267(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_r").cast("double").alias("nr"),
         F.count(F.lit(1)).cast("double").alias("v"),
     )
-    lw = vocab.crossJoin(F.broadcast(tot)).select(
+    lw = vocab.crossJoin(tot).select(
         "w",
         (
             F.log((F.col("c_t") + 1) / (F.col("nt") + F.col("v")))
@@ -1540,7 +1543,7 @@ def q267(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.sum("lw"), 4).alias("lw"))
     )
     m = scored.agg(F.max("lw").alias("mx"))
-    e = scored.crossJoin(F.broadcast(m)).agg(
+    e = scored.crossJoin(m).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.exp(F.col("lw") - F.col("mx"))).alias("s1"),
         F.sum(F.exp(2 * (F.col("lw") - F.col("mx")))).alias("s2"),
@@ -1612,8 +1615,8 @@ def q274(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n1")
     )
     return (
-        fof.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(n1))
+        fof.crossJoin(tot)
+        .crossJoin(n1)
         .select(
             "r",
             "n_r",

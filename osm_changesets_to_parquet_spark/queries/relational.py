@@ -281,8 +281,9 @@ def q09(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY r_name
     """,
     doc=(
-        "4-way star join; region/nation are broadcast (no shuffle of the fact "
-        "side for dim joins), orders<->customer is the only shuffle"
+        "4-way star join; region/nation fall under Spark's broadcast size "
+        "threshold (no shuffle of the fact side for dim joins), "
+        "orders<->customer is the only shuffle"
     ),
     tables=("region", "nation", "customer", "orders"),
 )
@@ -293,8 +294,8 @@ def q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),

@@ -149,14 +149,17 @@ def q55(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM orders)
     GROUP BY o_orderstatus ORDER BY o_orderstatus
     """,
-    doc="scalar subquery as a broadcast 1-row join — no driver-side collect",
+    doc=(
+        "scalar subquery as a 1-row join that Spark broadcasts by size — "
+        "no driver-side collect"
+    ),
     tables=("orders",),
 )
 def q56(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     avg_price = o.agg(F.avg("o_totalprice").alias("_avg_price"))
     return (
-        o.join(F.broadcast(avg_price))
+        o.join(avg_price)
         .where(F.col("o_totalprice") > F.col("_avg_price"))
         .groupBy("o_orderstatus")
         .agg(
@@ -861,7 +864,7 @@ def q133(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition, never a single-task global rank window over all keys
     top = k.orderBy(F.col("c").desc(), F.col("key")).limit(10)
     return (
-        top.crossJoin(F.broadcast(stats))
+        top.crossJoin(stats)
         .select(
             "key",
             F.col("c").alias("cnt"),

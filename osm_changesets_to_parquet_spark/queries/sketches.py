@@ -165,8 +165,8 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     keyed = (
-        c.join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
-        .join(F.broadcast(r), r.r_regionkey == F.col("n_regionkey"))
+        c.join(n, n.n_nationkey == c.c_nationkey)
+        .join(r, r.r_regionkey == F.col("n_regionkey"))
         .select("r_name", "n_nationkey", "c_custkey")
     )
     nation_sk = S.hll_sketches(keyed, ["r_name", "n_nationkey"], "c_custkey")
@@ -285,7 +285,7 @@ def q175(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = lk.join(pk, "k").agg(
         F.count(F.lit(1)).alias("exact_join_rows")
     )
-    return exact.crossJoin(F.broadcast(est)).select(
+    return exact.crossJoin(est).select(
         F.col("exact_join_rows").cast("long").alias("exact_join_rows"),
         F.col("cms_join_est").cast("long").alias("cms_join_est"),
     )
@@ -411,9 +411,9 @@ def q201(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est_overlap = F.col("est_a") + F.col("est_b") - F.col("est_u")
     return (
-        ea.crossJoin(F.broadcast(eb))
-        .crossJoin(F.broadcast(eo))
-        .crossJoin(F.broadcast(ests))
+        ea.crossJoin(eb)
+        .crossJoin(eo)
+        .crossJoin(ests)
         .select(
             F.col("exact_a").cast("long").alias("exact_a"),
             F.col("exact_b").cast("long").alias("exact_b"),
@@ -527,12 +527,10 @@ def q312(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("l_extendedprice") * 100).cast("long").alias("c")
         )
     )
-    st = F.broadcast(
-        v.agg(
-            F.min("c").cast("long").alias("lo"),
-            F.max("c").cast("long").alias("hi"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
+    st = v.agg(
+        F.min("c").cast("long").alias("lo"),
+        F.max("c").cast("long").alias("hi"),
+        F.count(F.lit(1)).cast("long").alias("n"),
     )
     binexpr = F.floor(
         (F.col("c") - F.col("lo"))

@@ -200,10 +200,10 @@ def q216(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = orders.select("o_orderkey", "o_custkey")
     passed = o.join(
-        F.broadcast(bits), hash_bucket("o_custkey", _Q216_M) == F.col("b"), "semi"
-    ).join(F.broadcast(bits), h2("o_custkey") == F.col("b"), "semi")
+        bits, hash_bucket("o_custkey", _Q216_M) == F.col("b"), "semi"
+    ).join(bits, h2("o_custkey") == F.col("b"), "semi")
     hit = passed.join(
-        F.broadcast(block), F.col("o_custkey") == F.col("c_custkey"), "semi"
+        block, F.col("o_custkey") == F.col("c_custkey"), "semi"
     )
     counts = (
         o.agg(F.count(F.lit(1)).alias("n_orders"))
@@ -320,7 +320,7 @@ def q217(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(_Q217_HALFLIFE_DAYS),
     )
     return (
-        ev.crossJoin(F.broadcast(m))
+        ev.crossJoin(m)
         .select("event_type", "value", wt.alias("wt"))
         .groupBy("event_type")
         .agg(
@@ -586,7 +586,7 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = t.where(F.col("tgt") > 0).agg(
         F.min(F.col("nl") * F.lit(1.0) / F.col("tgt")).alias("scale")
     )
-    r = t.crossJoin(F.broadcast(sc)).select(
+    r = t.crossJoin(sc).select(
         "lang",
         "nl",
         "tgt",
@@ -744,7 +744,7 @@ def q306(spark: SparkSession, sf_dir: str) -> DataFrame:
     sd = truncate_lineage(s.select("segment", "n_h", s_h.alias("s_h")))
     tot = sd.agg(F.sum(F.col("n_h") * F.col("s_h")).alias("w"))
     return (
-        sd.crossJoin(F.broadcast(tot))
+        sd.crossJoin(tot)
         .select(
             "segment",
             "n_h",

@@ -339,7 +339,7 @@ def q214(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("df"), F.sum("en").alias("a"))
     )
     top = df.orderBy(F.col("df").desc(), "tok").limit(_Q214_DF_TOP)
-    x = top.crossJoin(F.broadcast(tot)).select(
+    x = top.crossJoin(tot).select(
         "tok",
         "df",
         "a",
@@ -550,7 +550,7 @@ def q223(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("g1").cast("long").alias("n1"),
         F.sum(F.lit(1) - F.col("g1")).cast("long").alias("n2"),
     )
-    d = c.crossJoin(F.broadcast(t)).select(
+    d = c.crossJoin(t).select(
         "x",
         "n1",
         "n2",
@@ -889,11 +889,9 @@ def q318(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is1").cast("long").alias("c1"),
         (F.count(F.lit(1)) - F.sum("is1")).cast("long").alias("c2"),
     )
-    tot = F.broadcast(
-        cnt.agg(
-            F.sum("c1").cast("long").alias("n1"),
-            F.sum("c2").cast("long").alias("n2"),
-        )
+    tot = cnt.agg(
+        F.sum("c1").cast("long").alias("n1"),
+        F.sum("c2").cast("long").alias("n2"),
     )
     w = Window.orderBy("c").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -1124,9 +1122,9 @@ def q330(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").alias("sb"), "lang", F.col("c").alias("ccb")
     )
     grid = (
-        pairs.crossJoin(F.broadcast(langs))
-        .join(F.broadcast(ca), ["sa", "lang"], "left")
-        .join(F.broadcast(cb), ["sb", "lang"], "left")
+        pairs.crossJoin(langs)
+        .join(ca, ["sa", "lang"], "left")
+        .join(cb, ["sb", "lang"], "left")
     )
     pp = F.coalesce(F.col("cca"), F.lit(0)) * F.lit(1.0) / F.col("na")
     qq = F.coalesce(F.col("ccb"), F.lit(0)) * F.lit(1.0) / F.col("nb")

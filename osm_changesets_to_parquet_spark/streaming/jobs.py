@@ -586,7 +586,7 @@ def run_s8_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("user_id"), "c_nationkey"
     )
     ev = _read_stream(spark, base).select("event_id", "user_id", "event_type")
-    enriched = ev.join(F.broadcast(customers), "user_id").select(
+    enriched = ev.join(customers, "user_id").select(
         "event_id", "event_type", "c_nationkey"
     )
     outs = _run_availablenow(enriched, mode="append")
@@ -980,7 +980,7 @@ def run_s16_streaming_transitions(spark: SparkSession, sf_dir: str) -> DataFrame
     trans = outs.groupBy("src", "dst").agg(F.sum("cnt").alias("cnt"))
     tot = trans.groupBy("src").agg(F.sum("cnt").alias("__tot"))
     return (
-        trans.join(F.broadcast(tot), "src")
+        trans.join(tot, "src")
         .select(
             "src",
             "dst",
@@ -1596,7 +1596,7 @@ def run_s25_streaming_quantile_sketch(
     ev = load_table(spark, sf_dir, "events").select(
         F.round(F.col("value") * 100).cast("long").alias("c")
     )
-    st = F.broadcast(ev.agg(F.count(F.lit(1)).cast("long").alias("n")))
+    st = ev.agg(F.count(F.lit(1)).cast("long").alias("n"))
     vals = ev.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("vcnt"))
     vcum = global_cumsum(vals, "c", "vcnt", out_col="cum").select("c", "cum")
     r = (

@@ -13,14 +13,37 @@ pins a physical-plan property worth defending:
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from osm_changesets_to_parquet_spark import queries as Q
 
 Q.load_all_modules()
+
+# Lines of the package that force a join strategy with ``F.broadcast(``.
+# Every remaining hint changes an sf0.1 plan when removed; the rest were
+# deleted because Spark's size-based selection already picks the same plan.
+_BROADCAST_HINT_LINES = 67
 
 
 def _plan(spark, sf_dir, name: str) -> str:
     df = Q.REGISTRY[name].fn(spark, sf_dir)
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_broadcast_hints_do_not_grow():
+    pkg = Path(Q.__file__).resolve().parent.parent
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "F.broadcast(" in line
+    ]
+    assert len(hits) <= _BROADCAST_HINT_LINES, (
+        f"{len(hits)} lines force F.broadcast(), cap {_BROADCAST_HINT_LINES}. "
+        "A hint overrides spark.sql.autoBroadcastJoinThreshold, so on a table "
+        "that grows with the data it can OOM the driver. Add one only together "
+        "with an sf0.1 plan that changes without it (README, 'Join strategy')."
+    )
 
 
 def test_q10_dim_joins_broadcast(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""CMS invariants: never underestimates, bounded overestimate, merge law."""
+"""CMS invariants: never underestimates, bounded overestimate."""
 
 from __future__ import annotations
 
@@ -26,22 +26,6 @@ def test_cms_never_underestimates(spark, sf_dir):
     over = joined.where(F.col("cms_est") > F.col("exact") + bound)
     # depth=4 => P(violation) <= exp(-4) per token; allow a tiny tail
     assert over.count() <= max(2, exact.count() // 50)
-
-
-def test_cms_merge_equals_union_build(spark, sf_dir):
-    from osm_changesets_to_parquet_spark.operators.dedup import char_hash
-
-    tokens = _tokens(spark, sf_dir)
-    # deterministic multiset split: every token instance goes to exactly
-    # one side (split on the hash parity of the token value)
-    a = tokens.where(char_hash(F.col("token")) % 2 == 0)
-    b = tokens.where(char_hash(F.col("token")) % 2 != 0)
-    merged = S.cms_merge(S.cms_build(a), S.cms_build(b))
-    whole = S.cms_build(tokens)
-    diff = merged.join(whole, ["j", "bucket"], "full").where(
-        F.coalesce(merged["cnt"], F.lit(0)) != F.coalesce(whole["cnt"], F.lit(0))
-    )
-    assert diff.count() == 0
 
 
 def test_bloom_no_false_negatives_and_prunes(spark, sf_dir):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
 from osm_changesets_to_parquet_spark.operators.similarity import (
-    dequantize_int8,
     ivf_build,
     normalize_vectors,
     quantize_int8,
@@ -97,11 +96,10 @@ def test_kmeans_iterations_converge(spark, sf_dir):
 
 def test_quantize_roundtrip_error_bound(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
-    qd = dequantize_int8(quantize_int8(emb, "embedding"), out_col="deq")
-    rows = qd.select("embedding", "deq", "scale", "q").collect()
+    rows = quantize_int8(emb, "embedding").select("embedding", "scale", "q").collect()
     for r in rows:
-        for orig, back in zip(r.embedding, r.deq):
-            assert abs(float(orig) - back) <= r.scale / 2 + 1e-9
+        for orig, q in zip(r.embedding, r.q):
+            assert abs(float(orig) - q * r.scale) <= r.scale / 2 + 1e-9
         assert all(-127 <= int(q) <= 127 for q in r.q)
 
 
