@@ -1,4 +1,4 @@
-"""Deterministic streaming replay jobs (S4-S6).
+"""Deterministic streaming replay jobs (S4-S26).
 
 Replay protocol (FIXTURES.md §3): events sorted by ts are split into K
 parquet files; the stream reads them with ``maxFilesPerTrigger=1`` and
@@ -11,21 +11,32 @@ them.
 Scale notes: these jobs are the 100 TB shape for continuous ingest —
 state is keyed (window/event-time or user), watermarks bound state size,
 and ``applyInPandasWithState`` holds one small pandas group at a time.
+
+One runner, ``_start_stream``, starts every stream query (checkpoint,
+state-partition pin, trigger, wait); ``_run_availablenow`` puts the
+default ``__bid=N`` parquet sink on it.  One writer, ``_replay_fixture``,
+writes and caches every chunked replay fixture.
 """
 
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import tempfile
 import time
 
-# Every _run_availablenow leaves a sink dir (the returned DataFrame
-# reads it lazily, so it cannot be deleted eagerly) plus a stream
-# checkpoint dir.  Register both for process-exit cleanup so repeated
-# runs (tests, bench, verification sweeps) do not accumulate unbounded
-# /tmp residue.
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from osm_changesets_to_parquet_spark.catalog import load_table
+
+# Every stream leaves temp dirs behind: its checkpoint, and a sink dir
+# the returned DataFrame reads lazily (so it cannot be deleted
+# eagerly).  _temp_dir registers each for process-exit cleanup so
+# repeated runs (tests, bench, verification sweeps) do not accumulate
+# unbounded /tmp residue.
 _TEMP_DIRS: list[str] = []
 
 
@@ -36,10 +47,13 @@ def _cleanup_temp_dirs() -> None:
 
 atexit.register(_cleanup_temp_dirs)
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp dir, removed at process exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _TEMP_DIRS.append(d)
+    return d
+
 
 # 5 deterministic micro-batches: enough files to advance the watermark
 # across real batch boundaries, few enough that per-batch state-store
@@ -51,6 +65,73 @@ N_LATE_ROWS = 5
 US_PER_HOUR = 3_600_000_000
 
 
+def _cached_fixture(base: str, build) -> str:
+    """Return the fixture dir ``base``, first filling it with
+    ``build(base)`` unless an earlier run finished it (its ready marker
+    exists — the marker outlives the process, so replays are built once
+    per source table, not once per run)."""
+    done = os.path.join(base, "_READY")
+    if not os.path.exists(done):
+        shutil.rmtree(base, ignore_errors=True)
+        os.makedirs(base)
+        build(base)
+        open(done, "w").close()
+    return base
+
+
+def _replay_fixture(
+    spark: SparkSession, sf_dir: str, table: str, name: str, chunk
+) -> str:
+    """Write (once) and return a replay of ``sf_dir``'s ``table``: the
+    rows of ``chunk(table_df)``, which tags each with an int
+    ``__chunk``, become one ``NNN.parquet`` per chunk in chunk order.
+
+    The cache dir is keyed on the table file's resolved path, size and
+    mtime, so two fixture dirs that share a name (or a table rewritten
+    in place) never share a replay.
+
+    ONE dynamic-partitioned write: repartition("__chunk") puts every
+    chunk's rows in exactly one task, so each __chunk=N dir receives
+    exactly one parquet file.  Intra-file row order is free:
+    watermarks and aggregates are batch-level, not row-order-level.
+    """
+    src = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    st = os.stat(src)
+    key = hashlib.sha1(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()
+    base = os.path.join(
+        tempfile.gettempdir(),
+        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}_{key[:12]}",
+    )
+
+    def build(base: str) -> None:
+        staging = base + "_staging"
+        (
+            chunk(load_table(spark, sf_dir, table))
+            .repartition("__chunk")
+            .write.partitionBy("__chunk")
+            .mode("overwrite")
+            .parquet(staging)
+        )
+        # flatten __chunk=N dirs into NNN.parquet with strictly
+        # increasing mtimes: the file stream source orders by
+        # modification time, and a single parallel write gives all
+        # parts near-identical stamps
+        chunk_dirs = sorted(
+            (d for d in os.listdir(staging) if d.startswith("__chunk=")),
+            key=lambda d: int(d.split("=")[1]),
+        )
+        t0 = time.time()
+        for i, d in enumerate(chunk_dirs):
+            dpath = os.path.join(staging, d)
+            (part,) = [f for f in os.listdir(dpath) if f.endswith(".parquet")]
+            dst = os.path.join(base, f"{i:03d}.parquet")
+            os.replace(os.path.join(dpath, part), dst)
+            os.utime(dst, (t0 + i, t0 + i))
+        shutil.rmtree(staging, ignore_errors=True)
+
+    return _cached_fixture(base, build)
+
+
 def prepare_replay_dir(
     spark: SparkSession, sf_dir: str, late: bool = False, tag: str = ""
 ) -> str:
@@ -60,68 +141,34 @@ def prepare_replay_dir(
     middle of the stream into the final file: they arrive last although
     their event time is old => dropped by a 10-minute watermark.
     """
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"events_replay_k{N_REPLAY_FILES}_{'late' if late else 'ontime'}{tag}_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
-    done = os.path.join(base, "_READY")
-    if os.path.exists(done):
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-
     # distributed chunking: global arrival index via the range-bucketed
     # global_rank (one wide shuffle — never the partition-less
-    # row_number window, never a driver collect of the event set), then
-    # ONE dynamic-partitioned write: repartition("__chunk") puts every
-    # chunk's rows in exactly one task, so each __chunk=N dir receives
-    # exactly one parquet file.  Intra-file row order is free:
-    # watermarks and aggregates are batch-level, not row-order-level.
+    # row_number window, never a driver collect of the event set)
     from osm_changesets_to_parquet_spark.operators.packing import global_rank
 
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "ts_us", "user_id", "event_type", "value"
-    )
-    n = ev.count()
-    indexed = global_rank(ev, ["ts_us", "event_id"], out_col="__r")
-    rn = F.col("__r") - 1  # 0-based arrival index in event-time order
+    def chunk(events: DataFrame) -> DataFrame:
+        ev = events.select("event_id", "ts", "ts_us", "user_id", "event_type", "value")
+        n = ev.count()
+        indexed = global_rank(ev, ["ts_us", "event_id"], out_col="__r")
+        rn = F.col("__r") - 1  # 0-based arrival index in event-time order
 
-    late_lo = int(n * 0.4) if late else n  # rows [late_lo, late_lo+N) re-arrive last
-    is_late = rn.between(late_lo, late_lo + N_LATE_ROWS - 1)
-    # arrival position among on-time rows (late rows removed from the middle)
-    arrival = F.when(rn >= late_lo + N_LATE_ROWS, rn - N_LATE_ROWS).otherwise(rn)
-    n_ontime = n - (N_LATE_ROWS if late else 0)
-    per = max(1, (n_ontime + N_REPLAY_FILES - 1) // N_REPLAY_FILES)
-    chunk = F.when(is_late, F.lit(N_REPLAY_FILES + 100)).otherwise(
-        (arrival / F.lit(per)).cast("int")
-    )
+        late_lo = int(n * 0.4) if late else n  # rows [late_lo, late_lo+N) re-arrive last
+        is_late = rn.between(late_lo, late_lo + N_LATE_ROWS - 1)
+        # arrival position among on-time rows (late rows removed from the middle)
+        arrival = F.when(rn >= late_lo + N_LATE_ROWS, rn - N_LATE_ROWS).otherwise(rn)
+        n_ontime = n - (N_LATE_ROWS if late else 0)
+        per = max(1, (n_ontime + N_REPLAY_FILES - 1) // N_REPLAY_FILES)
+        return indexed.withColumn(
+            "__chunk",
+            F.when(is_late, F.lit(N_REPLAY_FILES + 100)).otherwise(
+                (arrival / F.lit(per)).cast("int")
+            ),
+        ).drop("__r")
 
-    staging = base + "_staging"
-    (
-        indexed.withColumn("__chunk", chunk)
-        .drop("__r")
-        .repartition("__chunk")
-        .write.partitionBy("__chunk")
-        .mode("overwrite")
-        .parquet(staging)
+    kind = "late" if late else "ontime"
+    return _replay_fixture(
+        spark, sf_dir, "events", f"events_replay_k{N_REPLAY_FILES}_{kind}{tag}", chunk
     )
-    # flatten __chunk=N dirs into NNN.parquet with strictly increasing
-    # mtimes: the file stream source orders by modification time, and a
-    # single parallel write gives all parts near-identical stamps
-    chunk_dirs = sorted(
-        (d for d in os.listdir(staging) if d.startswith("__chunk=")),
-        key=lambda d: int(d.split("=")[1]),
-    )
-    t0 = time.time()
-    for i, d in enumerate(chunk_dirs):
-        dpath = os.path.join(staging, d)
-        (part,) = [f for f in os.listdir(dpath) if f.endswith(".parquet")]
-        dst = os.path.join(base, f"{i:03d}.parquet")
-        os.replace(os.path.join(dpath, part), dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    open(done, "w").close()
-    return base
 
 
 def _read_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
@@ -131,10 +178,6 @@ def _read_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(replay_dir)
     )
-
-
-def _run_to_completion(query) -> None:
-    query.awaitTermination()
 
 
 STREAM_SHUFFLE_PARTITIONS = "4"
@@ -151,32 +194,62 @@ STREAM_SHUFFLE_PARTITIONS = "4"
 PYTHON_STATE_SHUFFLE_PARTITIONS = "8"
 
 
-def _run_availablenow(
+def _start_stream(
     stream_df: DataFrame,
     mode: str = "update",
+    *,
+    body=None,
+    writer=None,
     state_partitions: str = STREAM_SHUFFLE_PARTITIONS,
-) -> DataFrame:
-    """Run an availableNow stream into a parquet sink; return every
-    micro-batch's output rows as a DataFrame with ``__bid`` (batch id).
+    processing_time: str | None = None,
+    ckpt_dir: str | None = None,
+):
+    """Start ``stream_df`` on a checkpoint; return its StreamingQuery.
+    Every stream query of this module starts here.
 
-    The sink is a distributed write — the driver never collects a row
-    (the earlier harness collected each micro-batch, which benched the
-    collect, not the stateful operator, and would not survive a real
-    stream's output volume).  foreachBatch-with-append-write is the
-    standard production pattern for update-mode aggregates, whose
-    emit-latest-per-key semantics the built-in file sink can't accept;
-    downstream consumers reduce by max ``__bid`` per key — also
-    distributed (see the S4-S6 runners).
+    The sink is the foreachBatch function ``body``, or whatever
+    ``writer(DataStreamWriter)`` configures (a sink format and its
+    options).  With ``processing_time=None`` the trigger is
+    availableNow and the call returns once the stream has drained (a
+    failed micro-batch raises here); otherwise the query keeps running
+    and the caller stops it.  Each start gets a fresh checkpoint
+    unless ``ckpt_dir`` names one to restart from.
 
-    Shuffle partitions are pinned low for the run: the state-partition
-    count is frozen into the checkpoint at first execution, and these
-    replay fixtures are small — 32 state stores x 11 micro-batches is
-    pure per-batch overhead.  (On a real cluster a long-lived stream
-    sizes this once, to cores x ~2, before first start.)
+    Shuffle partitions are pinned to ``state_partitions`` for
+    ``start()``: the state-partition count is frozen into the
+    checkpoint at first execution, and these replay fixtures are small
+    — 32 state stores x 11 micro-batches is pure per-batch overhead.
+    (On a real cluster a long-lived stream sizes this once, to cores x
+    ~2, before first start.)  The pin need not outlive ``start()``:
+    starting a query clones the session (StreamExecution's
+    sparkSessionForStream), so its micro-batches and the frames
+    foreachBatch receives keep the pinned value after the caller's
+    conf is restored; a restart reads the count back from the
+    checkpoint's offset log.
     """
-    out_dir = tempfile.mkdtemp(prefix="stream_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="ckpt_")
-    _TEMP_DIRS.extend([out_dir, ckpt_dir])
+    trigger = (
+        {"processingTime": processing_time} if processing_time else {"availableNow": True}
+    )
+    w = (
+        stream_df.writeStream.outputMode(mode)
+        .trigger(**trigger)
+        .option("checkpointLocation", ckpt_dir or _temp_dir("ckpt_"))
+    )
+    w = writer(w) if writer else w.foreachBatch(body)
+    conf = stream_df.sparkSession.conf
+    prev = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", state_partitions)
+    try:
+        query = w.start()
+    finally:
+        conf.set("spark.sql.shuffle.partitions", prev)
+    if processing_time is None:
+        query.awaitTermination()
+    return query
+
+
+def _bid_sink(out_dir: str):
+    """foreachBatch body writing each micro-batch to ``out_dir/__bid=N``."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # one partition dir per micro-batch, overwritten on retry: a
@@ -198,29 +271,42 @@ def _run_availablenow(
             os.path.join(out_dir, f"__bid={batch_id}")
         )
 
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions)
-    try:
-        q = (
-            stream_df.writeStream.outputMode(mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        _run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not any(f.startswith("__bid=") for f in os.listdir(out_dir)):
-        from pyspark.sql.types import LongType, StructField, StructType
+    return sink
 
-        empty_schema = StructType(
-            list(stream_df.schema.fields) + [StructField("__bid", LongType())]
+
+def _read_bids(spark: SparkSession, out_dir: str, schema) -> DataFrame:
+    """Every ``__bid=N`` micro-batch dir under ``out_dir`` as one frame
+    with a ``__bid`` column; an empty frame of ``schema`` (a StructType
+    or DDL string) plus ``__bid`` when no batch wrote one."""
+    if not any(f.startswith("__bid=") for f in os.listdir(out_dir)):
+        return spark.createDataFrame([], schema).withColumn(
+            "__bid", F.lit(None).cast("long")
         )
-        return spark.createDataFrame([], empty_schema)
     # partition discovery turns the __bid=N dirs into the __bid column
     return spark.read.parquet(out_dir)
+
+
+def _run_availablenow(
+    stream_df: DataFrame,
+    mode: str = "update",
+    state_partitions: str = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame:
+    """Run an availableNow stream into the ``__bid`` parquet sink;
+    return every micro-batch's output rows as a DataFrame with
+    ``__bid`` (batch id).
+
+    The sink is a distributed write — the driver never collects a row,
+    so it survives a real stream's output volume.
+    foreachBatch-with-append-write is the standard production pattern
+    for update-mode aggregates, whose emit-latest-per-key semantics the
+    built-in file sink can't accept; downstream consumers reduce by max
+    ``__bid`` per key — also distributed (see the S4-S6 runners).
+    """
+    out_dir = _temp_dir("stream_out_")
+    _start_stream(
+        stream_df, mode, body=_bid_sink(out_dir), state_partitions=state_partitions
+    )
+    return _read_bids(stream_df.sparkSession, out_dir, stream_df.schema)
 
 
 def run_s4_watermark_tumbling(spark: SparkSession, sf_dir: str, late: bool) -> DataFrame:
@@ -254,19 +340,18 @@ def run_s5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dropDuplicatesWithinWatermark on event_id over a replay with the
     first batch's rows re-appended at the end (arrival-time dups)."""
     base = prepare_replay_dir(spark, sf_dir, late=False)
-    dup_dir = base + "_dup"
-    ready = os.path.join(dup_dir, "_READY")
-    if not os.path.exists(ready):
-        shutil.rmtree(dup_dir, ignore_errors=True)
-        shutil.copytree(base, dup_dir)
-        os.remove(os.path.join(dup_dir, "_READY"))
+
+    def build(dup_dir: str) -> None:
+        for f in os.listdir(base):
+            if f.endswith(".parquet"):  # copy2 keeps the arrival mtimes
+                shutil.copy2(os.path.join(base, f), os.path.join(dup_dir, f))
         # re-deliver an early file as a late duplicate batch
         shutil.copy(
-            os.path.join(dup_dir, "000.parquet"),
+            os.path.join(base, "000.parquet"),
             os.path.join(dup_dir, "999.parquet"),
         )
-        open(ready, "w").close()
-    ev = _read_stream(spark, dup_dir)
+
+    ev = _read_stream(spark, _cached_fixture(base + "_dup", build))
     dedup = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(["event_id"])
     counted = dedup.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     outs = _run_availablenow(counted, mode="update")
@@ -341,25 +426,9 @@ def _drain_python_stream_counts(
     ev = spark.readStream.format(fmt).option("path", base).load()
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
 
-    out_dir = tempfile.mkdtemp(prefix=f"{tag}_out_")
-    ckpt = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
-    _TEMP_DIRS.extend([out_dir, ckpt])
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"__bid={batch_id}")
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
+    out_dir = _temp_dir(f"{tag}_out_")
+    q = _start_stream(agg, body=_bid_sink(out_dir), processing_time="0 seconds")
     try:
-        q = (
-            agg.writeStream.outputMode("update")
-            .trigger(processingTime="0 seconds")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink)
-            .start()
-        )
         deadline = time.time() + 120
         while time.time() < deadline:
             p = q.lastProgress
@@ -367,14 +436,13 @@ def _drain_python_stream_counts(
                 m = re.search(r"(\d+)", str(p["sources"][0]["endOffset"]))
                 if m and int(m.group(1)) >= n_chunks and p["numInputRows"] == 0:
                     break
-            time.sleep(0.2)
+            # raises at once if a micro-batch failed
+            q.awaitTermination(0.2)
         else:
             raise TimeoutError(f"{tag} replay did not drain within 120 s")
-        q.stop()
-        q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    outs = spark.read.parquet(out_dir)
+        q.stop()
+    outs = _read_bids(spark, out_dir, agg.schema)
     return (
         outs.groupBy("event_type")
         .agg(F.max_by("cnt", "__bid").alias("cnt"))
@@ -407,20 +475,16 @@ def prepare_partitioned_replay_dir(
     import pyarrow.parquet as pq
 
     src = prepare_replay_dir(spark, sf_dir, late=False)
-    base = src.rstrip("/") + f"_rg{row_groups_per_chunk}"
-    done = os.path.join(base, "_READY")
-    if os.path.exists(done):
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    for f in sorted(os.listdir(src)):
-        if not f.endswith(".parquet"):
-            continue
-        t = pq.read_table(os.path.join(src, f))
-        per_rg = max(1, -(-t.num_rows // max(1, row_groups_per_chunk)))
-        pq.write_table(t, os.path.join(base, f), row_group_size=per_rg)
-    open(done, "w").close()
-    return base
+
+    def build(base: str) -> None:
+        for f in sorted(os.listdir(src)):
+            if not f.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(src, f))
+            per_rg = max(1, -(-t.num_rows // max(1, row_groups_per_chunk)))
+            pq.write_table(t, os.path.join(base, f), row_group_size=per_rg)
+
+    return _cached_fixture(src.rstrip("/") + f"_rg{row_groups_per_chunk}", build)
 
 
 def run_s13_partitioned_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,8 +724,7 @@ def run_s10_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     why real deployments batch minutes of CDC, bucket the base table on
     the merge key (q111), or graduate to a format with merge-on-read.
     """
-    base_root = tempfile.mkdtemp(prefix="stream_merge_base_")
-    _TEMP_DIRS.append(base_root)
+    base_root = _temp_dir("stream_merge_base_")
     ev = _read_stream(spark, prepare_replay_dir(spark, sf_dir, late=False))
 
     from osm_changesets_to_parquet_spark.operators.merge import merge_upsert
@@ -702,21 +765,7 @@ def run_s10_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(base_root, f"v{batch_id}")
         )
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_merge_")
-    _TEMP_DIRS.append(ckpt)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            ev.writeStream.outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(apply_batch)
-            .start()
-        )
-        _run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _start_stream(ev, "append", body=apply_batch)
     versions = sorted(int(d[1:]) for d in os.listdir(base_root) if d.startswith("v"))
     final = spark.read.parquet(os.path.join(base_root, f"v{versions[-1]}"))
     return final.select(
@@ -734,43 +783,20 @@ N_DOC_CHUNKS = 4
 def prepare_docs_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Chunk the documents table into N_DOC_CHUNKS replay files by SQL
     ``NTILE(N) OVER (ORDER BY doc_id)`` (packing.global_ntile — exact
-    ANSI semantics, so the oracle can name each doc's chunk), written
-    with the prepare_replay_dir mtime discipline so the file stream
+    ANSI semantics, so the oracle can name each doc's chunk), through
+    the same replay writer as prepare_replay_dir, so the file stream
     delivers them in chunk order."""
     from osm_changesets_to_parquet_spark.operators.packing import global_ntile
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"docs_replay_k{N_DOC_CHUNKS}_{os.path.basename(sf_dir.rstrip('/'))}",
+    return _replay_fixture(
+        spark,
+        sf_dir,
+        "documents",
+        f"docs_replay_k{N_DOC_CHUNKS}",
+        lambda docs: global_ntile(
+            docs.select("doc_id", "text"), ["doc_id"], N_DOC_CHUNKS, out_col="__chunk"
+        ),
     )
-    done = os.path.join(base, "_READY")
-    if os.path.exists(done):
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tiled = global_ntile(docs, ["doc_id"], N_DOC_CHUNKS, out_col="__chunk")
-    staging = base + "_staging"
-    (
-        tiled.repartition("__chunk")
-        .write.partitionBy("__chunk")
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    chunk_dirs = sorted(
-        (d for d in os.listdir(staging) if d.startswith("__chunk=")),
-        key=lambda d: int(d.split("=")[1]),
-    )
-    t0 = time.time()
-    for i, d in enumerate(chunk_dirs):
-        dpath = os.path.join(staging, d)
-        (part,) = [f for f in os.listdir(dpath) if f.endswith(".parquet")]
-        dst = os.path.join(base, f"{i:03d}.parquet")
-        os.replace(os.path.join(dpath, part), dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    shutil.rmtree(staging, ignore_errors=True)
-    open(done, "w").close()
-    return base
 
 
 def run_s14_streaming_neardup(
@@ -798,10 +824,8 @@ def run_s14_streaming_neardup(
     from osm_changesets_to_parquet_spark.operators import dedup as D
 
     base = prepare_docs_replay_dir(spark, sf_dir)
-    idx = tempfile.mkdtemp(prefix="s14_idx_")
-    out_dir = tempfile.mkdtemp(prefix="s14_pairs_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s14_ckpt_")
-    _TEMP_DIRS.extend([idx, out_dir, ckpt_dir])
+    idx = _temp_dir("s14_idx_")
+    out_dir = _temp_dir("s14_pairs_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         has_index = _glob.glob(
@@ -814,33 +838,20 @@ def run_s14_streaming_neardup(
             # it would emit self-pairs (jac 1.0) and intra-batch
             # pairs and overwrite the correct per-batch output
             pairs = D.lsh_neardup_probe_index(
-                spark, idx, batch_df, threshold=threshold, before_bid=batch_id
+                batch_df.sparkSession,
+                idx,
+                batch_df,
+                threshold=threshold,
+                before_bid=batch_id,
             )
             pairs.write.mode("overwrite").parquet(
                 os.path.join(out_dir, f"__bid={batch_id}")
             )
         D.lsh_index_append(batch_df, idx, f"__bid={batch_id}")
 
-    stream = _read_stream(spark, base)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            stream.writeStream.outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        _run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if not any(f.startswith("__bid=") for f in os.listdir(out_dir)):
-        return spark.createDataFrame(
-            [], "new_id long, old_id long, jac double"
-        )
+    _start_stream(_read_stream(spark, base), body=sink)
     return (
-        spark.read.parquet(out_dir)
+        _read_bids(spark, out_dir, "new_id long, old_id long, jac double")
         .select("new_id", "old_id", "jac")
         .orderBy("new_id", "old_id")
     )
@@ -862,9 +873,7 @@ def run_s15_streaming_quality_router(spark: SparkSession, sf_dir: str) -> DataFr
     from osm_changesets_to_parquet_spark.operators.text import quality_score
 
     base = prepare_docs_replay_dir(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="s15_routed_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s15_ckpt_")
-    _TEMP_DIRS.extend([out_dir, ckpt_dir])
+    out_dir = _temp_dir("s15_routed_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         scored = quality_score(batch_df)
@@ -882,20 +891,7 @@ def run_s15_streaming_quality_router(spark: SparkSession, sf_dir: str) -> DataFr
             .parquet(os.path.join(out_dir, f"__bid={batch_id}"))
         )
 
-    stream = _read_stream(spark, base)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            stream.writeStream.outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        _run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    _start_stream(_read_stream(spark, base), body=sink)
     return (
         spark.read.parquet(out_dir)
         .groupBy("disposition")
@@ -1175,8 +1171,8 @@ def run_s19_streaming_conversions(spark: SparkSession, sf_dir: str) -> DataFrame
 def run_s20_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING WRITE through the Python DataSource API — the fourth
     quadrant (cs11 batch read, s13 partition-planned stream read, cs12
-    batch write): the events replay streams through
-    ``writeStream.format("events_chunks")``; each micro-batch
+    batch write): the events replay streams into the
+    ``format("events_chunks")`` stream sink; each micro-batch
     partition's rows land in an executor-written parquet file and the
     driver's per-epoch ``commit(messages, batchId)`` atomically
     publishes ``_MANIFEST-{batchId}.json`` — the manifest-only
@@ -1186,8 +1182,6 @@ def run_s20_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the source table proves the streaming path lossless
     and exactly-once-visible.
     """
-    import shutil as _shutil
-
     from osm_changesets_to_parquet_spark.sources import events_sink_pyds
 
     events_sink_pyds.register(spark)
@@ -1195,27 +1189,12 @@ def run_s20_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_stream(spark, base).select(
         "event_id", "user_id", "event_type", "value", "ts_us"
     )
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"s20_stream_sink_{os.path.basename(sf_dir.rstrip('/'))}",
+    out = _temp_dir("s20_sink_")  # fresh epoch set per run
+    _start_stream(
+        stream,
+        "append",
+        writer=lambda w: w.format("events_chunks").option("path", out),
     )
-    _shutil.rmtree(out, ignore_errors=True)  # fresh epoch set per run
-    ckpt = tempfile.mkdtemp(prefix="s20_ckpt_")
-    _TEMP_DIRS.extend([out, ckpt])
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
-    try:
-        q = (
-            stream.writeStream.format("events_chunks")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_to_completion(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     back = spark.read.format("events_chunks").option("path", out).load()
     return (
         back.groupBy("event_type")
@@ -1243,8 +1222,8 @@ def run_s21_streaming_topk(
     counts equal the batch counts EXACTLY and the result hash-matches
     the batch SQL oracle.  At 100 TB/day the state store carries the
     user population; the top-k itself is a per-batch O(k) concern for
-    a real-time consumer (here reduced once at stream end — the
-    replay-to-parquet harness shared by s4-s6/s18).
+    a real-time consumer (here reduced once at stream end, from the
+    ``__bid`` parquet sink of _run_availablenow).
     """
     base = prepare_replay_dir(spark, sf_dir)
     stream = _read_stream(spark, base)
@@ -1361,9 +1340,8 @@ def run_s23_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-tolerance.
     """
     base = prepare_replay_dir(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="s23_out_")
-    ckpt_dir = tempfile.mkdtemp(prefix="s23_ckpt_")
-    _TEMP_DIRS.extend([out_dir, ckpt_dir])
+    out_dir = _temp_dir("s23_out_")
+    ckpt_dir = _temp_dir("s23_ckpt_")
     # '_'-prefixed: invisible to the parquet reader's file listing
     crash_marker = os.path.join(out_dir, "_CRASHED")
 
@@ -1388,30 +1366,15 @@ def run_s23_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"s23 injected crash: batch {batch_id} written, not committed"
             )
 
-    def start():
-        return (
-            agg.writeStream.outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", STREAM_SHUFFLE_PARTITIONS)
     try:
-        crashed = start()
-        try:
-            crashed.awaitTermination()
-        except Exception as e:  # StreamingQueryException wraps the cause
-            if "s23 injected crash" not in str(e):
-                raise
-        else:
-            raise AssertionError("s23: injected crash did not fire")
-        restarted = start()  # SAME checkpoint — recovery, not a rerun
-        restarted.awaitTermination()  # must complete clean this time
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _start_stream(agg, body=sink, ckpt_dir=ckpt_dir)
+    except Exception as e:  # StreamingQueryException wraps the cause
+        if "s23 injected crash" not in str(e):
+            raise
+    else:
+        raise AssertionError("s23: injected crash did not fire")
+    # SAME checkpoint — recovery, not a rerun; must complete clean this time
+    _start_stream(agg, body=sink, ckpt_dir=ckpt_dir)
     assert os.path.exists(crash_marker), "s23: crash path never executed"
 
     out = spark.read.parquet(out_dir)
@@ -1660,7 +1623,7 @@ def run_s26_backfill_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeable-aggregate contract (the same property q100/q154 witness
     for batch increments) applied across the batch/stream seam.  The
     streamed side's final partial is the max-__bid row per key of an
-    update-mode availableNow aggregation (the s4-s6 runner pattern).
+    update-mode availableNow aggregation (_run_availablenow).
     """
     base = prepare_replay_dir(spark, sf_dir)
     from osm_changesets_to_parquet_spark.catalog import load_table

@@ -1,7 +1,8 @@
 """The shared lineage-cut primitive and the size-gated local finish:
 ``iterutils.checkpoint_metrics`` costs one job and reads its metrics,
 and q272 gives the oracle's answer on both sides of
-``iterutils.LOCAL_FINISH_MAX_ROWS``, on text the fixtures lack."""
+``iterutils.LOCAL_FINISH_MAX_ROWS``, on text the fixtures lack.  Also
+the plan-build-time job cost of ``catalog.fan_out``'s partition probe."""
 
 from __future__ import annotations
 
@@ -86,3 +87,14 @@ def test_q272_short_and_null_docs_match_oracle(spark, tmp_path, monkeypatch, cap
     if cap == 0:
         monkeypatch.setattr(iterutils, "LOCAL_FINISH_MAX_ROWS", 0)
     assert compare(q272(spark, str(tmp_path)), _Q272_SQL, str(tmp_path), "q272") == []
+
+
+def test_fan_out_probe_starts_no_job_on_a_table_scan(spark, sf_dir):
+    from osm_changesets_to_parquet_spark.catalog import fan_out, load_table
+
+    # df.rdd.getNumPartitions() plans the scan without running it; on an
+    # input with an exchange AQE runs the map stage first (one job)
+    scan = load_table(spark, sf_dir, "events")
+    out, jobs = _jobs_started_by(spark, lambda: fan_out(scan, "event_id"))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism // 2
