@@ -8,7 +8,7 @@ This package internalizes both halves, Spark-first:
 
 - ``sources.changesets``  — the XML -> Parquet conversion pipeline
   (reference: src/main.rs:410-456), expressed as declarative DataFrame
-  transforms over Spark's built-in XML source.
+  transforms over a split text scan parsed with ``from_xml``.
 - ``queries``             — the declared relational query surface
   (SURVEY.md §2.B), each entry hash-checked against a DuckDB oracle.
 - ``operators``           — library operators Spark lacks natively:

@@ -3,9 +3,8 @@ Spark-first).
 
 Reference behavior being reproduced (all in /root/reference/src/main.rs):
 - streaming SAX scan over (optionally multi-stream bzip2) XML
-  (:286-367, :431-440) -> Spark's built-in XML source; bz2 decode is
-  Hadoop's BZip2Codec, which is *splittable*, so what the reference
-  decodes single-threaded parallelizes across executors for free.
+  (:286-367, :431-440) -> a framed text scan plus ``from_xml`` per
+  element (below); bz2 decode is Hadoop's BZip2Codec.
 - 12 recognized attributes, everything else dropped (:207-221) ->
   explicit input schema (schema application = projection pushdown).
 - ``description`` = value of the last <tag k="comment"> child (:240-247
@@ -13,13 +12,35 @@ Reference behavior being reproduced (all in /root/reference/src/main.rs):
 - defaults for absent attributes: id=0, open=false, num_changes=0,
   comments_count=0; the other 9 columns null (:40-55).
 - ``open`` is ``value == "true"`` — any other string is false (:211).
-- fail-fast vs continue-on-error (:344-363) -> FAILFAST vs PERMISSIVE
-  mode with corrupt-record filtering (salvage the parseable rows).
+- fail-fast vs continue-on-error (:344-363) -> FAILFAST, or PERMISSIVE
+  keeping only the rows before the first corrupt element.
+
+Framing contract.  Spark's built-in ``xml`` source reads each file whole
+in one task (``multiLine`` is its default), so it cannot spread one dump
+over the cores.  Instead the text source reads the file with
+``lineSep="<changeset"``: its line reader is splittable (bz2 included),
+and a record belongs to the split it starts in, so every record is the
+tail of exactly one element start tag, whatever the split size.
+- The first record of a document is its prolog and holds the root
+  ``<osm`` start tag; it is dropped.  No element can hold an unescaped
+  ``<osm``, and the root's end tag ``</osm>`` does not match it.
+- Every other record is parsed as ``"<changeset" + record`` by
+  ``from_xml``, the same StaxXmlParser and options the ``xml`` source
+  uses; the parser ignores what follows the element, e.g. the last
+  record's ``</osm>``.
+- The dump must not hold ``<changeset`` other than as a start tag, e.g.
+  in a comment or CDATA section; OSM dumps escape ``<`` in all text.
+- Whitespace before ``<?xml``, which the ``xml`` source rejects, is
+  accepted.
+- Salvage mode orders rows by (file, split start, row in split) and cuts
+  at the first corrupt row: one extra aggregate over the scan.  Strict
+  mode fails the task at the first corrupt element.
 
 Scale design (100 TB planet-dump class inputs):
-- The XML scan is distributed: Spark splits the file (bz2 blocks are
-  split points) and each task SAX-parses its slice — the reference's
-  1 MiB buffered single pass becomes N parallel passes.
+- ``convert`` lets Spark size the splits by bytes per core, so a small
+  dump gets one split per core and a planet dump keeps its
+  ``maxPartitionBytes`` splits; each task decodes and parses its slice —
+  the reference's 1 MiB buffered single pass becomes N parallel passes.
 - ``maxRecordsPerFile`` plays the reference's --batch-size role
   (:32-33) for output sizing; partition the output by day of
   ``created_at`` for partition-pruned downstream queries.
@@ -35,6 +56,9 @@ from osm_changesets_to_parquet_spark.schemas import (
     CHANGESET_XML_SCHEMA,
 )
 
+# the record separator of the framed scan; see the module docstring
+_ELEMENT_START = "<changeset"
+
 
 def read_changesets_xml(
     spark: SparkSession,
@@ -42,22 +66,46 @@ def read_changesets_xml(
     continue_on_error: bool = False,
 ) -> DataFrame:
     """Read a changeset XML dump into the declared 13-column schema."""
-    mode = "PERMISSIVE" if continue_on_error else "FAILFAST"
+    text = spark.read.option("lineSep", _ELEMENT_START).text(path)
+    if continue_on_error:
+        # document position of each record: splits are contiguous in file
+        # order, and records within a split keep their order in its task
+        text = text.withColumn(
+            "_pos",
+            F.struct(
+                F.input_file_name(),
+                F.input_file_block_start(),
+                F.monotonically_increasing_id(),
+            ),
+        )
+    element = F.from_xml(
+        F.concat(F.lit(_ELEMENT_START), F.col("value")),
+        CHANGESET_XML_SCHEMA,
+        {
+            # keep attribute values verbatim: quick_xml trims *text* nodes,
+            # not attributes (src/main.rs:296-299 trim_text vs :240-247
+            # stores v as-is) — Spark's default ignoreSurroundingSpaces=true
+            # would turn <tag k="comment" v=" "/> into '' instead of ' '
+            "ignoreSurroundingSpaces": "false",
+            "mode": "PERMISSIVE" if continue_on_error else "FAILFAST",
+            "columnNameOfCorruptRecord": "_corrupt_record",
+        },
+    )
+    pos = ["_pos"] if continue_on_error else []
     raw = (
-        spark.read.format("xml")
-        .option("rowTag", "changeset")
-        # keep attribute values verbatim: quick_xml trims *text* nodes, not
-        # attributes (src/main.rs:296-299 trim_text vs :240-247 stores v
-        # as-is) — Spark's default ignoreSurroundingSpaces=true would turn
-        # <tag k="comment" v=" "/> into '' instead of ' '
-        .option("ignoreSurroundingSpaces", "false")
-        .option("mode", mode)
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(CHANGESET_XML_SCHEMA)
-        .load(path)
+        text.where(~F.col("value").contains("<osm"))
+        .select(element.alias("x"), *pos)
+        .select("x.*", *pos)
     )
     if continue_on_error:
-        raw = raw.where(F.col("_corrupt_record").isNull())
+        # the reference stops at the first error (src/main.rs:344-363):
+        # keep only the rows positioned before the first corrupt one
+        first_error = raw.where(F.col("_corrupt_record").isNotNull()).agg(
+            F.min("_pos").alias("_first_error")
+        )
+        raw = raw.crossJoin(first_error).where(
+            F.col("_first_error").isNull() | (F.col("_pos") < F.col("_first_error"))
+        )
     return _project(raw)
 
 
@@ -117,7 +165,17 @@ def convert(
     )
     if partition_by_day:
         writer = writer.partitionBy("created_day")
-    writer.parquet(output_path, compression="snappy")
+    # openCost 1 byte: Spark then splits at min(maxPartitionBytes, input
+    # bytes / parallelism), so a dump below the default 4 MB x cores still
+    # gets one split per core; 1, not 0, keeps the split size positive for
+    # an input of fewer bytes than cores
+    conf = spark.conf
+    prev = conf.get("spark.sql.files.openCostInBytes")
+    conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        writer.parquet(output_path, compression="snappy")
+    finally:
+        conf.set("spark.sql.files.openCostInBytes", prev)
     # row count from the write's own scan (src/main.rs:453 prints the same
     # total) — no second read of the output at planet scale.
     return int(obs.get["rows"])

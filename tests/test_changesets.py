@@ -3,6 +3,11 @@ parse semantics, src/main.rs:199-284)."""
 
 from __future__ import annotations
 
+import bz2
+import contextlib
+import os
+from pathlib import Path
+
 import pytest
 
 import xml.etree.ElementTree as ET
@@ -16,6 +21,7 @@ from osm_changesets_to_parquet_spark.sources.changesets import (
     read_changesets_xml,
     validate_schema,
 )
+from tests.spark_jobs import jobs_started_by
 
 
 def _rows(df):
@@ -198,6 +204,17 @@ def test_fallback_source_matches_xml_source(spark):
     assert [tuple(r) for r in fb] == [tuple(r) for r in main]
 
 
+_TRAILING_SELFCLOSING_DOC = (
+    '<?xml version="1.0"?>\n<osm>\n'
+    '  <changeset id="1" created_at="2024-01-01T00:00:00Z" open="false"'
+    ' num_changes="5" comments_count="0">\n'
+    '    <tag k="comment" v="x"/>\n  </changeset>\n'
+    '  <changeset id="2" open="true" num_changes="1" comments_count="0"/>\n'
+    '  <changeset id="3" open="false" num_changes="2" comments_count="1"/>\n'
+    "</osm>\n"
+)
+
+
 def test_fallback_source_bz2_and_trailing_selfclosing(spark, tmp_path):
     from osm_changesets_to_parquet_spark.sources.changesets_fallback import (
         read_changesets_xml_fallback,
@@ -205,17 +222,8 @@ def test_fallback_source_bz2_and_trailing_selfclosing(spark, tmp_path):
 
     # file ends with self-closing elements: their terminator-less tail
     # fragment (with </osm>) must still parse
-    doc = (
-        '<?xml version="1.0"?>\n<osm>\n'
-        '  <changeset id="1" created_at="2024-01-01T00:00:00Z" open="false"'
-        ' num_changes="5" comments_count="0">\n'
-        '    <tag k="comment" v="x"/>\n  </changeset>\n'
-        '  <changeset id="2" open="true" num_changes="1" comments_count="0"/>\n'
-        '  <changeset id="3" open="false" num_changes="2" comments_count="1"/>\n'
-        "</osm>\n"
-    )
     p = tmp_path / "tail.xml"
-    p.write_text(doc)
+    p.write_text(_TRAILING_SELFCLOSING_DOC)
     rows = read_changesets_xml_fallback(spark, str(p)).orderBy("id").collect()
     assert [r.id for r in rows] == [1, 2, 3]
     assert rows[0].description == "x"
@@ -380,3 +388,120 @@ def test_cli_single_file_publish(spark, tmp_path):
     assert spark.read.parquet(out).count() == 4
     idx = _json.loads((tmp_path / "index.json").read_text())
     assert idx["rows"] == 4
+
+
+# --- the framed scan: split invariance, strict/salvage errors, parallelism --
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+def _write_doc(tmp_path, name, doc, compressed):
+    """``doc`` as plain XML, or as two bzip2 streams cut at its middle byte."""
+    data = doc.encode("utf-8")
+    if compressed:
+        path = tmp_path / f"{name}.xml.bz2"
+        mid = len(data) // 2
+        path.write_bytes(bz2.compress(data[:mid]) + bz2.compress(data[mid:]))
+    else:
+        path = tmp_path / f"{name}.xml"
+        path.write_bytes(data)
+    return str(path)
+
+
+_SPLIT_DOCS = {
+    "edge": (lambda: fixtures.FIXTURE_XML, [1, 2, 3, 4]),
+    "geo": (
+        lambda: Path(fixtures.write_geo_fixture()).read_text(encoding="utf-8"),
+        list(range(1, fixtures.GEO_N + 1)),
+    ),
+    "trailing_selfclosing": (lambda: _TRAILING_SELFCLOSING_DOC, [1, 2, 3]),
+    "empty_osm": (lambda: '<?xml version="1.0"?>\n<osm version="0.6">\n</osm>\n', []),
+}
+
+
+@pytest.mark.parametrize("compressed", [False, True], ids=["plain", "bz2"])
+@pytest.mark.parametrize("name", sorted(_SPLIT_DOCS))
+def test_framed_scan_same_rows_at_every_split_size(spark, tmp_path, name, compressed):
+    doc, ids = _SPLIT_DOCS[name]
+    path = _write_doc(tmp_path, name, doc(), compressed)
+    one_split = read_changesets_xml(spark, path)
+    assert one_split.rdd.getNumPartitions() == 1
+    rows = one_split.collect()
+    assert sorted(r["id"] for r in rows) == ids
+    want = sorted(map(str, rows))
+    for split_bytes in ("64", "1000"):
+        with _conf(spark, "spark.sql.files.maxPartitionBytes", split_bytes):
+            df = read_changesets_xml(spark, path)
+            if os.path.getsize(path) > int(split_bytes):
+                assert df.rdd.getNumPartitions() > 1, split_bytes
+            assert sorted(map(str, df.collect())) == want, split_bytes
+
+
+def test_strict_read_and_convert_raise_on_truncated_element(spark, tmp_path):
+    # the reference aborts on a parse error unless --continue-on-error
+    # (src/main.rs:344-363); the malformed fixture is cut off mid-element
+    path = fixtures.write_malformed_fixture()
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        read_changesets_xml(spark, path).collect()
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        convert(spark, path, str(tmp_path / "out.parquet"))
+
+
+@pytest.mark.parametrize("compressed", [False, True], ids=["plain", "bz2"])
+@pytest.mark.parametrize("split_bytes", [None, "40"], ids=["default", "40B"])
+def test_salvage_keeps_rows_before_first_error_at_any_split(
+    spark, tmp_path, split_bytes, compressed
+):
+    # elements 4-5 parse, but follow the corrupt element 3: the reference
+    # stops at the first error, so they must not be salvaged
+    path = _write_doc(tmp_path, "midfile", fixtures.MIDFILE_CORRUPT_XML, compressed)
+    with (
+        _conf(spark, "spark.sql.files.maxPartitionBytes", split_bytes)
+        if split_bytes
+        else contextlib.nullcontext()
+    ):
+        df = read_changesets_xml(spark, path, continue_on_error=True)
+        assert sorted(r["id"] for r in df.collect()) == [1, 2]
+
+
+def test_whitespace_before_prolog_is_accepted(spark, tmp_path):
+    path = _write_doc(tmp_path, "ws", "\n  " + fixtures.FIXTURE_XML, False)
+    rows = read_changesets_xml(spark, path).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2, 3, 4]
+
+
+def test_convert_is_parallel_and_restores_open_cost(spark, tmp_path):
+    key = "spark.sql.files.openCostInBytes"
+    geo = Path(fixtures.write_geo_fixture()).read_text(encoding="utf-8")
+    path = _write_doc(tmp_path, "geo", geo, True)
+    with _conf(spark, key, "5000000"):
+        _, jobs = jobs_started_by(
+            spark, lambda: convert(spark, path, str(tmp_path / "geo.parquet"))
+        )
+        tracker = spark.sparkContext.statusTracker()
+        first_stage = min(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+        n_tasks = tracker.getStageInfo(first_stage).numTasks
+        assert n_tasks >= spark.sparkContext.defaultParallelism
+        assert spark.conf.get(key) == "5000000"
+        with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+            convert(spark, fixtures.write_malformed_fixture(), str(tmp_path / "bad.parquet"))
+        assert spark.conf.get(key) == "5000000"
+
+
+def test_convert_input_smaller_than_its_split_count(spark, tmp_path):
+    # a 6-byte document over 64 minimum partitions: bytes per split
+    # rounds down to 0, which the split pin must keep positive
+    path = _write_doc(tmp_path, "tiny", "<osm/>", False)
+    with _conf(spark, "spark.sql.files.minPartitionNum", "64"):
+        assert convert(spark, path, str(tmp_path / "tiny.parquet")) == 0

@@ -6,9 +6,6 @@ the plan-build-time job cost of ``catalog.fan_out``'s partition probe."""
 
 from __future__ import annotations
 
-import time
-import uuid
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -16,30 +13,7 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.operators import iterutils
 from tests.oracle_utils import compare
-
-
-def _jobs_started_by(spark, fn) -> tuple[object, int]:
-    """Run ``fn`` under a fresh job group; return its result and the
-    number of Spark jobs the group started."""
-    sc = spark.sparkContext
-    group = f"iterutils-{uuid.uuid4().hex}"
-    barrier = f"{group}-barrier"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(barrier, barrier)
-        # the status store applies listener events in order, so once the
-        # barrier job is visible every job of ``group`` is visible too
-        spark.range(1).collect()
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 10
-    while not tracker.getJobIdsForGroup(barrier) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(barrier), "barrier job never reported"
-    return out, len(tracker.getJobIdsForGroup(group))
+from tests.spark_jobs import jobs_started_by
 
 
 @pytest.mark.parametrize(
@@ -49,7 +23,7 @@ def _jobs_started_by(spark, fn) -> tuple[object, int]:
 )
 def test_checkpoint_metrics_one_job_and_null_reads_zero(spark, bound, want):
     df = spark.range(0, 10, 1, 2).where(F.col("id") < bound)
-    (cut, metrics), jobs = _jobs_started_by(
+    (cut, metrics), jobs = jobs_started_by(
         spark,
         lambda: iterutils.checkpoint_metrics(
             df, n=F.count(F.lit(1)), s=F.sum("id")
@@ -57,7 +31,7 @@ def test_checkpoint_metrics_one_job_and_null_reads_zero(spark, bound, want):
     )
     # SUM over no rows is NULL; the helper reads it as 0
     assert metrics == want
-    assert jobs == 1
+    assert len(jobs) == 1
     assert cut.count() == want["n"]
 
 
@@ -95,6 +69,6 @@ def test_fan_out_probe_starts_no_job_on_a_table_scan(spark, sf_dir):
     # df.rdd.getNumPartitions() plans the scan without running it; on an
     # input with an exchange AQE runs the map stage first (one job)
     scan = load_table(spark, sf_dir, "events")
-    out, jobs = _jobs_started_by(spark, lambda: fan_out(scan, "event_id"))
-    assert jobs == 0
+    out, jobs = jobs_started_by(spark, lambda: fan_out(scan, "event_id"))
+    assert len(jobs) == 0
     assert out.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism // 2
