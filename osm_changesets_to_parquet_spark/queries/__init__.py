@@ -21,8 +21,11 @@ Determinism discipline (SURVEY.md §2.B rules 1-5):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,101 +71,47 @@ def register(
     return deco
 
 
-# The driver records correctness rows in registry order and its window
-# has held exactly 50 entries per round (CORRECTNESS_r01-r13.json) — so
-# ordering is part of the verification contract.  Round 14 continues
-# the REGISTRATION FREEZE (VERDICT r09-r13): zero new queries.  This
-# is steady-state window #2: pure oldest-witnessed-first output of
-# tools/next_window.py over the tracked ledger through r13 — it
-# fronts the r5-witnessed q36-q40/s11/s12/t41-t45 names and fills
-# with the oldest remaining r5 names in ascending name order.
-#
-# STANDING DEBT RULE (VERDICT r08 item 2): new registrations per round
-# <= 50 minus the never-witnessed backlog; while backlog > 0, zero new
-# names (hard cap 3, only for driver-found defects).
-#
-# STANDING ROTATION RULE (VERDICT r10 item 5) — this window IS the
-# rule's output: the window is chosen OLDEST-WITNESSED-FIRST, computed
-# from the git-TRACKED CORRECTNESS_r*.json ledger by
-# ``tools/next_window.py`` (ties broken by registry name; see that
-# tool's docstring for why the rule reads only tracked ledgers — the
-# driver drops each round's ledger untracked after the final commit).
-# With 410 names and 50-slot windows the full cycle is ~8.2 rounds, so
-# the maximum witness age under the rule is bounded at ~9 rounds;
-# _PRIORITY is regenerated from the tool's output each round (the tool
-# prints the tuple to paste here, and
-# tests/test_registry_integrity.py::test_window_follows_rotation_rule
-# pins that the head of _PRIORITY equals the tool's choice).
-_PRIORITY: tuple[str, ...] = (
-    # ---- window (50): oldest-witnessed-first ----
-    "q191_dynamic_partition_pruning",
-    "q192_emd_drift",
-    "q193_decile_lift",
-    "q197_table_digest",
-    "q200_tpch_q3",
-    "s16_streaming_transitions",
-    "s17_full_outer_stream_join",
-    "s18_streaming_cms",
-    "s19_streaming_conversions",
-    "u5_arrow_grouped_stats",
-    "u6_udtf_analyze_dynamic_schema",
-    "cs12_python_datasource_writer",
-    "cs14_single_file_publish",
-    "e46_embedding_neardup",
-    "q121_ndcg_eval",
-    "q132_contrastive_mining",
-    "q142_neardup_persisted_index",
-    "q143_repeated_spans",
-    "q144_bpe_merges",
-    "q145_bpe_encode",
-    "q146_quantized_rerank",
-    "q147_dsir_weights",
-    "q148_tokenizer_fertility",
-    "q149_decontaminate_spans",
-    "q150_ann_persisted_index",
-    "q151_ann_incremental",
-    "q179_knn_label_audit",
-    "q194_embedding_dim_stats",
-    "q195_negative_sampling",
-    "q196_poisson_bootstrap",
-    "q198_weighted_median",
-    "q199_linear_interpolation",
-    "q201_hll_overlap",
-    "q202_matrix_projection",
-    "q203_grouped_percentiles",
-    "q204_nearest_score_match",
-    "q205_sequential_patterns",
-    "q206_stratified_sample",
-    "q207_reservoir_sample",
-    "q208_isotonic_calibration",
-    "q209_session_entropy",
-    "q210_bipartite_projection",
-    "q211_haversine_join",
-    "q212_theil_sen",
-    "q213_mann_whitney",
-    "q214_chi2_feature_select",
-    "q215_winsorized_stats",
-    "q216_bloom_antijoin",
-    "q217_recency_weighted_ctr",
-    "q218_triangle_count",
-    # ---- next-oldest tail (14) ----
-    "q219_kaplan_meier",
-    "q220_dow_seasonality",
-    "q221_anomaly_zscore",
-    "q222_bigram_perplexity",
-    "q223_ks_drift",
-    "s13_partitioned_stream_source",
-    "s14_streaming_neardup",
-    "s15_streaming_quality_router",
-    "s20_python_stream_sink",
-    "s21_streaming_topk",
-    "cs13_parse_diagnostics",
-    "cs15_xml_expr_roundtrip",
-    "m53_phash_neardup",
-    "q224_gram_novelty",
-)
-# no rows-only queries remain (a51/a52 carry tolerance oracles now)
-_LAST: tuple[str, ...] = ()
+# The external correctness check records rows in registry order and
+# gates each round on the first 50, so the order is part of the
+# verification contract.  Every checked round leaves a
+# CORRECTNESS_r{N}.json ledger at the repo root; the registry puts the
+# names whose latest green witness is oldest first, so each name
+# re-enters the window within ~410/50 rounds.  The ledgers are found
+# from this file, never from the cwd: the checker imports the package
+# from another directory.
+_LEDGER_DIR = Path(__file__).resolve().parents[2]
+_LEDGER_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def ledger_paths() -> list[Path]:
+    """Every ``CORRECTNESS_r{N}.json`` at the repo root, oldest round first."""
+    found = (
+        (int(m.group(1)), p)
+        for p in _LEDGER_DIR.glob("CORRECTNESS_r*.json")
+        if (m := _LEDGER_NAME.fullmatch(p.name))
+    )
+    return [p for _, p in sorted(found)]
+
+
+def witness_order(names: Iterable[str], ledgers: Iterable[Path]) -> list[str]:
+    """``names`` sorted by (latest round with a green row, name).
+
+    A row is green when rows match, schema and hash are not known to
+    differ, and the query raised nothing.  A name no ledger witnessed
+    sorts first (round 0).
+    """
+    latest: dict[str, int] = {}
+    for path in ledgers:
+        rnd = int(_LEDGER_NAME.fullmatch(Path(path).name).group(1))
+        for name, row in json.loads(Path(path).read_text()).items():
+            if (
+                row.get("rows_match")
+                and row.get("schema_match") is not False
+                and row.get("hash_match") is not False
+                and row.get("err") is None
+            ):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return sorted(names, key=lambda n: (latest.get(n, 0), n))
 
 
 def load_all_modules() -> None:
@@ -201,16 +150,7 @@ def load_all_modules() -> None:
         windows_streaming,
     )
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in _PRIORITY:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
-    for name, spec in REGISTRY.items():
-        if name not in ordered and name not in _LAST:
-            ordered[name] = spec
-    for name in _LAST:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
+    ordered = {n: REGISTRY[n] for n in witness_order(REGISTRY, ledger_paths())}
     REGISTRY.clear()
     REGISTRY.update(ordered)
 

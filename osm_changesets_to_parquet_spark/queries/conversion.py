@@ -213,10 +213,10 @@ def cs3(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cs7_fallback_xml",
     fixtures.expected_values_sql(),
     doc=(
-        "identical conversion through the no-xml-source fallback "
+        "identical conversion through the no-from_xml fallback "
         "(lineSep-framed text scan + Arrow-batched ElementTree parse, "
         "sources/changesets_fallback.py) — proves the engine runs on "
-        "Spark deployments without the xml data source"
+        "Spark deployments without the JVM XML parser"
     ),
 )
 def cs7(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Fallback changeset-XML source: no `xml` data source required.
+"""Fallback changeset-XML source: no JVM XML parser required.
 
 SURVEY §7 phase 2 names the risky bit of a hand-rolled XML scan:
 ``<changeset>`` elements spanning partition splits (the reference dodges
@@ -11,9 +11,10 @@ comes from the same Hadoop codec path as the main source.
 
 Parsing is ``mapInPandas`` + ElementTree per Arrow batch: Python, but
 vectorized at the transport layer and embarrassingly parallel — the
-acceptable fallback cost when the JVM `xml` source is absent (Spark
-<4 without the spark-xml package).  Semantics replicated from the
-reference exactly like sources/changesets.py:
+acceptable fallback cost when the JVM ``from_xml`` parser the main
+source uses is absent (Spark <4 without the spark-xml package).
+Semantics replicated from the reference exactly like
+sources/changesets.py:
 - 12 recognized attributes, unknown dropped (src/main.rs:207-221)
 - description = last <tag k="comment"> child (:240-247)
 - open = value == "true" (:211); defaults id=0/open=false/

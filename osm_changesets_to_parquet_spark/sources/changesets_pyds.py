@@ -1,8 +1,8 @@
 """Changeset XML as a Spark 4 PYTHON DATA SOURCE (pyspark.sql.datasource).
 
-The third ingest path, after the JVM ``xml`` source
-(sources/changesets.py) and the lineSep-framed text fallback
-(sources/changesets_fallback.py): a first-class pluggable source —
+The third ingest path, after the ``<changeset``-framed text scan parsed
+by ``from_xml`` (sources/changesets.py) and the lineSep-framed text
+fallback (sources/changesets_fallback.py): a first-class pluggable source —
 ``spark.read.format("osm_changesets").option("path", ...)`` — built on
 the public Python DataSource API new in Spark 4.  What it demonstrates
 beyond the fallback:

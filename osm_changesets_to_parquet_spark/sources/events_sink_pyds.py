@@ -43,6 +43,7 @@ from pyspark.sql.datasource import (
 
 from osm_changesets_to_parquet_spark.sources.events_stream_pyds import (
     _COLS,
+    EVENTS_ARROW_SCHEMA,
     EVENTS_DDL,
 )
 
@@ -184,24 +185,13 @@ class EventsChunkReader(DataSourceReader):
         # yield ARROW RECORD BATCHES (supported by the Python DataSource
         # read API) instead of `to_pylist` + `zip` row tuples — the
         # guide §4 row-at-a-time tax the s12/s13 stream readers also
-        # shed this round; cast to the declared DDL so the Arrow schema
-        # matches exactly
-        import pyarrow as pa
+        # avoid
         import pyarrow.parquet as pq
 
         if partition.value is None:
             return
-        target = pa.schema(
-            [
-                pa.field("event_id", pa.int64()),
-                pa.field("user_id", pa.int64()),
-                pa.field("event_type", pa.string()),
-                pa.field("value", pa.float64()),
-                pa.field("ts_us", pa.int64()),
-            ]
-        )
         t = pq.read_table(partition.value, columns=_COLS)
-        yield from t.cast(target).to_batches()
+        yield from t.cast(EVENTS_ARROW_SCHEMA).to_batches()
 
 
 def register(spark) -> None:

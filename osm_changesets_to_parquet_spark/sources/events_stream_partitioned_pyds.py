@@ -37,6 +37,7 @@ from pyspark.sql.datasource import (
 
 from osm_changesets_to_parquet_spark.sources.events_stream_pyds import (
     _COLS,
+    EVENTS_ARROW_SCHEMA,
     EVENTS_DDL,
     _chunk_files,
 )
@@ -103,25 +104,14 @@ class EventsReplayPartitionedStreamReader(DataSourceStreamReader):
         # Python DataSource read API) — the row-tuple spelling
         # (`to_pylist` + `zip`) materialized and pickled every row
         # through Python objects, guide §4's row-at-a-time tax; the
-        # batch stays columnar end-to-end.  Types are cast to the
-        # declared DDL so the Arrow schema matches exactly.
-        import pyarrow as pa
+        # batch stays columnar end-to-end.
         import pyarrow.parquet as pq
 
         path, rg = partition.value
         if path is None:
             return
         t = pq.ParquetFile(path).read_row_group(rg, columns=_COLS)
-        target = pa.schema(
-            [
-                pa.field("event_id", pa.int64()),
-                pa.field("user_id", pa.int64()),
-                pa.field("event_type", pa.string()),
-                pa.field("value", pa.float64()),
-                pa.field("ts_us", pa.int64()),
-            ]
-        )
-        yield from t.select(_COLS).cast(target).to_batches()
+        yield from t.select(_COLS).cast(EVENTS_ARROW_SCHEMA).to_batches()
 
     def commit(self, end: dict) -> None:
         pass  # chunk files are immutable; nothing to release

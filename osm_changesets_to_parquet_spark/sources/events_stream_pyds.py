@@ -26,12 +26,24 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 EVENTS_DDL = (
     "event_id bigint, user_id bigint, event_type string, value double, ts_us bigint"
 )
-_COLS = ["event_id", "user_id", "event_type", "value", "ts_us"]
+# the same columns as Arrow types: every events reader casts its batches
+# to this so the Arrow schema Spark receives matches EVENTS_DDL exactly
+EVENTS_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("event_id", pa.int64()),
+        pa.field("user_id", pa.int64()),
+        pa.field("event_type", pa.string()),
+        pa.field("value", pa.float64()),
+        pa.field("ts_us", pa.int64()),
+    ]
+)
+_COLS = EVENTS_ARROW_SCHEMA.names
 
 
 def _chunk_files(path: str) -> list[str]:
@@ -46,21 +58,10 @@ def _read_chunk(path: str):
     # source took the same turn) — the old `to_pylist` + `zip` spelling
     # materialized and pickled every row through Python objects, the
     # guide §4 row-at-a-time tax, here paid on the DRIVER (the simple
-    # reader's documented control-plane trade-off).  Types are cast to
-    # the declared DDL so the Arrow schema matches exactly.
-    import pyarrow as pa
+    # reader's documented control-plane trade-off).
     import pyarrow.parquet as pq
 
-    target = pa.schema(
-        [
-            pa.field("event_id", pa.int64()),
-            pa.field("user_id", pa.int64()),
-            pa.field("event_type", pa.string()),
-            pa.field("value", pa.float64()),
-            pa.field("ts_us", pa.int64()),
-        ]
-    )
-    return pq.read_table(path, columns=_COLS).cast(target).to_batches()
+    return pq.read_table(path, columns=_COLS).cast(EVENTS_ARROW_SCHEMA).to_batches()
 
 
 class EventsReplayStreamSource(DataSource):

@@ -3,23 +3,21 @@
 
 Fast-by-default split (VERDICT r13 item 2: the full 410-query sweep
 plus the rest of the suite outruns the driver's verify window): the
-default run (`-m "not slow"`, pytest.ini) keeps the 50 names of the
-round's _PRIORITY correctness window — exactly the names the driver
-will gate on — and marks the remaining ~360 `slow`.  The builder's
-pre-commit gate runs the FULL suite (`-m ""`); the rotation rule
-guarantees every name re-enters the fast set at least every ~9 rounds.
+default run (`-m "not slow"`, pytest.ini) keeps the round's correctness
+window — the first 50 names of ``Q.witness_order`` over the
+CORRECTNESS_r*.json ledgers, exactly the names the round is gated on —
+and marks the remaining ~360 `slow`.  The builder's pre-commit gate runs
+the FULL suite (`-m ""`); oldest-witnessed-first ordering brings every
+name back into the fast set at least every ~9 rounds.
 
-Regenerating the window must not drop the names it replaces from the
-default run in the same commit, so the fast set also keeps the names
-the newest git-tracked CORRECTNESS_r*.json ledger witnessed (the
-previous window) until the next ledger is tracked.
+A new ledger moves the window, so the fast set also keeps the names the
+newest ledger witnessed (the previous window): a round boundary never
+drops the names the last round was gated on from the default run.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
-from pathlib import Path
 
 import pytest
 
@@ -27,21 +25,16 @@ from osm_changesets_to_parquet_spark import queries as Q
 from tests.oracle_utils import compare
 
 
-def _last_witnessed() -> set[str]:
-    """Names in the newest git-tracked correctness ledger."""
-    tool = Path(__file__).resolve().parent.parent / "tools" / "next_window.py"
-    spec = importlib.util.spec_from_file_location("next_window", tool)
-    nw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(nw)
-    paths = nw.ledger_paths(tracked_only=True)
-    if not paths:
-        return set()
-    with open(max(paths, key=nw._round_of)) as f:
-        return set(json.load(f))
+def _fast_set() -> set[str]:
+    """The next window plus the names in the newest ledger."""
+    ledgers = Q.ledger_paths()
+    window = Q.witness_order(Q.REGISTRY, ledgers)[:50]
+    newest = json.loads(ledgers[-1].read_text()) if ledgers else {}
+    return set(window) | set(newest)
 
 
 Q.load_all_modules()
-_WINDOW = set(Q._PRIORITY[:50]) | _last_witnessed()
+_WINDOW = _fast_set()
 ORACLE_QUERIES = sorted(
     name for name, spec in Q.REGISTRY.items() if spec.oracle is not None
 )

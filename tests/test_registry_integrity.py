@@ -14,8 +14,13 @@ from __future__ import annotations
 
 import builtins
 import dis
+import json
+import subprocess
 import sys
 import types
+from pathlib import Path
+
+import pytest
 
 
 def _load_registry():
@@ -77,86 +82,112 @@ def test_every_module_helper_resolves_all_globals():
 
 def test_registry_contract_shape():
     """Every declared query carries an oracle (zero rows-only — the
-    current contract), _PRIORITY names are real and unique, and the
-    driver window is exactly 50 names."""
+    current contract) and the correctness window is exactly 50 names."""
     Q = _load_registry()
     qs = Q.queries()
     osql = Q.oracle_sql()
     assert set(osql) == set(qs), set(qs) - set(osql)
-    from osm_changesets_to_parquet_spark.queries import _PRIORITY
-
-    assert len(_PRIORITY) == len(set(_PRIORITY)), "duplicate in _PRIORITY"
-    missing = [n for n in _PRIORITY if n not in qs]
-    assert not missing, f"_PRIORITY names not registered: {missing}"
     assert len(list(qs)[:50]) == 50
 
 
-def test_window_follows_rotation_rule():
-    """The committed _PRIORITY head must equal the standing
-    oldest-witnessed-first rotation rule's choice (VERDICT r10 item 5),
-    computed from the CORRECTNESS_r*.json ledger by
-    tools/next_window.py.  Hermeticity (VERDICT r11 item 1): the tool
-    computes the rule from git-TRACKED ledgers, and --check also
-    accepts the window implied by the full on-disk ledger — so the
-    suite stays green when the driver drops a new round's untracked
-    CORRECTNESS file after the final commit.  The window can never
-    silently drift from oldest-first: regenerating _PRIORITY when a
-    ledger is committed is enforced the moment that commit lands."""
-    import os
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(repo, "tools", "next_window.py"), "--check"],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-def test_rotation_check_survives_round_boundary_ledger_drop():
-    """Regression for VERDICT r11 item 1: the driver drops
-    CORRECTNESS_r{N}.json UNTRACKED after the builder's final commit,
-    which used to advance the rule's window past the committed
-    _PRIORITY and turn the suite red at every round boundary.  Simulate
-    the post-drop state — write an all-green ledger for a fictitious
-    future round covering the current window — and require --check to
-    still pass (the tracked-ledger rule is unchanged by an untracked
-    file)."""
-    import json
-    import os
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def test_registry_is_frozen_at_410_names():
+    """``register()`` writes into a dict, so a pasted duplicate name
+    silently replaces a query; the frozen count catches that (and any
+    new registration)."""
     Q = _load_registry()
-    window = list(Q.REGISTRY)[:50]
-    ledger = {
-        n: {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "err": None,
-        }
-        for n in window
-    }
-    fake = os.path.join(repo, "CORRECTNESS_r98.json")
-    assert not os.path.exists(fake), "fixture round number collides"
+    assert len(Q.REGISTRY) == 410
+
+
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+
+
+def _ledger(tmp_path, rnd: int, rows: dict) -> Path:
+    path = tmp_path / f"CORRECTNESS_r{rnd:02d}.json"
+    path.write_text(json.dumps(rows))
+    return path
+
+
+def test_witness_order_oldest_first_ties_by_name(tmp_path):
+    from osm_changesets_to_parquet_spark.queries import witness_order
+
+    ledgers = [
+        _ledger(tmp_path, 1, {"b": _GREEN, "c": _GREEN, "a": _GREEN}),
+        _ledger(tmp_path, 2, {"a": _GREEN}),
+    ]
+    assert witness_order(["a", "b", "c"], ledgers) == ["b", "c", "a"]
+    # ledger order does not matter: the latest green round wins
+    assert witness_order(["a", "b", "c"], ledgers[::-1]) == ["b", "c", "a"]
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"rows_match": False},
+        {"schema_match": False},
+        {"hash_match": False},
+        {"err": "AnalysisException"},
+    ],
+)
+def test_witness_order_non_green_row_is_no_witness(tmp_path, bad):
+    from osm_changesets_to_parquet_spark.queries import witness_order
+
+    ledgers = [
+        _ledger(tmp_path, 1, {"a": _GREEN, "b": _GREEN}),
+        _ledger(tmp_path, 2, {"a": _GREEN, "b": {**_GREEN, **bad}}),
+    ]
+    assert witness_order(["a", "b"], ledgers) == ["b", "a"]
+
+
+def test_witness_order_unwitnessed_name_sorts_first(tmp_path):
+    from osm_changesets_to_parquet_spark.queries import witness_order
+
+    ledgers = [_ledger(tmp_path, 1, {"a": _GREEN, "b": _GREEN})]
+    assert witness_order(["a", "b", "z"], ledgers) == ["z", "a", "b"]
+    assert witness_order(["b", "a"], []) == ["a", "b"]
+
+
+def test_new_ledger_moves_the_window(tmp_path, monkeypatch):
+    """Dropping the next round's ledger at the root reorders the
+    registry on the next load, with no source edit."""
+    Q = _load_registry()
+    monkeypatch.setattr(Q, "_LEDGER_DIR", tmp_path)
+    names = sorted(Q.REGISTRY)
+    half = len(names) // 2
+    _ledger(tmp_path, 1, {n: _GREEN for n in names})
     try:
-        with open(fake, "w") as f:
-            json.dump(ledger, f)
-        proc = subprocess.run(
-            [
-                _sys.executable,
-                os.path.join(repo, "tools", "next_window.py"),
-                "--check",
-            ],
+        Q.load_all_modules()
+        assert list(Q.REGISTRY)[:50] == names[:50]
+        _ledger(tmp_path, 2, {n: _GREEN for n in names[:half]})
+        Q.load_all_modules()
+        assert list(Q.REGISTRY)[:50] == names[half : half + 50]
+    finally:
+        monkeypatch.undo()
+        Q.load_all_modules()
+
+
+def test_window_does_not_depend_on_the_cwd(tmp_path):
+    """The correctness check imports ``__spark_entry__`` by file path
+    from another directory; the ledgers are found from the package, not
+    the cwd."""
+    repo = Path(__file__).resolve().parent.parent
+    code = (
+        "import importlib.util, sys\n"
+        "spec = importlib.util.spec_from_file_location('__spark_entry__', sys.argv[1])\n"
+        "mod = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(mod)\n"
+        "print(*list(mod.queries())[:50])\n"
+    )
+
+    def first_50(cwd):
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(repo / "__spark_entry__.py")],
+            cwd=cwd,
             capture_output=True,
             text=True,
-            cwd=repo,
         )
-        assert proc.returncode == 0, proc.stdout + proc.stderr
-    finally:
-        os.remove(fake)
+        assert out.returncode == 0, out.stderr
+        return out.stdout.split()
+
+    from_tmp = first_50(tmp_path)
+    assert len(from_tmp) == 50
+    assert from_tmp == first_50(repo)

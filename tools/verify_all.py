@@ -15,8 +15,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from osm_changesets_to_parquet_spark.session import get_spark  # noqa: E402
 from tests.oracle_utils import compare_frames, fetch_frames  # noqa: E402
