@@ -21,9 +21,19 @@ Scale notes:
   the declared queries is over integer ``ts_us`` so Spark and the
   DuckDB oracle can never disagree on a boundary (SURVEY.md §2.B
   determinism rule 4).
+- Derived stores (an ANN or LSH index, an aggregate state, a clustered
+  layout, a partitioned fact, a stream replay) are built once per
+  source table by ``table_store`` and probed by every later call.
 """
 
 from __future__ import annotations
+
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,9 +52,13 @@ TABLE_NAMES = (
 )
 
 
+def _table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, normalizing the events timestamp."""
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    path = _table_path(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
@@ -65,6 +79,55 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts_us", F.unix_micros("ts"))
         return df
     return spark.read.parquet(path)
+
+
+def table_store(
+    sf_dir: str, table: str, name: str, build: Callable[[str], None]
+) -> str:
+    """Return the dir of store ``name`` derived from ``sf_dir``'s
+    ``table``, first filling it with ``build(dir)`` unless an earlier
+    run finished it.
+
+    The dir is keyed on the table file's resolved path, size and mtime,
+    so two fixture dirs that share a name, or a table rewritten in
+    place, never share a store.  The ready marker is written only after
+    ``build`` returns and outlives the process: a torn build is redone
+    from an empty dir, a finished one is reused by every later run.
+    """
+    src = os.path.realpath(_table_path(sf_dir, table))
+    st = os.stat(src)
+    key = hashlib.sha1(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()
+    store = os.path.join(
+        tempfile.gettempdir(),
+        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}_{key[:12]}",
+    )
+    done = os.path.join(store, "_READY")
+    if not os.path.exists(done):
+        shutil.rmtree(store, ignore_errors=True)
+        os.makedirs(store)
+        build(store)
+        open(done, "w").close()
+    return store
+
+
+# Per-call output dirs (stream checkpoints and sinks, merge outputs) are
+# read lazily by the DataFrame a query returns, so they cannot be
+# deleted when the call ends; temp_dir registers each for process-exit
+# cleanup so repeated runs do not accumulate temp-dir residue.
+_TEMP_DIRS: list[str] = []
+
+
+@atexit.register
+def _cleanup_temp_dirs() -> None:
+    for d in _TEMP_DIRS:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh temp dir, removed at process exit."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _TEMP_DIRS.append(d)
+    return d
 
 
 def fan_out(df: DataFrame, by: str | None = None) -> DataFrame:

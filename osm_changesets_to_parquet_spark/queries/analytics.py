@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.catalog import load_table, table_store, temp_dir
 from osm_changesets_to_parquet_spark.queries import register
 
 US_PER_DAY = 86_400_000_000
@@ -336,9 +336,6 @@ FROM orders GROUP BY o_custkey ORDER BY o_custkey
     tables=("orders",),
 )
 def q154(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from osm_changesets_to_parquet_spark.operators.merge import (
         agg_state_build,
         agg_state_merge,
@@ -350,18 +347,17 @@ def q154(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = hash_bucket("o_orderkey", 100)
     history, delta = o.where(b < 90), o.where(b >= 90)
-    base = os.path.basename(os.path.normpath(sf_dir))
-    # history is aggregated ONCE per fixture (_READY marker, q142/q150
-    # discipline); every call after that is a delta-sized merge into a
-    # fresh out dir (s14 runner discipline — re-runs can't double-count)
-    state = os.path.join(tempfile.gettempdir(), f"agg_state_{base}")
-    ready = os.path.join(state, "_READY")
-    if not os.path.exists(ready):
-        agg_state_build(history, "o_custkey", "o_totalprice", state)
-        open(ready, "w").close()
-    out = tempfile.mkdtemp(prefix="agg_state_merge_")
+    # history is aggregated once per orders table; every call after
+    # that is a delta-sized merge into a fresh out dir (re-runs can't
+    # double-count), which the returned frame reads lazily
+    state = table_store(
+        sf_dir,
+        "orders",
+        "agg_state",
+        lambda d: agg_state_build(history, "o_custkey", "o_totalprice", d),
+    )
     full = agg_state_merge(
-        spark, state, delta, "o_custkey", "o_totalprice", out
+        spark, state, delta, "o_custkey", "o_totalprice", temp_dir("agg_state_merge_")
     )
     return full.select(
         "o_custkey",

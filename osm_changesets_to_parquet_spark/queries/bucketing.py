@@ -16,31 +16,27 @@ at all — bucketing is part of the beyond-reference scale surface.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.catalog import load_table, temp_dir
 from osm_changesets_to_parquet_spark.queries import register
 
 _N_BUCKETS = 8
 
 
-def _recreate_bucketed(spark: SparkSession, df: DataFrame, name: str, key: str, sf_dir: str) -> None:
-    """(Re)write ``df`` as an EXTERNAL bucketed table at a /tmp path.
+def _recreate_bucketed(spark: SparkSession, df: DataFrame, name: str, key: str) -> None:
+    """(Re)write ``df`` as an EXTERNAL bucketed table at a fresh temp path.
 
     The in-memory catalog forgets tables between sessions while their
     warehouse directories persist, so a managed ``saveAsTable`` hits
-    LOCATION_ALREADY_EXISTS on the second session.  An explicit path
-    (cleared first) plus DROP TABLE makes the write idempotent across
+    LOCATION_ALREADY_EXISTS on the second session.  A fresh explicit
+    path per call plus DROP TABLE makes the write idempotent across
     sessions — and keeps table data out of the repo's cwd warehouse.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "osm_bucketed", tag, name)
+    path = os.path.join(temp_dir("osm_bucketed_"), name)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(path, ignore_errors=True)
     (
         df.write.bucketBy(_N_BUCKETS, key)
         .sortBy(key)
@@ -74,8 +70,8 @@ def q111(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    _recreate_bucketed(spark, o, "q111_orders_b", "o_custkey", sf_dir)
-    _recreate_bucketed(spark, c, "q111_customer_b", "c_custkey", sf_dir)
+    _recreate_bucketed(spark, o, "q111_orders_b", "o_custkey")
+    _recreate_bucketed(spark, c, "q111_customer_b", "c_custkey")
     ob = spark.table("q111_orders_b")
     cb = spark.table("q111_customer_b")
     # merge hint: force SMJ without touching the session broadcast

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.catalog import load_table, table_store, temp_dir
 from osm_changesets_to_parquet_spark.queries import register
 
 # Bucket membership is delegated to operators.quality (the single
@@ -493,17 +493,13 @@ WHERE epoch_us(o_orderdate) >= {_Q159_LO} AND epoch_us(o_orderdate) < {_Q159_HI}
 )
 def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from osm_changesets_to_parquet_spark.operators.layout import (
         manifest_pruned_read,
         manifest_write,
     )
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"orders_rangeclustered_{base}")
-    ready = path + "/_READY_MANIFEST"
-    if not os.path.exists(ready):
+    def build(store: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -514,10 +510,11 @@ def q159(spark: SparkSession, sf_dir: str) -> DataFrame:
             # epoch_us uses
             F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("od_us"),
         )
-        manifest_write(o, "od_us", path, _Q159_FILES)
-        open(ready, "w").close()
+        manifest_write(o, "od_us", os.path.join(store, "data"), _Q159_FILES)
+
+    store = table_store(sf_dir, "orders", "orders_rangeclustered", build)
     df, n_read, n_total = manifest_pruned_read(
-        spark, path, "od_us", _Q159_LO, _Q159_HI
+        spark, os.path.join(store, "data"), "od_us", _Q159_LO, _Q159_HI
     )
     return df.agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -570,28 +567,27 @@ WHERE o_custkey >= {_Q163_CK_LO} AND o_custkey < {_Q163_CK_HI}
 )
 def q163(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from osm_changesets_to_parquet_spark.operators.layout import (
         manifest_pruned_read_box,
         manifest_write_zordered,
     )
 
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"orders_zordered_{base}")
-    ready = path + "/_READY_MANIFEST"
-    if not os.path.exists(ready):
+    def build(store: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
             "o_totalprice",
             F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("od_us"),
         )
-        manifest_write_zordered(o, ["o_custkey", "od_us"], path, _Q163_FILES)
-        open(ready, "w").close()
+        manifest_write_zordered(
+            o, ["o_custkey", "od_us"], os.path.join(store, "data"), _Q163_FILES
+        )
+
+    store = table_store(sf_dir, "orders", "orders_zordered", build)
     df, n_read, n_total = manifest_pruned_read_box(
         spark,
-        path,
+        os.path.join(store, "data"),
         {
             "o_custkey": (_Q163_CK_LO, _Q163_CK_HI),
             "od_us": (_Q163_D_LO, _Q163_D_HI),
@@ -636,27 +632,23 @@ GROUP BY event_type ORDER BY event_type
     tables=("events",),
 )
 def q167(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from osm_changesets_to_parquet_spark.operators.merge import targeted_delete
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    base = os.path.basename(os.path.normpath(sf_dir))
-    store = os.path.join(tempfile.gettempdir(), f"events_userbuckets_{base}")
-    ready = store + "/_READY"
-    if not os.path.exists(ready):
+
+    def build(store: str) -> None:
         (
             ev.withColumn("__pb", _bucket("user_id", 16))
             .write.partitionBy("__pb")
             .mode("overwrite")
             .parquet(store)
         )
-        open(ready, "w").close()
+
+    store = table_store(sf_dir, "events", "events_userbuckets", build)
     doomed = ev.where(_bucket("user_id") < 5).select("user_id").distinct()
-    out = tempfile.mkdtemp(prefix="events_after_delete_")
+    out = temp_dir("events_after_delete_")
     surviving = targeted_delete(spark, store, doomed, "user_id", out, n_buckets=16)
     return (
         surviving.groupBy("event_type")
@@ -795,19 +787,13 @@ FROM f GROUP BY event_type ORDER BY event_type
         "broadcast result as a DynamicPruningExpression into the fact "
         "scan's PartitionFilters — quiet-day directories are never "
         "read.  Plan shape pinned in tests/test_plans.py; the "
-        "partitioned write is one-time per fixture (_READY marker, "
-        "the q159 discipline)"
+        "partitioned write is built once per events table "
+        "(catalog.table_store)"
     ),
     tables=("events",),
 )
 def q191(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
-    base = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"events_dayparts_{base}")
-    ready = os.path.join(path, "_READY")
-    if not os.path.exists(ready):
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -818,8 +804,8 @@ def q191(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.repartition("day").write.partitionBy("day").mode(
             "overwrite"
         ).parquet(path)
-        open(ready, "w").close()
-    fact = spark.read.parquet(path)
+
+    fact = spark.read.parquet(table_store(sf_dir, "events", "events_dayparts", build))
     ev = load_table(spark, sf_dir, "events")
     hot = (
         ev.where((F.col("event_type") == "error") & (F.col("value") > 200))

@@ -23,19 +23,17 @@ scan at 100 TB).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.catalog import load_table, temp_dir
 from osm_changesets_to_parquet_spark.queries import register
 
 
-def _tmp(sf_dir: str, name: str) -> str:
-    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(tempfile.gettempdir(), "osm_fmt_roundtrip", tag, name)
+def _tmp(name: str) -> str:
+    return os.path.join(temp_dir("osm_fmt_roundtrip_"), name)
 
 
 _LINEITEM_CSV_SCHEMA = T.StructType(
@@ -68,7 +66,7 @@ def cs4(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag", "l_shipdate"
     )
-    path = _tmp(sf_dir, "lineitem_csv")
+    path = _tmp("lineitem_csv")
     li.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(_LINEITEM_CSV_SCHEMA).option("header", "true").csv(path)
     return (
@@ -114,7 +112,7 @@ def cs5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts_us", "user_id", "event_type", "value", "props"
     )
-    path = _tmp(sf_dir, "events_json")
+    path = _tmp("events_json")
     ev.write.mode("overwrite").json(path)
     back = spark.read.schema(_EVENTS_JSON_SCHEMA).json(path)
     return (
@@ -145,7 +143,7 @@ def cs5(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cs6(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    path = _tmp(sf_dir, "orders_orc")
+    path = _tmp("orders_orc")
     o.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return (
@@ -188,7 +186,7 @@ def cs8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "value", "event_type"
     )
-    root = _tmp(sf_dir, "events_evolved")
+    root = _tmp("events_evolved")
     (
         ev.where(F.col("event_id") % 2 == 0)
         .drop("event_type")
@@ -242,7 +240,7 @@ def cs12(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts_us"
     )
-    path = _tmp(sf_dir, "events_chunks_pyds")
+    path = _tmp("events_chunks_pyds")
     (
         ev.repartition(4)
         .write.format("events_chunks")

@@ -11,6 +11,7 @@ DuckDB VALUES oracle for CS0.
 from __future__ import annotations
 
 import bz2
+import hashlib
 import os
 import tempfile
 
@@ -56,36 +57,34 @@ MALFORMED_XML = (
 )
 
 
-def _fixture_dir() -> str:
+def _write_once(name: str, data: bytes) -> str:
+    """Write ``data`` to the fixture dir (once) under ``name`` with a
+    content hash before its first dot, and return the path: a changed
+    fixture constant gets a new file, and two contents written under
+    one name never share one."""
     d = os.path.join(tempfile.gettempdir(), "osm_changeset_fixtures")
-    os.makedirs(d, exist_ok=True)
-    return d
+    stem, dot, ext = name.partition(".")
+    path = os.path.join(d, f"{stem}-{hashlib.sha1(data).hexdigest()[:12]}{dot}{ext}")
+    if not os.path.exists(path):
+        os.makedirs(d, exist_ok=True)
+        tmp = path + ".tmp"
+        with open(tmp, "wb") as f:
+            f.write(data)
+        os.replace(tmp, path)
+    return path
 
 
 def write_fixture(name: str = "changesets.xml", content: str = FIXTURE_XML) -> str:
-    path = os.path.join(_fixture_dir(), name)
-    if not os.path.exists(path):
-        tmp = path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(content)
-        os.replace(tmp, path)
-    return path
+    return _write_once(name, content.encode("utf-8"))
 
 
 def write_fixture_bz2_multistream(name: str = "changesets.xml.bz2") -> str:
     """Two concatenated bzip2 streams — the planet dump is multi-stream
     (reference handles it via MultiBzDecoder, src/main.rs:431-433;
     Hadoop's BZip2Codec handles concatenated streams too)."""
-    path = os.path.join(_fixture_dir(), name)
-    if not os.path.exists(path):
-        head, _, tail = FIXTURE_XML.partition("  <changeset id=\"3\"")
-        part2 = "  <changeset id=\"3\"" + tail
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(bz2.compress(head.encode()))
-            f.write(bz2.compress(part2.encode()))
-        os.replace(tmp, path)
-    return path
+    head, _, tail = FIXTURE_XML.partition("  <changeset id=\"3\"")
+    part2 = "  <changeset id=\"3\"" + tail
+    return _write_once(name, bz2.compress(head.encode()) + bz2.compress(part2.encode()))
 
 
 def write_malformed_fixture(name: str = "malformed.xml") -> str:

@@ -15,45 +15,20 @@ and ``applyInPandasWithState`` holds one small pandas group at a time.
 One runner, ``_start_stream``, starts every stream query (checkpoint,
 state-partition pin, trigger, wait); ``_run_availablenow`` puts the
 default ``__bid=N`` parquet sink on it.  One writer, ``_replay_fixture``,
-writes and caches every chunked replay fixture.
+writes every chunked replay fixture; it and the replays derived from it
+are cached per source table by ``catalog.table_store``.
 """
 
 from __future__ import annotations
 
-import atexit
-import hashlib
 import os
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table
-
-# Every stream leaves temp dirs behind: its checkpoint, and a sink dir
-# the returned DataFrame reads lazily (so it cannot be deleted
-# eagerly).  _temp_dir registers each for process-exit cleanup so
-# repeated runs (tests, bench, verification sweeps) do not accumulate
-# unbounded /tmp residue.
-_TEMP_DIRS: list[str] = []
-
-
-def _cleanup_temp_dirs() -> None:
-    for d in _TEMP_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_temp_dirs)
-
-
-def _temp_dir(prefix: str) -> str:
-    """A fresh temp dir, removed at process exit."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    _TEMP_DIRS.append(d)
-    return d
-
+from osm_changesets_to_parquet_spark.catalog import load_table, table_store, temp_dir
 
 # 5 deterministic micro-batches: enough files to advance the watermark
 # across real batch boundaries, few enough that per-batch state-store
@@ -65,43 +40,19 @@ N_LATE_ROWS = 5
 US_PER_HOUR = 3_600_000_000
 
 
-def _cached_fixture(base: str, build) -> str:
-    """Return the fixture dir ``base``, first filling it with
-    ``build(base)`` unless an earlier run finished it (its ready marker
-    exists — the marker outlives the process, so replays are built once
-    per source table, not once per run)."""
-    done = os.path.join(base, "_READY")
-    if not os.path.exists(done):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base)
-        build(base)
-        open(done, "w").close()
-    return base
-
-
 def _replay_fixture(
     spark: SparkSession, sf_dir: str, table: str, name: str, chunk
 ) -> str:
-    """Write (once) and return a replay of ``sf_dir``'s ``table``: the
-    rows of ``chunk(table_df)``, which tags each with an int
-    ``__chunk``, become one ``NNN.parquet`` per chunk in chunk order.
-
-    The cache dir is keyed on the table file's resolved path, size and
-    mtime, so two fixture dirs that share a name (or a table rewritten
-    in place) never share a replay.
+    """Write (once, through ``catalog.table_store``) and return a replay
+    of ``sf_dir``'s ``table``: the rows of ``chunk(table_df)``, which
+    tags each with an int ``__chunk``, become one ``NNN.parquet`` per
+    chunk in chunk order.
 
     ONE dynamic-partitioned write: repartition("__chunk") puts every
     chunk's rows in exactly one task, so each __chunk=N dir receives
     exactly one parquet file.  Intra-file row order is free:
     watermarks and aggregates are batch-level, not row-order-level.
     """
-    src = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
-    st = os.stat(src)
-    key = hashlib.sha1(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"{name}_{os.path.basename(sf_dir.rstrip('/'))}_{key[:12]}",
-    )
 
     def build(base: str) -> None:
         staging = base + "_staging"
@@ -129,7 +80,7 @@ def _replay_fixture(
             os.utime(dst, (t0 + i, t0 + i))
         shutil.rmtree(staging, ignore_errors=True)
 
-    return _cached_fixture(base, build)
+    return table_store(sf_dir, table, name, build)
 
 
 def prepare_replay_dir(
@@ -233,7 +184,7 @@ def _start_stream(
     w = (
         stream_df.writeStream.outputMode(mode)
         .trigger(**trigger)
-        .option("checkpointLocation", ckpt_dir or _temp_dir("ckpt_"))
+        .option("checkpointLocation", ckpt_dir or temp_dir("ckpt_"))
     )
     w = writer(w) if writer else w.foreachBatch(body)
     conf = stream_df.sparkSession.conf
@@ -302,7 +253,7 @@ def _run_availablenow(
     built-in file sink can't accept; downstream consumers reduce by max
     ``__bid`` per key — also distributed (see the S4-S6 runners).
     """
-    out_dir = _temp_dir("stream_out_")
+    out_dir = temp_dir("stream_out_")
     _start_stream(
         stream_df, mode, body=_bid_sink(out_dir), state_partitions=state_partitions
     )
@@ -351,7 +302,10 @@ def run_s5_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(dup_dir, "999.parquet"),
         )
 
-    ev = _read_stream(spark, _cached_fixture(base + "_dup", build))
+    dup = table_store(
+        sf_dir, "events", f"events_replay_k{N_REPLAY_FILES}_ontime_dup", build
+    )
+    ev = _read_stream(spark, dup)
     dedup = ev.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(["event_id"])
     counted = dedup.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
     outs = _run_availablenow(counted, mode="update")
@@ -426,7 +380,7 @@ def _drain_python_stream_counts(
     ev = spark.readStream.format(fmt).option("path", base).load()
     agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
 
-    out_dir = _temp_dir(f"{tag}_out_")
+    out_dir = temp_dir(f"{tag}_out_")
     q = _start_stream(agg, body=_bid_sink(out_dir), processing_time="0 seconds")
     try:
         deadline = time.time() + 120
@@ -484,7 +438,12 @@ def prepare_partitioned_replay_dir(
             per_rg = max(1, -(-t.num_rows // max(1, row_groups_per_chunk)))
             pq.write_table(t, os.path.join(base, f), row_group_size=per_rg)
 
-    return _cached_fixture(src.rstrip("/") + f"_rg{row_groups_per_chunk}", build)
+    return table_store(
+        sf_dir,
+        "events",
+        f"events_replay_k{N_REPLAY_FILES}_ontime_rg{row_groups_per_chunk}",
+        build,
+    )
 
 
 def run_s13_partitioned_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,7 +683,7 @@ def run_s10_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     why real deployments batch minutes of CDC, bucket the base table on
     the merge key (q111), or graduate to a format with merge-on-read.
     """
-    base_root = _temp_dir("stream_merge_base_")
+    base_root = temp_dir("stream_merge_base_")
     ev = _read_stream(spark, prepare_replay_dir(spark, sf_dir, late=False))
 
     from osm_changesets_to_parquet_spark.operators.merge import merge_upsert
@@ -824,8 +783,8 @@ def run_s14_streaming_neardup(
     from osm_changesets_to_parquet_spark.operators import dedup as D
 
     base = prepare_docs_replay_dir(spark, sf_dir)
-    idx = _temp_dir("s14_idx_")
-    out_dir = _temp_dir("s14_pairs_")
+    idx = temp_dir("s14_idx_")
+    out_dir = temp_dir("s14_pairs_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         has_index = _glob.glob(
@@ -873,7 +832,7 @@ def run_s15_streaming_quality_router(spark: SparkSession, sf_dir: str) -> DataFr
     from osm_changesets_to_parquet_spark.operators.text import quality_score
 
     base = prepare_docs_replay_dir(spark, sf_dir)
-    out_dir = _temp_dir("s15_routed_")
+    out_dir = temp_dir("s15_routed_")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         scored = quality_score(batch_df)
@@ -1189,7 +1148,7 @@ def run_s20_python_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _read_stream(spark, base).select(
         "event_id", "user_id", "event_type", "value", "ts_us"
     )
-    out = _temp_dir("s20_sink_")  # fresh epoch set per run
+    out = temp_dir("s20_sink_")  # fresh epoch set per run
     _start_stream(
         stream,
         "append",
@@ -1340,8 +1299,8 @@ def run_s23_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-tolerance.
     """
     base = prepare_replay_dir(spark, sf_dir)
-    out_dir = _temp_dir("s23_out_")
-    ckpt_dir = _temp_dir("s23_ckpt_")
+    out_dir = temp_dir("s23_out_")
+    ckpt_dir = temp_dir("s23_ckpt_")
     # '_'-prefixed: invisible to the parquet reader's file listing
     crash_marker = os.path.join(out_dir, "_CRASHED")
 

@@ -28,6 +28,13 @@ def _rows(df):
     return {r["id"]: r.asDict() for r in df.collect()}
 
 
+def test_fixture_files_are_keyed_on_content():
+    docs = ["<osm/>\n", "<osm></osm>\n"]
+    paths = [fixtures.write_fixture("keyed.xml", d) for d in docs]
+    assert paths[0] != paths[1]
+    assert [Path(p).read_text(encoding="utf-8") for p in paths] == docs
+
+
 def test_fixture_edge_cases(spark):
     df = read_changesets_xml(spark, fixtures.write_fixture())
     validate_schema(df)
