@@ -68,6 +68,59 @@ def copurchase_pairs(
     return pairs.select(*cols)
 
 
+def oriented_triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Degree-oriented triangle listing over an undirected edge list
+    ``(u, v)``, deduplicated with ``u < v``.  Returns ``(deg, tri)``:
+    ``deg`` is ``(n, d)``, the degree of every node; ``tri`` is
+    ``(s, t, w)``, one row per oriented edge ``s -> t`` with ``w`` the
+    third vertices closing a triangle on it.
+
+    Degree orientation (Suri & Vassilvitskii 2011): every edge points
+    from its endpoint with the smaller ``(degree, id)`` to the larger,
+    which bounds out-degree by O(sqrt(m)) even when a hub's raw degree
+    is O(n).  Each oriented edge then intersects the out-adjacency
+    arrays of its endpoints in-row, so every triangle ``{s, t, x}``
+    appears exactly once, in ``w`` of the oriented edge between its two
+    order-minimal vertices, and nothing is materialized at wedge
+    cardinality.  Degree and orientation are each cut once, because
+    both feed two joins.
+    """
+    deg = truncate_lineage(
+        edges.select(F.col("u").alias("n"))
+        .unionAll(edges.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("d_u"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("d_v"))
+    u_first = (F.col("d_u") < F.col("d_v")) | (
+        (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
+    )
+    o = truncate_lineage(
+        edges.join(F.broadcast(du), "u")
+        .join(dv, "v")
+        .select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
+        )
+    )
+    adj = o.groupBy("s").agg(F.collect_list("t").alias("ns"))
+    adj_t = adj.select(F.col("s").alias("t"), F.col("ns").alias("nt"))
+    # LEFT join on t: an orientation sink (out-degree 0) has no adj row
+    tri = (
+        o.join(F.broadcast(adj), "s")
+        .join(F.broadcast(adj_t), "t", "left")
+        .select(
+            "s",
+            "t",
+            F.array_intersect(
+                "ns", F.coalesce("nt", F.array().cast("array<long>"))
+            ).alias("w"),
+        )
+    )
+    return deg, tri
+
+
 def triangle_count(
     edges: DataFrame,
     src_col: str = "src",
@@ -76,50 +129,21 @@ def triangle_count(
     """Count triangles of the undirected graph; returns one row
     ``(n_triangles: long)``.
 
-    The scale-critical trick is degree ordering (Cohen / Suri-Vassilvitskii
-    MapReduce triangle counting): orient every edge from the endpoint
-    with the smaller ``(degree, id)`` to the larger, then count wedges
-    ``u->v, u->w`` closed by an oriented edge ``v->w``.  Each triangle
-    is found exactly once (from its order-minimal vertex), and — the
-    100 TB point — the wedge join fans out per-node by *out*-degree,
-    which the orientation bounds at O(sqrt(m)) even when a hub's raw
-    degree is O(n).  A naive orientation by id alone leaves a
-    low-id hub with O(n) out-degree and an O(n^2) wedge stage.
-
-    Three shuffles: degree agg, wedge self-join on the apex, closing
-    semi-join on (v, w).  All keyed DataFrame ops; no driver-side graph.
+    Edges may come in either direction, repeated or as self-loops:
+    they are normalized to distinct ``u < v`` pairs, and the count is
+    ``SUM(size(w))`` over :func:`oriented_triangles`, which finds each
+    triangle exactly once.  All keyed DataFrame ops; no driver-side
+    graph.
     """
     und = (
         edges.select(F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b"))
         .where(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
+        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
         .distinct()
     )
-    sym = und.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-        und.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-    )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    ranked = (
-        sym.join(deg.withColumnRenamed("u", "u_").withColumnRenamed("deg", "du"), F.col("u") == F.col("u_"))
-        .drop("u_")
-        .join(deg.withColumnRenamed("u", "v_").withColumnRenamed("deg", "dv"), F.col("v") == F.col("v_"))
-        .drop("v_")
-    )
-    # orient small (deg, id) -> large (deg, id); exactly one direction kept
-    oriented = ranked.where(
-        (F.col("du") < F.col("dv")) | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    ).select("u", "v")
-    e1 = oriented.alias("e1")
-    e2 = oriented.alias("e2")
-    wedges = e1.join(e2, F.col("e1.u") == F.col("e2.u")).where(
-        F.col("e1.v") != F.col("e2.v")
-    ).select(F.col("e1.v").alias("x"), F.col("e2.v").alias("y"))
-    closing = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    # each triangle appears as both (x,y) and (y,x) wedges but only one
-    # matches the oriented closing edge -> exact count, no halving
-    return (
-        wedges.join(closing, ["x", "y"], "left_semi")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    _, tri = oriented_triangles(und)
+    return tri.agg(
+        F.coalesce(F.sum(F.size("w")), F.lit(0)).cast("long").alias("n_triangles")
     )
 
 

@@ -25,6 +25,7 @@ from osm_changesets_to_parquet_spark.catalog import load_table
 from osm_changesets_to_parquet_spark.operators.graph import (
     copurchase_pairs,
     k_core,
+    oriented_triangles,
     pagerank,
 )
 from osm_changesets_to_parquet_spark.queries import register
@@ -134,10 +135,11 @@ FROM e ab JOIN e bc ON ab.y = bc.x JOIN e ac ON ac.x = ab.x AND ac.y = bc.y
     _Q107_SQL,
     doc=(
         "triangle count of the bulk co-supply graph via degree-ordered "
-        "orientation (each triangle counted once from its order-minimal "
-        "vertex; wedge fan-out bounded O(sqrt(m)) per node regardless of "
-        "hub degree) — the oracle counts the same triangles by canonical "
-        "id-ordered 3-way self-join"
+        "orientation (operators.graph.oriented_triangles: out-degree "
+        "bounded O(sqrt(m)) regardless of hub degree, each triangle "
+        "found once as an in-row intersection of out-adjacency arrays) "
+        "— the oracle counts the same triangles by canonical id-ordered "
+        "3-way self-join"
     ),
     tables=("lineitem",),
 )
@@ -288,78 +290,32 @@ SELECT (SELECT CAST(COUNT(DISTINCT n) AS BIGINT) FROM deg) AS n_nodes,
         "O(sqrt(m)) — the hub whose naive wedge count is deg² "
         "contributes almost none as a source; each triangle is "
         "counted exactly once (at its source-top oriented edge) as "
-        "size(array_intersect(outadj(s), outadj(t))) summed over "
-        "oriented edges — the in-row intersection replaces the "
-        "pre-r14 41M-row wedge join + semi-join, nothing materialized "
-        "at wedge cardinality (the q308 discipline)"
+        "the size of the in-row intersection of outadj(s) and "
+        "outadj(t) summed over oriented edges "
+        "(operators.graph.oriented_triangles), nothing materialized "
+        "at wedge cardinality"
     ),
     tables=("lineitem",),
 )
 def q218(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14 respell — the q308 playbook applied to the pure count: the
-    # pre-r14 plan materialized 41M oriented wedges through a
-    # SortMergeJoin and semi-joined them against the edge set; now the
-    # oriented out-adjacency collects to one array per node (out-degree
-    # O(sqrt m) by the degree orientation — hub-safe) and the triangle
-    # count is SUM(size(array_intersect(adj(s), adj(t)))) over the
-    # oriented edges — each triangle counted exactly once at its
-    # source-top edge, nothing materialized at wedge cardinality, no
-    # explode at all.  The build expands pairs-per-order in-row from
-    # one collect_set per order (the q323/q308 build respell).
     from osm_changesets_to_parquet_spark.operators.iterutils import (
         truncate_lineage,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    per_order = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    e = truncate_lineage(
-        per_order.select(F.explode("ps").alias("u"), "ps")
-        .select(
-            "u",
-            F.explode(F.filter("ps", lambda y: y > F.col("u"))).alias("v"),
-        )
-        .distinct()
-    )
-    deg = truncate_lineage(
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("d_u"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("d_v"))
-    u_first = (F.col("d_u") < F.col("d_v")) | (
-        (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
-    )
-    o = truncate_lineage(
-        e.join(F.broadcast(du), "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    adj = o.groupBy("s").agg(F.collect_list("t").alias("ns"))
-    adj_t = adj.select(F.col("s").alias("t"), F.col("ns").alias("nt"))
-    # LEFT join on t: an orientation sink (out-degree 0) has no adj row
-    tri = (
-        o.join(F.broadcast(adj), "s")
-        .join(F.broadcast(adj_t), "t", "left")
-        .select(
-            F.size(
-                F.array_intersect(
-                    "ns", F.coalesce("nt", F.array().cast("array<long>"))
-                )
-            ).alias("c")
-        )
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
-    )
+    # the edge list feeds degree, orientation and the edge count
+    e = truncate_lineage(copurchase_pairs(li, min_orders=1))
+    deg, tri = oriented_triangles(e)
     return (
         deg.agg(F.count(F.lit(1)).alias("n_nodes"))
         .crossJoin(e.agg(F.count(F.lit(1)).alias("n_edges")))
-        .crossJoin(tri)
+        .crossJoin(
+            tri.agg(
+                F.coalesce(F.sum(F.size("w")), F.lit(0))
+                .cast("long")
+                .alias("n_triangles")
+            )
+        )
     )
 
 
@@ -645,8 +601,8 @@ def q258(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q308_TOPK = 20
 
 # oracle: independent spelling — common neighbors via the symmetrized
-# adjacency self-join (the engine goes through oriented wedges; the
-# two agree exactly, which is the point)
+# adjacency self-join (the engine intersects oriented out-adjacency
+# arrays; the two agree exactly, which is the point)
 _Q308_SQL = f"""
 WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 e AS (
@@ -680,13 +636,12 @@ ORDER BY top.tri DESC, top.u, top.v
         "Jaccard — the tie-strength metric of Granovetter-style graph "
         "curation, and the standard edge feature for link prediction): "
         "degree-oriented adjacency-array intersection — each oriented "
-        "edge (s,t) finds its triangles in-row as "
-        "array_intersect(outadj(s), outadj(t)) (out-degree of a "
-        "degree-oriented graph is O(sqrt m), so the arrays are "
-        "hub-safe), then every triangle credits its three undirected "
-        "edges; nothing is materialized at wedge cardinality (the "
-        "pre-r14 plan shuffled 41M wedge rows through a sort-merge "
-        "join).  The oracle counts common neighbors through the "
+        "edge (s,t) finds its triangles in-row as the intersection of "
+        "outadj(s) and outadj(t) (operators.graph.oriented_triangles; "
+        "out-degree of a degree-oriented graph is O(sqrt m), so the "
+        "arrays are hub-safe), then every triangle credits its three "
+        "undirected edges; nothing is materialized at wedge "
+        "cardinality.  The oracle counts common neighbors through the "
         "symmetrized adjacency self-join (an independent spelling).  "
         "Jaccard = tri/(deg_u + deg_v - 2 - tri) composed from "
         "integers, ROUND 6; top-k is TakeOrdered with a total "
@@ -695,80 +650,19 @@ ORDER BY top.tri DESC, top.u, top.v
     tables=("lineitem",),
 )
 def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14 respell (guide §3 / VERDICT r13 item 4): the r13 plan closed
-    # wedges with a 41M-row SortMergeJoin (oriented wedges against the
-    # undirected edge set) and recomputed the degree aggregate FOUR
-    # times (it was never materialized, so every du_/dv_ consumer
-    # re-aggregated 2.4M adjacency rows).  Now: degree and orientation
-    # are checkpointed once; the oriented OUT-adjacency is collected to
-    # one array per node (max out-degree of a degree-oriented graph is
-    # O(sqrt(m)) — 97 at sf0.1 — so arrays are hub-safe by
-    # construction) and each oriented edge (s,t) finds its triangles
-    # IN-ROW as array_intersect(adj(s), adj(t)): every triangle
-    # {s,t,w} with source s appears exactly once, at its (s,t) edge.
-    # Work per edge is |adj(s)|+|adj(t)| hash ops inside codegen —
-    # total ~sum od^2 ~ the old wedge count — but NOTHING is
-    # materialized or shuffled at wedge cardinality: the only exploded
-    # stream is 2 rows per TRIANGLE (3.8M at sf0.1 vs the 41M-row
-    # wedge join).  The adjacency map (20k rows, <=97 longs each,
-    # ~16 MB) broadcasts; at a scale where it cannot, the same plan
-    # runs with shuffle-hash joins on s/t — the win (no wedge
-    # materialization) is join-strategy independent.
+    # Triangles come from operators.graph.oriented_triangles: each
+    # oriented edge (s,t) carries w, the in-row intersection of the
+    # out-adjacency arrays of s and t, so the only exploded stream is
+    # 2 rows per TRIANGLE (3.8M at sf0.1) and nothing is materialized
+    # at wedge cardinality.
     from osm_changesets_to_parquet_spark.operators.iterutils import (
         truncate_lineage,
     )
 
     li = load_table(spark, sf_dir, "lineitem")
-    # pairs-per-order expanded IN-ROW from one collect_set per order
-    # (the q323 build respell): one shuffle replaces the old
-    # inc-distinct + 3M-row self-join.  The edge list feeds degree,
-    # orientation AND the final top-k join — materialize once.
-    per_order = li.groupBy("l_orderkey").agg(
-        F.collect_set("l_partkey").alias("ps")
-    )
-    e = truncate_lineage(
-        per_order.select(F.explode("ps").alias("u"), "ps")
-        .select(
-            "u",
-            F.explode(F.filter("ps", lambda y: y > F.col("u"))).alias("v"),
-        )
-        .distinct()
-    )
-    deg = truncate_lineage(
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    du_ = deg.select(F.col("n").alias("u"), F.col("d").alias("d_u"))
-    dv_ = deg.select(F.col("n").alias("v"), F.col("d").alias("d_v"))
-    u_first = (F.col("d_u") < F.col("d_v")) | (
-        (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
-    )
-    o = truncate_lineage(
-        e.join(F.broadcast(du_), "u")
-        .join(dv_, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    adj = o.groupBy("s").agg(F.collect_list("t").alias("ns"))
-    adj_t = adj.select(F.col("s").alias("t"), F.col("ns").alias("nt"))
-    # LEFT join on t: an orientation SINK (out-degree 0) has no adj
-    # row; its edges still carry adj(s) and simply intersect empty
-    ed = (
-        o.join(F.broadcast(adj), "s")
-        .join(F.broadcast(adj_t), "t", "left")
-        .select(
-            "s",
-            "t",
-            F.array_intersect(
-                "ns", F.coalesce("nt", F.array().cast("array<long>"))
-            ).alias("w"),
-        )
-        .where(F.size("w") > 0)
-    )
+    e = truncate_lineage(copurchase_pairs(li, min_orders=1))
+    deg, tri = oriented_triangles(e)
+    ed = tri.where(F.size("w") > 0)
     # each triangle {s,t,w} contributes 1 to ALL THREE of its edges:
     # (s,t) takes |w| in-row, (s,w)/(t,w) via a 2-rows-per-triangle
     # explode — each aggregated as an explicit count so one groupBy
@@ -802,9 +696,11 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("c").cast("long").alias("tri"))
     )
     top = per_edge.orderBy(F.col("tri").desc(), "u", "v").limit(_Q308_TOPK)
+    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
     return (
-        top.join(F.broadcast(du_.withColumnRenamed("d_u", "du")), "u")
-        .join(dv_.withColumnRenamed("d_v", "dv"), "v")
+        top.join(F.broadcast(du), "u")
+        .join(dv, "v")
         .select(
             "u",
             "v",
@@ -1192,8 +1088,9 @@ def q331(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FIXED number of seeds regardless of corpus size, the q179 lesson),
 # so the expansion cost is bounded by k * max_deg^2 candidate rows,
 # never corpus-shaped; a full all-pairs 2-hop census on this graph
-# would shuffle the squared wedge volume (q218 measures 41M oriented
-# wedges at sf0.1) for no extra operator coverage.
+# would shuffle the squared wedge volume (41M oriented wedges at
+# sf0.1, the count q218 avoids materializing) for no extra operator
+# coverage.
 _Q333_K = 16
 
 
@@ -1244,8 +1141,8 @@ ORDER BY s.seed
         "expansion is bounded by k*max_deg^2 rows because the seed "
         "panel is FIXED-k (operators/anchors, the q179 discipline), "
         "never corpus-proportional; an all-pairs 2-hop census would "
-        "shuffle the squared wedge volume q218 measures at 41M for "
-        "this graph"
+        "shuffle the squared wedge volume (41M oriented wedges at "
+        "sf0.1) for this graph"
     ),
     tables=("lineitem",),
 )

@@ -187,20 +187,34 @@ def test_connected_components_diameter_equals_max_iters_converges(spark, monkeyp
 def test_triangle_count_matches_brute_force(spark, pairs):
     from itertools import combinations
 
-    from osm_changesets_to_parquet_spark.operators.graph import triangle_count
+    from osm_changesets_to_parquet_spark.operators.graph import (
+        oriented_triangles,
+        triangle_count,
+    )
 
     edge_set = {tuple(sorted(p)) for p in pairs}
     nodes = sorted({x for e in edge_set for x in e})
-    want = sum(
-        1
+    want = sorted(
+        (a, b, c)
         for a, b, c in combinations(nodes, 3)
         if {(a, b), (a, c), (b, c)} <= edge_set
     )
-    df = spark.createDataFrame(
-        [(a, b) for a, b in edge_set] or [(0, 0)], "src long, dst long"
-    )
+    # triangle_count normalizes its input: every edge in both
+    # directions, one duplicate and one self-loop count nothing extra
+    raw = [p for a, b in edge_set for p in ((a, b), (b, a))]
+    raw += raw[:1] + [(0, 0)]
+    df = spark.createDataFrame(raw, "src long, dst long")
     got = triangle_count(df).collect()[0].n_triangles
-    assert got == want
+    assert got == len(want)
+    # the primitive lists every triangle exactly once, as (s, t, x in w)
+    edges = spark.createDataFrame(sorted(edge_set), "u long, v long")
+    deg, tri = oriented_triangles(edges)
+    listed = sorted(
+        tuple(sorted((r.s, r.t, x))) for r in tri.collect() for x in r.w
+    )
+    assert listed == want
+    want_deg = {n: sum(n in e for e in edge_set) for n in nodes}
+    assert {r.n: r.d for r in deg.collect()} == want_deg
 
 
 def test_connected_components_one_action_per_iteration(spark, monkeypatch):

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pytest
+
 from osm_changesets_to_parquet_spark import queries as Q
 
 Q.load_all_modules()
@@ -22,7 +24,7 @@ Q.load_all_modules()
 # Lines of the package that force a join strategy with ``F.broadcast(``.
 # Every remaining hint changes an sf0.1 plan when removed; the rest were
 # deleted because Spark's size-based selection already picks the same plan.
-_BROADCAST_HINT_LINES = 67
+_BROADCAST_HINT_LINES = 64
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -356,12 +358,19 @@ def test_q109_bm25_take_ordered_no_token_explode_shuffle(spark, sf_dir):
     assert "BroadcastExchange" in plan
 
 
-def test_q107_triangle_orientation_halves_edges(spark, sf_dir):
-    # degree-ordered orientation means the wedge join's build/stream
-    # sides are the oriented (halved) edge set, not the symmetric one;
-    # the closing join is a LeftSemi
-    plan = _plan(spark, sf_dir, "q107_triangle_count")
-    assert "LeftSemi" in plan
+@pytest.mark.parametrize(
+    "name",
+    ["q107_triangle_count", "q218_triangle_count", "q308_edge_embeddedness"],
+)
+def test_triangles_close_in_row(spark, sf_dir, name):
+    # every triangle query goes through operators.graph.oriented_triangles:
+    # triangles close as an in-row intersection of oriented out-adjacency
+    # arrays, never through a wedge self-join closed by a semi-join, and
+    # no data join degrades to a cartesian product
+    plan = _plan(spark, sf_dir, name)
+    assert "array_intersect" in plan
+    assert "LeftSemi" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_q110_single_scan_band_bucket_aggregation(spark, sf_dir):
@@ -733,20 +742,6 @@ def test_q216_bloom_bits_broadcast(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q216_bloom_antijoin")
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_q218_triangle_joins_all_equi(spark, sf_dir):
-    # degree orientation + the undirected-key wedge close must keep
-    # every DATA join an equi-join — a nested-loop close defeats the
-    # O(sqrt m) wedge bound.  (The only nested-loop joins allowed are
-    # the final 1-row count combiners — broadcast scalar cross joins.)
-    plan = _plan(spark, sf_dir, "q218_triangle_count")
-    assert "CartesianProduct" not in plan
-    for line in plan.splitlines():
-        if "BroadcastNestedLoopJoin" in line:
-            assert "Cross" in line, line  # 1-row scalar combiner only
-        if "LeftSemi" in line:  # the wedge close: must be an equi-join
-            assert "SortMergeJoin" in line or "BroadcastHashJoin" in line, line
 
 
 def test_q226_lateral_decorrelates_to_rank_join(spark, sf_dir):

@@ -113,9 +113,11 @@ def test_ks_statistic_matches_brute_force(spark):
     assert abs(got - ks_want) < 1e-12
 
 
-def test_triangle_count_matches_brute_force(spark):
-    # degree-oriented wedge counting == brute-force triple enumeration
-    # on a random graph
+def test_triangle_count_random_graph_matches_triple_enumeration(spark):
+    # operators.graph.triangle_count (q107's engine path) == brute-force
+    # triple enumeration on a random graph
+    from osm_changesets_to_parquet_spark.operators.graph import triangle_count
+
     rng = random.Random(17)
     nodes = list(range(12))
     edges = sorted(
@@ -132,34 +134,8 @@ def test_triangle_count_matches_brute_force(spark):
         for c in nodes
         if c > b and (a, c) in set(edges) and (b, c) in set(edges)
     )
-    e = spark.createDataFrame(edges, "u long, v long")
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("d_u"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("d_v"))
-    u_first = (F.col("d_u") < F.col("d_v")) | (
-        (F.col("d_u") == F.col("d_v")) & (F.col("u") < F.col("v"))
-    )
-    o = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    oa = o.select(F.col("s").alias("ws"), F.col("t").alias("x"))
-    ob = o.select(F.col("s").alias("ws"), F.col("t").alias("y"))
-    wedge = oa.join(ob, "ws").where(F.col("x") < F.col("y")).select("x", "y")
-    undirected = o.select(
-        F.least("s", "t").alias("x"), F.greatest("s", "t").alias("y")
-    )
-    got = wedge.join(undirected, ["x", "y"], "semi").count()
-    assert got == want
+    e = spark.createDataFrame(edges, "src long, dst long")
+    assert triangle_count(e).collect()[0].n_triangles == want
 
 
 def test_kaplan_meier_matches_product_brute_force(spark, sf_dir):
