@@ -19,6 +19,10 @@ Two paths behind one API:
 UDF for the broadcast-centroid argmin (numpy matmul per batch) — the
 only Python in this module, and it touches k×dim floats per batch,
 never the corpus pairwise.
+
+:func:`pq_adc` is the product-quantization path (q243, q264, q268):
+integer milli-unit vectors (:func:`milli_quantize`), hash-anchor
+codebooks, and ADC scoring through a broadcast lookup table.
 """
 
 from __future__ import annotations
@@ -34,7 +38,12 @@ from pyspark.sql.window import Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
+from osm_changesets_to_parquet_spark.operators.anchors import (
+    ANCHOR_MOD,
+    fixed_k_anchors,
+)
 from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
+from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
 
 
 def _dot(a, b):
@@ -446,6 +455,103 @@ def ivf_topk(
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
     )
+
+
+# ---------------------------------------------------------------------------
+# Product quantization + asymmetric distance computation (PQ-ADC)
+# ---------------------------------------------------------------------------
+
+
+def milli_quantize(emb: DataFrame, *keep: str) -> DataFrame:
+    """One row per vector component, ``(vec_id, *keep, pos, q)``: ``pos``
+    is 1-based and ``q`` the component in integer milli-units.  The
+    integer contract with the oracle's ``CAST(ROUND(x * 1000) AS
+    BIGINT)`` (both round half away from zero), so every distance and
+    dot product downstream is exact integer arithmetic."""
+    return emb.select(
+        "vec_id", *keep, F.posexplode("embedding").alias("pos0", "v")
+    ).select(
+        "vec_id",
+        *keep,
+        (F.col("pos0") + 1).alias("pos"),
+        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
+    )
+
+
+def pq_adc(
+    emb: DataFrame, sub: int, k: int, nq: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Product quantization with ADC scoring (Jégou et al., PAMI 2011)
+    over ``emb`` ``(vec_id, embedding)``.  Returns ``(qpanel, adc,
+    exact)``: ``qpanel`` is ``(qid)``, and ``adc`` ``(qid, vec_id,
+    adc_d)`` and ``exact`` ``(qid, vec_id, ex_d)`` score every vector,
+    queries included, against every query.
+
+    The panel is the ``k + nq`` fixed-k hash anchors: the first ``k``
+    seed every ``sub``-dim subspace codebook (code ``j`` = hash rank),
+    the next ``nq`` are the queries.  Vectors are milli-quantized, so
+    all distances are exact integer squared L2.  Encode is the argmin
+    over the ``k`` broadcast centroids per subspace (ties to the lower
+    ``j``); the ``(qid, m, j)`` lookup table then broadcasts onto the
+    ``n * M`` code table, so scoring touches codes, never vectors.
+    """
+    panel = fixed_k_anchors(emb, "vec_id", k + nq)
+    wp = Window.orderBy(hash_bucket("vec_id", ANCHOR_MOD), F.col("vec_id"))
+    ranked = panel.withColumn("rk", F.row_number().over(wp))
+    # quant feeds the codebook, encode, LUT and exact branches: cut
+    # lineage once so the posexplode over embeddings runs a single
+    # time instead of per consumer
+    quant = truncate_lineage(
+        milli_quantize(emb).select(
+            "vec_id",
+            ((F.col("pos") - 1) / sub).cast("long").alias("m"),
+            "pos",
+            "q",
+        )
+    )
+    cb = (
+        ranked.where(F.col("rk") <= k)
+        .select("vec_id", F.col("rk").alias("j"))
+        .join(quant, "vec_id")
+        .select("j", "m", "pos", F.col("q").alias("cq"))
+    )
+    diff = F.col("q") - F.col("cq")
+    enc_d = (
+        quant.join(F.broadcast(cb), ["m", "pos"])
+        .groupBy("vec_id", "m", "j")
+        .agg(F.sum(diff * diff).alias("d"))
+    )
+    w_code = Window.partitionBy("vec_id", "m").orderBy("d", "j")
+    codes = (
+        enc_d.withColumn("rn", F.row_number().over(w_code))
+        .where(F.col("rn") == 1)
+        .select("vec_id", "m", F.col("j").alias("code"))
+    )
+    qpanel = ranked.where(F.col("rk") > k).select(F.col("vec_id").alias("qid"))
+    lut = (
+        qpanel.join(quant, F.col("qid") == F.col("vec_id"))
+        .drop("vec_id")
+        .join(F.broadcast(cb), ["m", "pos"])
+        .groupBy("qid", "m", "j")
+        .agg(F.sum(diff * diff).alias("qd"))
+    )
+    adc = (
+        codes.join(
+            F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"]
+        )
+        .groupBy("qid", "vec_id")
+        .agg(F.sum("qd").alias("adc_d"))
+    )
+    qquant = qpanel.join(
+        quant.select(F.col("vec_id").alias("qid"), "pos", F.col("q").alias("qq")),
+        "qid",
+    )
+    exact = (
+        quant.join(F.broadcast(qquant), "pos")
+        .groupBy("qid", "vec_id")
+        .agg(F.sum((F.col("qq") - F.col("q")) * (F.col("qq") - F.col("q"))).alias("ex_d"))
+    )
+    return qpanel, adc, exact
 
 
 # ---------------------------------------------------------------------------

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table, table_store
 from osm_changesets_to_parquet_spark.operators.anchors import (
+    per_anchor_topk,
     sql_anchor_order as _sql_anchor_order,
 )
 from osm_changesets_to_parquet_spark.operators.similarity import (
@@ -27,6 +28,7 @@ from osm_changesets_to_parquet_spark.operators.similarity import (
     ivf_build,
     ivf_topk,
     lsh_topk,
+    pq_adc,
 )
 from osm_changesets_to_parquet_spark.queries import FixtureGateError, register
 
@@ -618,12 +620,13 @@ _Q243_NQ = 8         # query panel size (hash ranks 17..24)
 _Q243_TOPK = 10
 
 
-_Q243_SQL = f"""
-WITH ranked AS (
-  SELECT vec_id, embedding,
-         ROW_NUMBER() OVER (ORDER BY {{anchor_key}}, vec_id) AS rk
+# ranked through exact: the oracle spelling of operators.similarity.pq_adc,
+# shared by q243, q264 and q268 (no self-hit exclusion here)
+_PQ_CTES = f"""ranked AS (
+  SELECT vec_id,
+         ROW_NUMBER() OVER (ORDER BY {_sql_anchor_order("vec_id")}, vec_id) AS rk
   FROM embeddings
-  ORDER BY {{anchor_key}}, vec_id LIMIT {_Q243_K + _Q243_NQ}
+  ORDER BY {_sql_anchor_order("vec_id")}, vec_id LIMIT {_Q243_K + _Q243_NQ}
 ),
 quant AS (
   SELECT vec_id,
@@ -673,7 +676,11 @@ exact AS (
   JOIN quant qv ON qv.vec_id = p.qid
   JOIN quant v ON v.pos = qv.pos
   GROUP BY p.qid, v.vec_id
-),
+)"""
+
+
+_Q243_SQL = f"""
+WITH {_PQ_CTES},
 adc_top AS (
   SELECT qid, vec_id, rn FROM (
     SELECT qid, vec_id,
@@ -694,9 +701,6 @@ FROM adc_top a
 LEFT JOIN ex_top e ON e.qid = a.qid AND e.vec_id = a.vec_id
 GROUP BY a.qid ORDER BY a.qid
 """
-
-
-_Q243_SQL = _Q243_SQL.format(anchor_key=_sql_anchor_order("vec_id"))
 
 
 @register(
@@ -722,83 +726,8 @@ _Q243_SQL = _Q243_SQL.format(anchor_key=_sql_anchor_order("vec_id"))
     tables=("embeddings",),
 )
 def q243(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # panel: 16 codebook seeds + 8 queries by deterministic hash rank
-    panel = fixed_k_anchors(emb, "vec_id", _Q243_K + _Q243_NQ)
-    from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
-    from osm_changesets_to_parquet_spark.operators.anchors import ANCHOR_MOD
-
-    wp = Window.orderBy(hash_bucket("vec_id", ANCHOR_MOD), F.col("vec_id"))
-    ranked = panel.withColumn("rk", F.row_number().over(wp))
-
-    quant = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / _Q243_SUB).cast("long").alias("m"),
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
-    # quant feeds the codebook, encode, LUT and exact branches: cut
-    # lineage once so the posexplode over embeddings runs a single
-    # time instead of per consumer
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage as _tl,
-    )
-
-    quant = _tl(quant)
-    cb = (
-        ranked.where(F.col("rk") <= _Q243_K)
-        .select("vec_id", F.col("rk").alias("j"))
-        .join(quant, "vec_id")
-        .select("j", "m", "pos", F.col("q").alias("cq"))
-    )
-    diff = F.col("q") - F.col("cq")
-    enc_d = (
-        quant.join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("vec_id", "m", "j")
-        .agg(F.sum(diff * diff).alias("d"))
-    )
-    w_code = Window.partitionBy("vec_id", "m").orderBy("d", "j")
-    codes = (
-        enc_d.withColumn("rn", F.row_number().over(w_code))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
-    )
-    qpanel = ranked.where(F.col("rk") > _Q243_K).select(
-        F.col("vec_id").alias("qid")
-    )
-    lut = (
-        qpanel.join(quant, F.col("qid") == F.col("vec_id"))
-        .drop("vec_id")
-        .join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("qid", "m", "j")
-        .agg(F.sum(diff * diff).alias("qd"))
-    )
-    adc = (
-        codes.join(
-            F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"]
-        )
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("adc_d"))
-    )
-    qquant = qpanel.join(
-        quant.select(
-            F.col("vec_id").alias("qid"), "pos", F.col("q").alias("qq")
-        ),
-        "qid",
-    )
-    exact = (
-        quant.join(F.broadcast(qquant), "pos")
-        .groupBy("qid", "vec_id")
-        .agg(F.sum((F.col("qq") - F.col("q")) * (F.col("qq") - F.col("q"))).alias("ex_d"))
-    )
+    _, adc, exact = pq_adc(emb, _Q243_SUB, _Q243_K, _Q243_NQ)
     adc_top = per_anchor_topk(
         adc, ["qid"], [F.col("adc_d"), F.col("vec_id")], _Q243_TOPK
     )

@@ -15,14 +15,21 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
 from osm_changesets_to_parquet_spark.operators.anchors import (
+    fixed_k_anchors,
+    per_anchor_topk,
     sql_anchor_order as _sql_anchor_order,
+)
+from osm_changesets_to_parquet_spark.operators.similarity import (
+    milli_quantize,
+    pq_adc,
 )
 from osm_changesets_to_parquet_spark.queries import register
 
-# q249/q264 reuse q243's PQ panel geometry so the retrieval-metric and
-# fusion panels stay comparable with the PQ-ADC results (same anchors,
-# same top-k depth) — the constants live with q243 in ann.py
+# q264/q268 rank q243's PQ panel, so the fusion and overlap results stay
+# comparable with the PQ-ADC ones (same anchors, same codebooks) — the
+# constants and the oracle CTE chain live with q243 in ann.py
 from osm_changesets_to_parquet_spark.queries.ann import (
+    _PQ_CTES,
     _Q243_K,
     _Q243_NQ,
     _Q243_SUB,
@@ -104,11 +111,6 @@ ORDER BY vec_id
     tables=("embeddings",),
 )
 def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id",
@@ -253,25 +255,11 @@ _Q249_SQL = _Q249_SQL.format(anchor_key=_sql_anchor_order("vec_id"))
 def q249(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = fixed_k_anchors(emb, "vec_id", _Q249_NQ).select(
         F.col("vec_id").alias("qid"), F.col("label").alias("qlabel")
     )
-    quant = emb.select(
-        "vec_id",
-        "label",
-        F.posexplode("embedding").alias("pos", "v"),
-    ).select(
-        "vec_id",
-        "label",
-        "pos",
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
+    quant = milli_quantize(emb, "label")
     qquant = anchors.join(
         quant.select(F.col("vec_id").alias("qid"), "pos", F.col("q").alias("qq")),
         "qid",
@@ -352,76 +340,48 @@ _Q264_LIST = 20   # depth of each input ranking
 _Q264_TOP = 10    # fused output depth
 
 
-_Q264_SQL = f"""
-WITH ranked AS (
-  SELECT vec_id,
-         ROW_NUMBER() OVER (ORDER BY {{anchor_key}}, vec_id) AS rk
-  FROM embeddings
-  ORDER BY {{anchor_key}}, vec_id LIMIT {_Q243_K + _Q243_NQ}
-),
-quant AS (
-  SELECT vec_id,
-         CAST((generate_subscripts(embedding, 1) - 1) // {_Q243_SUB}
-              AS BIGINT) AS m,
-         generate_subscripts(embedding, 1) AS pos,
-         CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings
-),
-cb AS (
-  SELECT r.rk AS j, qt.m, qt.pos, qt.q AS cq
-  FROM ranked r JOIN quant qt ON qt.vec_id = r.vec_id
-  WHERE r.rk <= {_Q243_K}
-),
-enc_d AS (
-  SELECT v.vec_id, v.m, c.j,
-         CAST(SUM((v.q - c.cq) * (v.q - c.cq)) AS BIGINT) AS d
-  FROM quant v JOIN cb c ON c.pos = v.pos AND c.m = v.m
-  GROUP BY v.vec_id, v.m, c.j
-),
-codes AS (
-  SELECT vec_id, m, j AS code
-  FROM (SELECT vec_id, m, j,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, j) AS rn
-        FROM enc_d)
-  WHERE rn = 1
-),
-qpanel AS (SELECT vec_id AS qid FROM ranked WHERE rk > {_Q243_K}),
-lut AS (
-  SELECT p.qid, c.m, c.j,
-         CAST(SUM((v.q - c.cq) * (v.q - c.cq)) AS BIGINT) AS qd
-  FROM qpanel p
-  JOIN quant v ON v.vec_id = p.qid
-  JOIN cb c ON c.pos = v.pos AND c.m = v.m
-  GROUP BY p.qid, c.m, c.j
-),
-adc AS (
-  SELECT l.qid, k.vec_id, CAST(SUM(l.qd) AS BIGINT) AS adc_d
-  FROM codes k JOIN lut l ON l.m = k.m AND l.j = k.code
-  WHERE k.vec_id NOT IN (SELECT qid FROM qpanel)
-  GROUP BY l.qid, k.vec_id
-),
-exact AS (
-  SELECT p.qid, v.vec_id,
-         CAST(SUM((qv.q - v.q) * (qv.q - v.q)) AS BIGINT) AS ex_d
-  FROM qpanel p
-  JOIN quant qv ON qv.vec_id = p.qid
-  JOIN quant v ON v.pos = qv.pos
-  WHERE v.vec_id NOT IN (SELECT qid FROM qpanel)
-  GROUP BY p.qid, v.vec_id
-),
+# the two q264/q268 rankings over pq_adc: self-hits excluded from both
+# rankers, each list the top _Q264_LIST per query
+_PQ_RANK_CTES = f"""{_PQ_CTES},
 adc_r AS (
   SELECT qid, vec_id, rn FROM (
     SELECT qid, vec_id,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_d, vec_id) AS rn
-    FROM adc) WHERE rn <= {_Q264_LIST}
+    FROM adc WHERE vec_id NOT IN (SELECT qid FROM qpanel))
+  WHERE rn <= {_Q264_LIST}
 ),
 ex_r AS (
   SELECT qid, vec_id, rn FROM (
     SELECT qid, vec_id,
            ROW_NUMBER() OVER (PARTITION BY qid ORDER BY ex_d, vec_id) AS rn
-    FROM exact) WHERE rn <= {_Q264_LIST}
-),
+    FROM exact WHERE vec_id NOT IN (SELECT qid FROM qpanel))
+  WHERE rn <= {_Q264_LIST}
+)"""
+
+
+def _pq_rank_lists(spark: SparkSession, sf_dir: str):
+    """``(qpanel, adc_r, ex_r)``: q243's PQ panel ranked both ways, the
+    spelling of ``_PQ_RANK_CTES``; ranks are ``a_rn`` and ``e_rn``."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qpanel, adc, exact = pq_adc(emb, _Q243_SUB, _Q243_K, _Q243_NQ)
+    not_query = qpanel.withColumnRenamed("qid", "vec_id")
+    adc_r = per_anchor_topk(
+        adc.join(not_query, "vec_id", "anti"),
+        ["qid"],
+        [F.col("adc_d"), F.col("vec_id")],
+        _Q264_LIST,
+    ).select("qid", "vec_id", F.col("rnk").alias("a_rn"))
+    ex_r = per_anchor_topk(
+        exact.join(not_query, "vec_id", "anti"),
+        ["qid"],
+        [F.col("ex_d"), F.col("vec_id")],
+        _Q264_LIST,
+    ).select("qid", "vec_id", F.col("rnk").alias("e_rn"))
+    return qpanel, adc_r, ex_r
+
+
+_Q264_SQL = f"""
+WITH {_PQ_RANK_CTES},
 fused AS (
   SELECT COALESCE(a.qid, e.qid) AS qid,
          COALESCE(a.vec_id, e.vec_id) AS vec_id,
@@ -442,9 +402,6 @@ ORDER BY qid, fused_rank
 """
 
 
-_Q264_SQL = _Q264_SQL.format(anchor_key=_sql_anchor_order("vec_id"))
-
-
 @register(
     "q264_rrf_fusion",
     _Q264_SQL,
@@ -463,93 +420,7 @@ _Q264_SQL = _Q264_SQL.format(anchor_key=_sql_anchor_order("vec_id"))
     tables=("embeddings",),
 )
 def q264(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
-    from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
-    from osm_changesets_to_parquet_spark.operators.anchors import ANCHOR_MOD
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    panel = fixed_k_anchors(emb, "vec_id", _Q243_K + _Q243_NQ)
-    wp = Window.orderBy(hash_bucket("vec_id", ANCHOR_MOD), F.col("vec_id"))
-    ranked = panel.withColumn("rk", F.row_number().over(wp))
-    quant = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / _Q243_SUB).cast("long").alias("m"),
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
-    # quant feeds the codebook, encode, LUT and exact branches: cut
-    # lineage once so the posexplode over embeddings runs a single
-    # time instead of per consumer
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage as _tl,
-    )
-
-    quant = _tl(quant)
-    cb = (
-        ranked.where(F.col("rk") <= _Q243_K)
-        .select("vec_id", F.col("rk").alias("j"))
-        .join(quant, "vec_id")
-        .select("j", "m", "pos", F.col("q").alias("cq"))
-    )
-    diff = F.col("q") - F.col("cq")
-    enc_d = (
-        quant.join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("vec_id", "m", "j")
-        .agg(F.sum(diff * diff).alias("d"))
-    )
-    w_code = Window.partitionBy("vec_id", "m").orderBy("d", "j")
-    codes = (
-        enc_d.withColumn("rn", F.row_number().over(w_code))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
-    )
-    qpanel = ranked.where(F.col("rk") > _Q243_K).select(
-        F.col("vec_id").alias("qid")
-    )
-    lut = (
-        qpanel.join(quant, F.col("qid") == F.col("vec_id"))
-        .drop("vec_id")
-        .join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("qid", "m", "j")
-        .agg(F.sum(diff * diff).alias("qd"))
-    )
-    not_query = qpanel.withColumnRenamed("qid", "vec_id")
-    adc = (
-        codes.join(not_query, "vec_id", "anti")
-        .join(F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("adc_d"))
-    )
-    qquant = qpanel.join(
-        quant.select(
-            F.col("vec_id").alias("qid"), "pos", F.col("q").alias("qq")
-        ),
-        "qid",
-    )
-    exact = (
-        quant.join(not_query, "vec_id", "anti")
-        .join(F.broadcast(qquant), "pos")
-        .where(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(
-            F.sum((F.col("qq") - F.col("q")) * (F.col("qq") - F.col("q"))).alias(
-                "ex_d"
-            )
-        )
-    )
-    adc_r = per_anchor_topk(
-        adc, ["qid"], [F.col("adc_d"), F.col("vec_id")], _Q264_LIST
-    ).select("qid", "vec_id", F.col("rnk").alias("a_rn"))
-    ex_r = per_anchor_topk(
-        exact, ["qid"], [F.col("ex_d"), F.col("vec_id")], _Q264_LIST
-    ).select("qid", "vec_id", F.col("rnk").alias("e_rn"))
+    _, adc_r, ex_r = _pq_rank_lists(spark, sf_dir)
     fused = (
         adc_r.join(ex_r, ["qid", "vec_id"], "full_outer")
         .select(
@@ -591,78 +462,13 @@ for _m in range(1, _Q264_LIST + 1):
     )
 
 
+_Q268_TAIL_VALUES = ", ".join(f"({m + 1}, {s!r})" for m, s in enumerate(_Q268_TAIL))
+
+
 _Q268_SQL = f"""
-WITH ranked AS (
-  SELECT vec_id,
-         ROW_NUMBER() OVER (ORDER BY {{anchor_key}}, vec_id) AS rk
-  FROM embeddings
-  ORDER BY {{anchor_key}}, vec_id LIMIT {_Q243_K + _Q243_NQ}
-),
-quant AS (
-  SELECT vec_id,
-         CAST((generate_subscripts(embedding, 1) - 1) // {_Q243_SUB}
-              AS BIGINT) AS m,
-         generate_subscripts(embedding, 1) AS pos,
-         CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings
-),
-cb AS (
-  SELECT r.rk AS j, qt.m, qt.pos, qt.q AS cq
-  FROM ranked r JOIN quant qt ON qt.vec_id = r.vec_id
-  WHERE r.rk <= {_Q243_K}
-),
-enc_d AS (
-  SELECT v.vec_id, v.m, c.j,
-         CAST(SUM((v.q - c.cq) * (v.q - c.cq)) AS BIGINT) AS d
-  FROM quant v JOIN cb c ON c.pos = v.pos AND c.m = v.m
-  GROUP BY v.vec_id, v.m, c.j
-),
-codes AS (
-  SELECT vec_id, m, j AS code
-  FROM (SELECT vec_id, m, j,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                  ORDER BY d, j) AS rn
-        FROM enc_d)
-  WHERE rn = 1
-),
-qpanel AS (SELECT vec_id AS qid FROM ranked WHERE rk > {_Q243_K}),
-lut AS (
-  SELECT p.qid, c.m, c.j,
-         CAST(SUM((v.q - c.cq) * (v.q - c.cq)) AS BIGINT) AS qd
-  FROM qpanel p
-  JOIN quant v ON v.vec_id = p.qid
-  JOIN cb c ON c.pos = v.pos AND c.m = v.m
-  GROUP BY p.qid, c.m, c.j
-),
-adc AS (
-  SELECT l.qid, k.vec_id, CAST(SUM(l.qd) AS BIGINT) AS adc_d
-  FROM codes k JOIN lut l ON l.m = k.m AND l.j = k.code
-  WHERE k.vec_id NOT IN (SELECT qid FROM qpanel)
-  GROUP BY l.qid, k.vec_id
-),
-exact AS (
-  SELECT p.qid, v.vec_id,
-         CAST(SUM((qv.q - v.q) * (qv.q - v.q)) AS BIGINT) AS ex_d
-  FROM qpanel p
-  JOIN quant qv ON qv.vec_id = p.qid
-  JOIN quant v ON v.pos = qv.pos
-  WHERE v.vec_id NOT IN (SELECT qid FROM qpanel)
-  GROUP BY p.qid, v.vec_id
-),
-adc_r AS (
-  SELECT qid, vec_id, rn FROM (
-    SELECT qid, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY adc_d, vec_id) AS rn
-    FROM adc) WHERE rn <= {_Q264_LIST}
-),
-ex_r AS (
-  SELECT qid, vec_id, rn FROM (
-    SELECT qid, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY ex_d, vec_id) AS rn
-    FROM exact) WHERE rn <= {_Q264_LIST}
-),
+WITH {_PQ_RANK_CTES},
 tail(m, s) AS (
-  SELECT * FROM (VALUES {{tail_values}}) v(m, s)
+  SELECT * FROM (VALUES {_Q268_TAIL_VALUES}) v(m, s)
 ),
 common AS (
   SELECT a.qid, GREATEST(a.rn, e.rn) AS mx
@@ -676,14 +482,6 @@ LEFT JOIN common c ON c.qid = q.qid
 LEFT JOIN tail t ON t.m = c.mx
 GROUP BY q.qid ORDER BY q.qid
 """
-
-
-_Q268_SQL = _Q268_SQL.format(
-    anchor_key=_sql_anchor_order("vec_id"),
-    tail_values=", ".join(
-        f"({m + 1}, {s!r})" for m, s in enumerate(_Q268_TAIL)
-    ),
-)
 
 
 @register(
@@ -703,94 +501,9 @@ _Q268_SQL = _Q268_SQL.format(
     tables=("embeddings",),
 )
 def q268(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        ANCHOR_MOD,
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
-    from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    panel = fixed_k_anchors(emb, "vec_id", _Q243_K + _Q243_NQ)
-    wp = Window.orderBy(hash_bucket("vec_id", ANCHOR_MOD), F.col("vec_id"))
-    ranked = panel.withColumn("rk", F.row_number().over(wp))
-    quant = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select(
-        "vec_id",
-        (F.col("pos0") / _Q243_SUB).cast("long").alias("m"),
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
-    # quant feeds the codebook, encode, LUT and exact branches: cut
-    # lineage once so the posexplode over embeddings runs a single
-    # time instead of per consumer
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage as _tl,
-    )
-
-    quant = _tl(quant)
-    cb = (
-        ranked.where(F.col("rk") <= _Q243_K)
-        .select("vec_id", F.col("rk").alias("j"))
-        .join(quant, "vec_id")
-        .select("j", "m", "pos", F.col("q").alias("cq"))
-    )
-    diff = F.col("q") - F.col("cq")
-    enc_d = (
-        quant.join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("vec_id", "m", "j")
-        .agg(F.sum(diff * diff).alias("d"))
-    )
-    w_code = Window.partitionBy("vec_id", "m").orderBy("d", "j")
-    codes = (
-        enc_d.withColumn("rn", F.row_number().over(w_code))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "m", F.col("j").alias("code"))
-    )
-    qpanel = ranked.where(F.col("rk") > _Q243_K).select(
-        F.col("vec_id").alias("qid")
-    )
-    lut = (
-        qpanel.join(quant, F.col("qid") == F.col("vec_id"))
-        .drop("vec_id")
-        .join(F.broadcast(cb), ["m", "pos"])
-        .groupBy("qid", "m", "j")
-        .agg(F.sum(diff * diff).alias("qd"))
-    )
-    not_query = qpanel.withColumnRenamed("qid", "vec_id")
-    adc = (
-        codes.join(not_query, "vec_id", "anti")
-        .join(F.broadcast(lut.withColumnRenamed("j", "code")), ["m", "code"])
-        .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").alias("adc_d"))
-    )
-    qquant = qpanel.join(
-        quant.select(
-            F.col("vec_id").alias("qid"), "pos", F.col("q").alias("qq")
-        ),
-        "qid",
-    )
-    exact = (
-        quant.join(not_query, "vec_id", "anti")
-        .join(F.broadcast(qquant), "pos")
-        .groupBy("qid", "vec_id")
-        .agg(
-            F.sum(
-                (F.col("qq") - F.col("q")) * (F.col("qq") - F.col("q"))
-            ).alias("ex_d")
-        )
-    )
-    adc_r = per_anchor_topk(
-        adc, ["qid"], [F.col("adc_d"), F.col("vec_id")], _Q264_LIST
-    ).select("qid", "vec_id", F.col("rnk").alias("a_rn"))
-    ex_r = per_anchor_topk(
-        exact, ["qid"], [F.col("ex_d"), F.col("vec_id")], _Q264_LIST
-    ).select("qid", "vec_id", F.col("rnk").alias("e_rn"))
+    qpanel, adc_r, ex_r = _pq_rank_lists(spark, sf_dir)
     tail = F.broadcast(
-        emb.sparkSession.createDataFrame(
+        spark.createDataFrame(
             [(m + 1, s) for m, s in enumerate(_Q268_TAIL)], "m LONG, s DOUBLE"
         )
     )

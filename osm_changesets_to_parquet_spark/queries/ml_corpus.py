@@ -380,18 +380,15 @@ def q262(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.anchors import (
         fixed_k_anchors,
     )
+    from osm_changesets_to_parquet_spark.operators.similarity import (
+        milli_quantize,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = fixed_k_anchors(emb, "vec_id", _Q262_NA).select(
         F.col("vec_id").alias("aid")
     )
-    quant = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select(
-        "vec_id",
-        (F.col("pos0") + 1).alias("pos"),
-        F.round(F.col("v").cast("double") * 1000).cast("long").alias("q"),
-    )
+    quant = milli_quantize(emb)
     aq = anchors.join(
         quant.select(F.col("vec_id").alias("aid"), "pos", F.col("q").alias("aq")),
         "aid",

@@ -24,7 +24,7 @@ Q.load_all_modules()
 # Lines of the package that force a join strategy with ``F.broadcast(``.
 # Every remaining hint changes an sf0.1 plan when removed; the rest were
 # deleted because Spark's size-based selection already picks the same plan.
-_BROADCAST_HINT_LINES = 64
+_BROADCAST_HINT_LINES = 56
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -767,15 +767,24 @@ def test_q232_spearman_rank_frames_broadcast_no_corpus_window(spark, sf_dir):
             assert "windowspecdefinition(g#" in line, line
 
 
-def test_q243_pq_adc_broadcast_lut_and_two_phase_topk(spark, sf_dir):
-    # the anchor panel must be TakeOrderedAndProject; codebook + ADC
-    # LUT joins broadcast; rankings two-phase (__pid local prune); and
-    # nothing falls back to a sort-merge or cartesian plan
-    plan = _plan(spark, sf_dir, "q243_pq_adc")
+@pytest.mark.parametrize(
+    "name", ["q243_pq_adc", "q264_rrf_fusion", "q268_rank_biased_overlap"]
+)
+def test_q243_pq_adc_broadcast_lut_and_two_phase_topk(spark, sf_dir, name):
+    # every operators.similarity.pq_adc caller: the anchor panel must be
+    # TakeOrderedAndProject; the ADC LUT broadcasts onto the (m, code)
+    # table; rankings two-phase (__pid local prune); no cartesian plan
+    plan = _plan(spark, sf_dir, name)
     assert "TakeOrderedAndProject" in plan
-    assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "__pid" in plan  # per_anchor_topk local phase present
+    assert any(
+        "BroadcastHashJoin [m#" in line and ", code#" in line
+        for line in plan.splitlines()
+    ), plan
+    if name == "q243_pq_adc":
+        # q264's full-outer fuse and q268's final joins sort-merge
+        assert "SortMergeJoin" not in plan
 
 
 def test_q244_streaks_take_ordered_user_windows(spark, sf_dir):

@@ -215,9 +215,11 @@ def test_cramers_v_matches_pandas_crosstab(spark, sf_dir):
         assert abs(r.v - round(v, 6)) < 1e-8, name
 
 
-def test_pq_adc_matches_numpy_brute(spark, sf_dir):
-    # full PQ pipeline parity: quantize -> seed codebooks -> encode ->
-    # ADC -> recall@10, reimplemented with numpy on the same panel
+def _pq_numpy(sf_dir: str):
+    """numpy PQ-ADC over q243's panel: quantize -> seed codebooks ->
+    encode -> LUT/ADC, plus the exact distance.  Returns ``(ids,
+    queries, adc, ex)``: ``queries`` are the query row indices in panel
+    order, ``adc`` and ``ex`` the (query, vector) integer distances."""
     import numpy as np
 
     from osm_changesets_to_parquet_spark.queries.ann import (
@@ -225,11 +227,8 @@ def test_pq_adc_matches_numpy_brute(spark, sf_dir):
         _Q243_M,
         _Q243_NQ,
         _Q243_SUB,
-        _Q243_TOPK,
-        q243,
     )
 
-    got = {r.qid: r for r in q243(spark, sf_dir).collect()}
     rows = duckdb.sql(
         f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet'"
     ).fetchall()
@@ -242,22 +241,51 @@ def test_pq_adc_matches_numpy_brute(spark, sf_dir):
     order = np.lexsort((ids, rank_key))
     seeds = order[:_Q243_K]
     queries = order[_Q243_K : _Q243_K + _Q243_NQ]
-    # encode: per subspace, nearest seed subvector (tie -> smaller j)
-    codes = np.zeros((len(ids), _Q243_M), dtype=np.int64)
+    adc = np.zeros((len(queries), len(ids)), dtype=np.int64)
     for m in range(_Q243_M):
         sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
+        # encode: nearest seed subvector (tie -> smaller j)
         d = ((q[:, None, sl] - q[seeds][None, :, sl]) ** 2).sum(axis=2)
-        codes[:, m] = np.argmin(d, axis=1)  # ties -> lowest index = j-1
-    for qi in queries:
+        codes = np.argmin(d, axis=1)  # ties -> lowest index = j-1
+        lut = ((q[queries][:, None, sl] - q[seeds][None, :, sl]) ** 2).sum(axis=2)
+        adc += lut[:, codes]
+    ex = ((q[queries][:, None, :] - q[None, :, :]) ** 2).sum(axis=2)
+    return ids, queries, adc, ex
+
+
+def test_pq_adc_matches_numpy_brute(spark, sf_dir):
+    # full PQ pipeline parity: pq_adc's adc and exact frames equal the
+    # numpy matrices for every (qid, vec_id), and q243's top-1 and
+    # recall@10 follow from them
+    import numpy as np
+
+    from osm_changesets_to_parquet_spark.catalog import load_table
+    from osm_changesets_to_parquet_spark.operators.similarity import pq_adc
+    from osm_changesets_to_parquet_spark.queries.ann import (
+        _Q243_K,
+        _Q243_NQ,
+        _Q243_SUB,
+        _Q243_TOPK,
+        q243,
+    )
+
+    ids, queries, adc, ex = _pq_numpy(sf_dir)
+    qpanel, adc_df, ex_df = pq_adc(
+        load_table(spark, sf_dir, "embeddings"), _Q243_SUB, _Q243_K, _Q243_NQ
+    )
+    assert sorted(r.qid for r in qpanel.collect()) == sorted(ids[queries])
+    for df, dist, want in ((adc_df, "adc_d", adc), (ex_df, "ex_d", ex)):
+        got = {(r.qid, r.vec_id): r[dist] for r in df.collect()}
+        assert got == {
+            (int(ids[qi]), int(v)): int(want[i, c])
+            for i, qi in enumerate(queries)
+            for c, v in enumerate(ids)
+        }, dist
+    got = {r.qid: r for r in q243(spark, sf_dir).collect()}
+    for i, qi in enumerate(queries):
         qid = int(ids[qi])
-        adc = np.zeros(len(ids), dtype=np.int64)
-        for m in range(_Q243_M):
-            sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
-            lut = ((q[qi, sl][None, :] - q[seeds][:, sl]) ** 2).sum(axis=1)
-            adc += lut[codes[:, m]]
-        ex = ((q - q[qi][None, :]) ** 2).sum(axis=1)
-        adc_order = np.lexsort((ids, adc))[:_Q243_TOPK]
-        ex_order = np.lexsort((ids, ex))[:_Q243_TOPK]
+        adc_order = np.lexsort((ids, adc[i]))[:_Q243_TOPK]
+        ex_order = np.lexsort((ids, ex[i]))[:_Q243_TOPK]
         recall = len(set(ids[adc_order]) & set(ids[ex_order])) / _Q243_TOPK
         r = got[qid]
         assert r.adc_top1 == ids[adc_order[0]], qid
@@ -983,12 +1011,6 @@ def test_token_bucket_matches_brute_and_throttles(spark, sf_dir):
 def test_rrf_fusion_matches_numpy(spark, sf_dir):
     import numpy as np
 
-    from osm_changesets_to_parquet_spark.queries.ann import (
-        _Q243_K,
-        _Q243_M,
-        _Q243_NQ,
-        _Q243_SUB,
-    )
     from osm_changesets_to_parquet_spark.queries.ann_ranking import (
         _Q264_LIST,
         _Q264_RRF_K,
@@ -999,41 +1021,20 @@ def test_rrf_fusion_matches_numpy(spark, sf_dir):
     got: dict = collections.defaultdict(list)
     for r in q264(spark, sf_dir).collect():
         got[r.qid].append((r.fused_rank, r.vec_id, r.rrf_score))
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet'"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    raw = np.array([r[1] for r in rows], dtype=np.float64) * 1000
-    q = (np.sign(raw) * np.floor(np.abs(raw) + 0.5)).astype(np.int64)
-    rank_key = ((ids % 2147483648) * 2654435761) % 1000000007
-    order = np.lexsort((ids, rank_key))
-    seeds = order[:_Q243_K]
-    queries = order[_Q243_K : _Q243_K + _Q243_NQ]
-    panel_ids = set(ids[order[: _Q243_K + _Q243_NQ]][_Q243_K:])
-    codes = np.zeros((len(ids), _Q243_M), dtype=np.int64)
-    for m in range(_Q243_M):
-        sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
-        d = ((q[:, None, sl] - q[seeds][None, :, sl]) ** 2).sum(axis=2)
-        codes[:, m] = np.argmin(d, axis=1)
-    cand_mask = ~np.isin(ids, list(panel_ids))
-    for qi in queries:
+    ids, queries, adc, ex = _pq_numpy(sf_dir)
+    cand_mask = ~np.isin(ids, ids[queries])
+    for i, qi in enumerate(queries):
         qid = int(ids[qi])
-        adc = np.zeros(len(ids), dtype=np.int64)
-        for m in range(_Q243_M):
-            sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
-            lut = ((q[qi, sl][None, :] - q[seeds][:, sl]) ** 2).sum(axis=1)
-            adc += lut[codes[:, m]]
-        ex = ((q - q[qi][None, :]) ** 2).sum(axis=1)
         a_rank = {
-            int(ids[cand_mask][i]): r + 1
-            for r, i in enumerate(
-                np.lexsort((ids[cand_mask], adc[cand_mask]))[:_Q264_LIST]
+            int(ids[cand_mask][j]): r + 1
+            for r, j in enumerate(
+                np.lexsort((ids[cand_mask], adc[i][cand_mask]))[:_Q264_LIST]
             )
         }
         e_rank = {
-            int(ids[cand_mask][i]): r + 1
-            for r, i in enumerate(
-                np.lexsort((ids[cand_mask], ex[cand_mask]))[:_Q264_LIST]
+            int(ids[cand_mask][j]): r + 1
+            for r, j in enumerate(
+                np.lexsort((ids[cand_mask], ex[i][cand_mask]))[:_Q264_LIST]
             )
         }
         scores = {}
@@ -1217,12 +1218,6 @@ def test_importance_ess_matches_brute(spark, sf_dir):
 def test_rbo_matches_brute_and_bounds(spark, sf_dir):
     import numpy as np
 
-    from osm_changesets_to_parquet_spark.queries.ann import (
-        _Q243_K,
-        _Q243_M,
-        _Q243_NQ,
-        _Q243_SUB,
-    )
     from osm_changesets_to_parquet_spark.queries.ann_ranking import (
         _Q264_LIST,
         _Q268_P,
@@ -1231,45 +1226,24 @@ def test_rbo_matches_brute_and_bounds(spark, sf_dir):
     )
 
     got = {r.qid: r for r in q268(spark, sf_dir).collect()}
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet'"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    raw = np.array([r[1] for r in rows], dtype=np.float64) * 1000
-    q = (np.sign(raw) * np.floor(np.abs(raw) + 0.5)).astype(np.int64)
-    rank_key = ((ids % 2147483648) * 2654435761) % 1000000007
-    order = np.lexsort((ids, rank_key))
-    seeds = order[:_Q243_K]
-    queries = order[_Q243_K : _Q243_K + _Q243_NQ]
-    panel_ids = set(int(x) for x in ids[queries])
-    codes = np.zeros((len(ids), _Q243_M), dtype=np.int64)
-    for m in range(_Q243_M):
-        sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
-        d = ((q[:, None, sl] - q[seeds][None, :, sl]) ** 2).sum(axis=2)
-        codes[:, m] = np.argmin(d, axis=1)
-    cand = ~np.isin(ids, list(panel_ids))
+    ids, queries, adc, ex = _pq_numpy(sf_dir)
+    cand = ~np.isin(ids, ids[queries])
     # perfect self-agreement check: RBO of a list with itself == the
     # truncated maximum (1-p) * sum(p^(d-1)) ... = sum of per-rank
     # contributions where max(ra, rb) = d
     max_rbo = (1 - _Q268_P) * sum(_Q268_TAIL[d] for d in range(_Q264_LIST))
-    for qi in queries:
+    for i, qi in enumerate(queries):
         qid = int(ids[qi])
-        adc = np.zeros(len(ids), dtype=np.int64)
-        for m in range(_Q243_M):
-            sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
-            lut = ((q[qi, sl][None, :] - q[seeds][:, sl]) ** 2).sum(axis=1)
-            adc += lut[codes[:, m]]
-        ex = ((q - q[qi][None, :]) ** 2).sum(axis=1)
         a_rank = {
-            int(ids[cand][i]): r + 1
-            for r, i in enumerate(
-                np.lexsort((ids[cand], adc[cand]))[:_Q264_LIST]
+            int(ids[cand][j]): r + 1
+            for r, j in enumerate(
+                np.lexsort((ids[cand], adc[i][cand]))[:_Q264_LIST]
             )
         }
         e_rank = {
-            int(ids[cand][i]): r + 1
-            for r, i in enumerate(
-                np.lexsort((ids[cand], ex[cand]))[:_Q264_LIST]
+            int(ids[cand][j]): r + 1
+            for r, j in enumerate(
+                np.lexsort((ids[cand], ex[i][cand]))[:_Q264_LIST]
             )
         }
         both = set(a_rank) & set(e_rank)
