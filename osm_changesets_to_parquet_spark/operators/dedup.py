@@ -177,9 +177,10 @@ def minhash_signature_hof(
     return docs_with_shingles.withColumn(out_col, sig)
 
 
-def band_keys(sig_col: Column) -> list[Column]:
-    """One combined key per LSH band: fold the band's signature rows with
-    the same base-31 combine as the char hash (portable to SQL)."""
+def band_keys(sig_col: Column) -> Column:
+    """The LSH banding generator: one ``(band, bkey)`` row per band, the
+    key folding the band's signature rows with the same base-31 combine
+    as the char hash (portable to SQL)."""
     keys = []
     for band in range(N_BANDS):
         acc = F.lit(0).cast("long")
@@ -188,7 +189,7 @@ def band_keys(sig_col: Column) -> list[Column]:
                 HASH_MOD
             )
         keys.append(acc)
-    return keys
+    return F.posexplode(F.array(*keys)).alias("band", "bkey")
 
 
 def lsh_candidates(
@@ -244,11 +245,8 @@ def lsh_candidates(
                 F.array_distinct("shingle_hashes").alias("shingle_hashes"),
             )
         )
-    sigged = minhash_signature(shingle_frame)
-    keys = band_keys(F.col("sig"))
-    banded = sigged.select(
-        F.col(id_col),
-        F.posexplode(F.array(*keys)).alias("band", "bkey"),
+    banded = minhash_signature(shingle_frame).select(
+        F.col(id_col), band_keys(F.col("sig"))
     )
     keep = F.size("ids") >= 2
     if max_bucket is not None:
@@ -421,10 +419,8 @@ def lsh_neardup_incremental(
     sh_new, sh_old = prep(incoming), prep(existing)
 
     def banded(sh, out_id):
-        sigged = minhash_signature(sh)
-        return sigged.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(F.array(*band_keys(F.col("sig")))).alias("band", "bkey"),
+        return minhash_signature(sh).select(
+            F.col(id_col).alias(out_id), band_keys(F.col("sig"))
         )
 
     cands = (
@@ -487,12 +483,9 @@ def lsh_index_write(
 
     elig = docs.where(F.size(F.split(F.col(text_col), " ")) >= n)
     sh = truncate_lineage(shingles(elig, text_col, n))
-    sigged = minhash_signature(sh)
     (
-        sigged.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(F.array(*band_keys(F.col("sig")))).alias("band", "bkey"),
-        )
+        minhash_signature(sh)
+        .select(F.col(id_col).alias("id"), band_keys(F.col("sig")))
         .write.mode("overwrite")
         .partitionBy("band")
         .parquet(os.path.join(path, "bands", "__bid=base"))
@@ -530,12 +523,9 @@ def lsh_index_append(
 
     elig = docs.where(F.size(F.split(F.col(text_col), " ")) >= n)
     sh = truncate_lineage(shingles(elig, text_col, n))
-    sigged = minhash_signature(sh)
     (
-        sigged.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(F.array(*band_keys(F.col("sig")))).alias("band", "bkey"),
-        )
+        minhash_signature(sh)
+        .select(F.col(id_col).alias("id"), band_keys(F.col("sig")))
         .write.mode("overwrite")
         .partitionBy("band")
         .parquet(os.path.join(path, "bands", part_label))
@@ -599,8 +589,7 @@ def lsh_neardup_probe_index(
     elig = incoming.where(F.size(F.split(F.col(text_col), " ")) >= n)
     sh_new = truncate_lineage(shingles(elig, text_col, n))
     banded_new = minhash_signature(sh_new).select(
-        F.col(id_col).alias("new_id"),
-        F.posexplode(F.array(*band_keys(F.col("sig")))).alias("band", "bkey"),
+        F.col(id_col).alias("new_id"), band_keys(F.col("sig"))
     )
     cands = (
         banded_new.join(bands_old, ["band", "bkey"])

@@ -1,17 +1,20 @@
-"""Graph analytics on DataFrame edge lists: PageRank, triangle count.
+"""Graph analytics on DataFrame edge lists.
 
-Companion to operators.clusters (connected components): the weighted
-propagation pattern.  Each iteration is one join (ranks onto out-edges)
-and one keyed aggregation (sum of incoming mass) — the standard
-MapReduce PageRank, with lineage truncated per iteration (see
-operators.iterutils — reliable checkpoint when a dir is configured) so
-the plan stays constant-size.
+The co-purchase graph every lineitem graph query reads
+(:func:`copurchase_pairs`), its symmetric edge list (:func:`undirected`),
+synchronous label propagation (:func:`label_propagation`), degree-oriented
+triangle listing (:func:`oriented_triangles`, :func:`triangle_count`),
+k-core peeling (:func:`k_core`) and PageRank (:func:`pagerank`).
+Connected components live in operators.clusters.
 
-Dangling nodes (no out-edges) are handled by redistributing their mass
-uniformly — the rank vector keeps summing to 1, so results are
-comparable across graphs.  Deterministic: fixed iteration count, no
-sampling; the same unrolled arithmetic is expressible in SQL, which is
-how the q84 oracle verifies every rank value.
+Iterative operators run a fixed or fixpoint-bounded number of rounds,
+each one keyed join plus one keyed aggregation, with lineage truncated
+per round (see operators.iterutils — reliable checkpoint when a dir is
+configured) so the plan stays constant-size.  PageRank handles dangling
+nodes (no out-edges) by redistributing their mass uniformly, so the
+rank vector keeps summing to 1.  Everything is deterministic: fixed
+iteration counts, total tie-breaks, no sampling — the same unrolled
+arithmetic is expressible in SQL, which is how the oracles verify it.
 """
 
 from __future__ import annotations
@@ -37,15 +40,16 @@ def copurchase_pairs(
     keep the shared-order count as ``weight_col``.
 
     The ONE authority for the build every co-purchase graph query
-    rides (q218/q238/q257/q258/q308/q323/q331/q333/q336/q342/q347):
-    pairs-per-order expand IN-ROW from one ``collect_set`` per order
-    (guide §2.3/§2.4) instead of the old inc-distinct + self-join,
-    which shuffled the 600k-row incidence list twice and materialized
-    3M join rows through a SortMergeJoin.  One shuffle (groupBy
-    orderkey, set-dedup riding it) replaces distinct + join; order
-    baskets are small (<= ~7 parts at every SF), so the k^2 in-row
-    expansion is bounded.  Each order contributes a pair at most once
-    (set semantics), so the repeat-count filter is unchanged.
+    rides (q210/q218/q238/q257/q258/q308/q323/q331/q333/q336/q338/q342/
+    q347; q338 passes its train-split incidence as ``li``): pairs-per-
+    order expand IN-ROW from one ``collect_set`` per order (guide
+    §2.3/§2.4) instead of an inc-distinct + self-join, which shuffles
+    the incidence list twice and materializes the pair stream through
+    a SortMergeJoin.  One shuffle (groupBy orderkey, set-dedup riding
+    it) replaces distinct + join; order baskets are small (<= ~7 parts
+    at every SF), so the k^2 in-row expansion is bounded.  Each order
+    contributes a pair at most once (set semantics), so the
+    repeat-count filter is unchanged.
     """
     per_order = li.groupBy("l_orderkey").agg(
         F.collect_set("l_partkey").alias("ps")
@@ -66,6 +70,49 @@ def copurchase_pairs(
     if weight_col is not None:
         cols.append(F.col("__m").cast("long").alias(weight_col))
     return pairs.select(*cols)
+
+
+def undirected(e: DataFrame) -> DataFrame:
+    """Both directions of an edge list ``(u, v, *rest)``, as
+    ``(src, dst, *rest)``: every edge once as ``u -> v`` and once as
+    ``v -> u``, its other columns carried on both."""
+    rest = [c for c in e.columns if c not in ("u", "v")]
+    fwd = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), *rest)
+    rev = e.select(F.col("v").alias("src"), F.col("u").alias("dst"), *rest)
+    return fwd.unionByName(rev)
+
+
+def label_propagation(sym: DataFrame, rounds: int) -> DataFrame:
+    """Synchronous label propagation (Raghavan, Albert & Kumara, Phys.
+    Rev. E 76, 2007) for exactly ``rounds`` rounds over a symmetric
+    edge list ``(src, dst)``; returns ``(node, lbl)``.
+
+    Every node starts with its own id as label; each round every node
+    takes the label most frequent among its neighbors, ties to the
+    SMALLEST label.  The (count, smallest-label) key is one BIGINT
+    ``cnt*1e9-lbl`` (labels are ids < 10^9), so the argmax is a plain
+    ``max_by`` aggregation, never a per-node window.  The round count
+    is fixed because synchronous LPA can oscillate: a fixed-round
+    snapshot is deterministic and unrollable in SQL.  One lineage cut
+    per round.
+    """
+    labels = sym.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").cast("long").alias("lbl")
+    )
+    for _ in range(rounds):
+        msg = sym.join(
+            labels.withColumnRenamed("node", "src"), "src"
+        ).groupBy(F.col("dst").alias("node"), "lbl").agg(
+            F.count(F.lit(1)).alias("cnt")
+        )
+        labels = truncate_lineage(
+            msg.groupBy("node").agg(
+                F.max_by(
+                    "lbl", F.col("cnt") * F.lit(1_000_000_000) - F.col("lbl")
+                ).alias("lbl")
+            )
+        )
+    return labels
 
 
 def oriented_triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame]:

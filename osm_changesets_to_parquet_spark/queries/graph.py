@@ -10,6 +10,10 @@ item-CF recommenders, DBSCAN, CF eval, coverage) moved to
 graph_apps.py in the round-10 family regrouping (mechanical
 relocation, zero behavior change — pre/post registry hash dump).
 
+The co-purchase oracles share one CTE prelude per piece
+(copurchase_ctes, min_label_ctes, _LPA_CTES), as the engine side shares
+operators.graph; graph_apps.py and stats.py import them from here.
+
 Scale contract shared by every query here: each iteration/round is one
 O(edges) equi-join on integer keys plus one keyed aggregate — edge
 volume rides a constant number of stages per round (the §8 graph
@@ -25,9 +29,12 @@ from osm_changesets_to_parquet_spark.catalog import load_table
 from osm_changesets_to_parquet_spark.operators.graph import (
     copurchase_pairs,
     k_core,
+    label_propagation,
     oriented_triangles,
     pagerank,
+    undirected,
 )
+from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
 from osm_changesets_to_parquet_spark.queries import register
 
 
@@ -244,16 +251,62 @@ def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The co-purchase graph, oracle side: the CTE preludes every lineitem
+# graph oracle shares.  Each stays a DuckDB self-join, independent of
+# operators.graph (the engine builds pairs in-row per order).
+# ---------------------------------------------------------------------------
+
+
+def copurchase_ctes(min_orders: int) -> str:
+    """CTEs ``inc(l_orderkey, l_partkey)``, ``e(u, v, m)`` — part pairs
+    ``u < v`` sharing ``m >= min_orders`` orders — and its symmetric
+    edge list ``sym(src, dst, m)``."""
+    return f"""inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+e AS MATERIALIZED (
+  SELECT a.l_partkey AS u, b.l_partkey AS v, CAST(COUNT(*) AS BIGINT) AS m
+  FROM inc a JOIN inc b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2 HAVING COUNT(*) >= {min_orders}
+),
+sym AS MATERIALIZED (
+  SELECT u AS src, v AS dst, m FROM e UNION ALL SELECT v, u, m FROM e
+)"""
+
+
+def min_label_ctes(adj: str, rounds: int) -> str:
+    """CTEs ``l0 .. l{rounds}(id, lbl)``: min-label propagation over the
+    symmetric edge list ``adj(src, dst)`` — every node starts as its own
+    label and takes the least label of itself and its neighbors each
+    round — plus ``conv(ok)``, 1 when round ``rounds`` moved no label.
+    Labels only ever decrease, so a fixpoint is equal label sums; a
+    deeper graph fails LOUDLY through error() instead of reporting
+    unconverged components (the q238 guard).  Reading ``conv`` is what
+    arms the guard."""
+    steps = ",\n".join(
+        f"""l{r} AS MATERIALIZED (
+  SELECT n.id, LEAST(n.lbl, MIN(x.lbl)) AS lbl
+  FROM l{r - 1} n JOIN {adj} a ON a.src = n.id JOIN l{r - 1} x ON x.id = a.dst
+  GROUP BY n.id, n.lbl
+)"""
+        for r in range(1, rounds + 1)
+    )
+    return f"""l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lbl FROM {adj}),
+{steps},
+conv AS (
+  SELECT CASE WHEN (SELECT COALESCE(SUM(lbl), 0) FROM l{rounds})
+                <> (SELECT COALESCE(SUM(lbl), 0) FROM l{rounds - 1})
+              THEN error('min-label propagation not converged within '
+                         || '{rounds} rounds')
+              ELSE 1 END AS ok
+)"""
+
+
+# ---------------------------------------------------------------------------
 # q218: triangle counting with degree orientation
 # ---------------------------------------------------------------------------
 
-_Q218_SQL = """
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+_Q218_SQL = f"""
+WITH {copurchase_ctes(1)},
 deg AS (
   SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM (
     SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e
@@ -298,10 +351,6 @@ SELECT (SELECT CAST(COUNT(DISTINCT n) AS BIGINT) FROM deg) AS n_nodes,
     tables=("lineitem",),
 )
 def q218(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     # the edge list feeds degree, orientation and the edge count
     e = truncate_lineage(copurchase_pairs(li, min_orders=1))
@@ -346,13 +395,8 @@ def _peel_cte(r: int, k: int) -> str:
 
 
 _Q238_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-p0 AS MATERIALIZED (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
+WITH {copurchase_ctes(2)},
+p0 AS (SELECT u, v FROM e),
 {", ".join(_peel_cte(r, _Q238_K) for r in range(1, _Q238_ROUNDS + 1))}
 SELECT CAST({_Q238_K} AS BIGINT) AS k,
        (SELECT CAST(COUNT(DISTINCT n) AS BIGINT) FROM (
@@ -432,21 +476,17 @@ def _lpa_cte(r: int) -> str:
 )"""
 
 
-_Q257_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-),
-l0 AS MATERIALIZED (
+# the oracle of operators.graph.label_propagation over sym(src, dst):
+# CTEs l0 .. l4 (node, lbl), shared by q257 and q342
+_LPA_CTES = f"""l0 AS MATERIALIZED (
   SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS lbl FROM sym
 ),
-{", ".join(_lpa_cte(r) for r in range(1, _Q257_ROUNDS + 1))}
+{", ".join(_lpa_cte(r) for r in range(1, _Q257_ROUNDS + 1))}"""
+
+
+_Q257_SQL = f"""
+WITH {copurchase_ctes(2)},
+{_LPA_CTES}
 SELECT CAST(lbl AS BIGINT) AS community,
        CAST(COUNT(*) AS BIGINT) AS n_members
 FROM l{_Q257_ROUNDS}
@@ -458,45 +498,22 @@ GROUP BY lbl ORDER BY n_members DESC, community LIMIT 20
     "q257_label_propagation",
     _Q257_SQL,
     doc=(
-        f"synchronous label propagation ({_Q257_ROUNDS} fixed rounds) "
-        "over the repeat-co-purchase graph: each round is ONE "
-        "(node,label) count rollup + ONE keyed max_by argmax — the "
-        "(count, smallest-label) composite key is encoded as a single "
-        "BIGINT cnt*1e9-lbl so the argmax is a plain aggregation, "
-        "never a per-node window; lineage truncated per round (q84 "
-        "discipline); FIXED round count because sync LPA can "
-        "oscillate — a fixed-round snapshot is deterministic and "
-        "oracle-unrollable (MATERIALIZED CTEs, the q238 lesson); "
+        f"synchronous label propagation ({_Q257_ROUNDS} fixed rounds, "
+        "operators.graph.label_propagation) over the repeat-co-purchase "
+        "graph: each round is ONE (node,label) count rollup + ONE keyed "
+        "max_by argmax on the single BIGINT key cnt*1e9-lbl (most "
+        "frequent label, ties to the smallest), never a per-node "
+        "window; lineage truncated per round; FIXED round count "
+        "because sync LPA can oscillate — the oracle unrolls the same "
+        "rounds as MATERIALIZED CTEs (_LPA_CTES, shared with q342); "
         "output = 20 largest communities"
     ),
     tables=("lineitem",),
 )
 def q257(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_pairs(li)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
-    sym = truncate_lineage(sym)
-    labels = sym.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("lbl")
-    )
-    for _ in range(_Q257_ROUNDS):
-        msg = sym.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).groupBy(F.col("dst").alias("node"), "lbl").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        labels = msg.groupBy("node").agg(
-            F.max_by(
-                "lbl", F.col("cnt") * F.lit(1_000_000_000) - F.col("lbl")
-            ).alias("lbl")
-        )
-        labels = truncate_lineage(labels)
+    sym = truncate_lineage(undirected(copurchase_pairs(li)))
+    labels = label_propagation(sym, _Q257_ROUNDS)
     return (
         labels.groupBy(F.col("lbl").cast("long").alias("community"))
         .agg(F.count(F.lit(1)).alias("n_members"))
@@ -509,15 +526,8 @@ def q257(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q258: degree assortativity (Pearson over directed edge endpoints)
 # ---------------------------------------------------------------------------
 
-_Q258_SQL = """
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-sym AS (SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e),
+_Q258_SQL = f"""
+WITH {copurchase_ctes(2)},
 deg AS (SELECT src AS n, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY src),
 pairs AS (
   SELECT du.d AS x, dv.d AS y
@@ -556,10 +566,7 @@ FROM s
 )
 def q258(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    e = copurchase_pairs(li)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    sym = undirected(copurchase_pairs(li))
     deg = sym.groupBy(F.col("src").alias("n")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -604,17 +611,11 @@ _Q308_TOPK = 20
 # adjacency self-join (the engine intersects oriented out-adjacency
 # arrays; the two agree exactly, which is the point)
 _Q308_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-adj AS (SELECT u AS n, v AS m FROM e UNION ALL SELECT v, u FROM e),
-deg AS (SELECT n, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY n),
+WITH {copurchase_ctes(1)},
+deg AS (SELECT src AS n, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY src),
 t AS (
   SELECT e.u, e.v, CAST(COUNT(*) AS BIGINT) AS tri
-  FROM e JOIN adj a ON a.n = e.u JOIN adj b ON b.n = e.v AND b.m = a.m
+  FROM e JOIN sym a ON a.src = e.u JOIN sym b ON b.src = e.v AND b.dst = a.dst
   GROUP BY e.u, e.v
 ),
 top AS (
@@ -655,10 +656,6 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
     # out-adjacency arrays of s and t, so the only exploded stream is
     # 2 rows per TRIANGLE (3.8M at sf0.1) and nothing is materialized
     # at wedge cardinality.
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     e = truncate_lineage(copurchase_pairs(li, min_orders=1))
     deg, tri = oriented_triangles(e)
@@ -721,46 +718,19 @@ def q308(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the oracle statically unrolls this many min-label rounds; propagation
 # is idempotent at the fixpoint (sf0.001 converges in 4 rounds,
-# sf0.01/sf0.1 in 11), with a loud error() guard if a deeper graph ever
-# needs more — the q238 convergence-guard discipline
+# sf0.01/sf0.1 in 11), with min_label_ctes' loud convergence guard
 _Q323_ROUNDS = 16
 
 
-def _cc_cte(r: int) -> str:
-    prev = f"l{r - 1}"
-    return f"""l{r} AS MATERIALIZED (
-  SELECT n.id, LEAST(n.lbl, MIN(x.lbl)) AS lbl
-  FROM {prev} n JOIN adj a ON a.u = n.id JOIN {prev} x ON x.id = a.v
-  GROUP BY n.id, n.lbl
-)"""
-
-
 _Q323_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pr AS MATERIALIZED (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-adj AS MATERIALIZED (
-  SELECT p1 AS u, p2 AS v FROM pr UNION ALL SELECT p2 AS u, p1 AS v FROM pr
-),
-l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS lbl FROM adj),
-{", ".join(_cc_cte(r) for r in range(1, _Q323_ROUNDS + 1))},
+WITH {copurchase_ctes(2)},
+{min_label_ctes("sym", _Q323_ROUNDS)},
 hist AS (
   SELECT lbl, CAST(COUNT(*) AS BIGINT) AS sz
   FROM l{_Q323_ROUNDS} GROUP BY lbl
 )
 SELECT CAST(sz AS BIGINT) AS size,
-       -- labels only ever decrease, so fixpoint <=> equal label sums;
-       -- if round {_Q323_ROUNDS} still moved labels, fail LOUDLY
-       CAST(CASE WHEN (SELECT SUM(lbl) FROM l{_Q323_ROUNDS})
-                   <> (SELECT SUM(lbl) FROM l{_Q323_ROUNDS - 1})
-                 THEN error('q323 oracle: min-label propagation not '
-                            || 'converged within {_Q323_ROUNDS} rounds '
-                            || '- raise _Q323_ROUNDS')
-                 ELSE COUNT(*) END AS BIGINT) AS n_components
+       CAST(COUNT(*) * (SELECT ok FROM conv) AS BIGINT) AS n_components
 FROM hist GROUP BY sz ORDER BY size
 """
 
@@ -783,7 +753,8 @@ FROM hist GROUP BY sz ORDER BY size
         "cap).  Build: in-row pair expansion from one collect_set per "
         "order (no self-join).  Oracle: "
         f"{_Q323_ROUNDS} statically unrolled MATERIALIZED min-label "
-        "rounds with the q238 loud-error convergence guard"
+        "rounds (min_label_ctes, shared with q337) with the q238 "
+        "loud-error convergence guard"
     ),
     tables=("lineitem",),
 )
@@ -888,10 +859,6 @@ ORDER BY side, id
     tables=("orders", "lineitem"),
 )
 def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").where(
         F.col("l_partkey") <= _Q324_MAX_PART
@@ -958,33 +925,20 @@ def q324(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q331_ROUNDS = 2
 
 
-_Q331_EDGES = """
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e0 AS (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-adj AS (SELECT u AS v, v AS w FROM e0 UNION ALL SELECT v AS v, u AS w FROM e0)
-"""
-
-
-_Q331_SQL = (
-    _Q331_EDGES
-    + """,
-c0 AS (SELECT v, CAST(COUNT(*) AS VARCHAR) AS col FROM adj GROUP BY v),
+_Q331_SQL = f"""
+WITH {copurchase_ctes(2)},
+c0 AS (SELECT src AS v, CAST(COUNT(*) AS VARCHAR) AS col FROM sym GROUP BY src),
 c1 AS (
-  SELECT a.v, md5(own.col || '|' || string_agg(n.col, ',' ORDER BY n.col))
-           AS col
-  FROM adj a JOIN c0 n ON n.v = a.w JOIN c0 own ON own.v = a.v
-  GROUP BY a.v, own.col
+  SELECT a.src AS v,
+         md5(own.col || '|' || string_agg(n.col, ',' ORDER BY n.col)) AS col
+  FROM sym a JOIN c0 n ON n.v = a.dst JOIN c0 own ON own.v = a.src
+  GROUP BY a.src, own.col
 ),
 c2 AS (
-  SELECT a.v, md5(own.col || '|' || string_agg(n.col, ',' ORDER BY n.col))
-           AS col
-  FROM adj a JOIN c1 n ON n.v = a.w JOIN c1 own ON own.v = a.v
-  GROUP BY a.v, own.col
+  SELECT a.src AS v,
+         md5(own.col || '|' || string_agg(n.col, ',' ORDER BY n.col)) AS col
+  FROM sym a JOIN c1 n ON n.v = a.dst JOIN c1 own ON own.v = a.src
+  GROUP BY a.src, own.col
 ),
 s0 AS (SELECT col, CAST(COUNT(*) AS BIGINT) AS n FROM c0 GROUP BY col),
 s1 AS (SELECT col, CAST(COUNT(*) AS BIGINT) AS n FROM c1 GROUP BY col),
@@ -1003,7 +957,6 @@ SELECT r, n_classes, max_class, n_singletons FROM (
 )
 ORDER BY r
 """
-)
 
 
 @register(
@@ -1025,19 +978,10 @@ ORDER BY r
     tables=("lineitem",),
 )
 def q331(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
-    e0 = copurchase_pairs(li)
-    adj = truncate_lineage(
-        e0.select(F.col("u").alias("v"), F.col("v").alias("w")).unionByName(
-            e0.select(F.col("v").alias("v"), F.col("u").alias("w"))
-        )
-    )
+    adj = truncate_lineage(undirected(copurchase_pairs(li)))
     colors = truncate_lineage(
-        adj.groupBy("v").agg(
+        adj.groupBy(F.col("src").alias("v")).agg(
             F.count(F.lit(1)).cast("string").alias("col")
         )
     )
@@ -1055,10 +999,10 @@ def q331(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats.append(class_stats(colors, 0))
     for r in range(1, _Q331_ROUNDS + 1):
         nb = adj.join(
-            colors.select(F.col("v").alias("w"), F.col("col").alias("ncol")),
-            "w",
+            colors.select(F.col("v").alias("dst"), F.col("col").alias("ncol")),
+            "dst",
         )
-        agg = nb.groupBy("v").agg(
+        agg = nb.groupBy(F.col("src").alias("v")).agg(
             F.array_join(F.array_sort(F.collect_list("ncol")), ",").alias(
                 "nbs"
             )
@@ -1094,21 +1038,20 @@ def q331(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q333_K = 16
 
 
-_Q333_SQL = (
-    _Q331_EDGES
-    + f""",
-nodes AS (SELECT DISTINCT v FROM adj),
+_Q333_SQL = f"""
+WITH {copurchase_ctes(2)},
+nodes AS (SELECT DISTINCT src AS v FROM sym),
 seeds AS (
   SELECT v AS seed FROM nodes
   ORDER BY ((v % 2147483648) * 2654435761) % 1000000007, v LIMIT {_Q333_K}
 ),
 n1 AS (
-  SELECT s.seed, a.w AS nbr FROM seeds s JOIN adj a ON a.v = s.seed
+  SELECT s.seed, a.dst AS nbr FROM seeds s JOIN sym a ON a.src = s.seed
 ),
 n2 AS (
-  SELECT DISTINCT n1.seed, a.w AS cand
-  FROM n1 JOIN adj a ON a.v = n1.nbr
-  WHERE a.w <> n1.seed
+  SELECT DISTINCT n1.seed, a.dst AS cand
+  FROM n1 JOIN sym a ON a.src = n1.nbr
+  WHERE a.dst <> n1.seed
 ),
 n2x AS (
   SELECT seed, cand FROM n2
@@ -1126,7 +1069,6 @@ LEFT JOIN c1 ON c1.seed = s.seed
 LEFT JOIN c2 ON c2.seed = s.seed
 ORDER BY s.seed
 """
-)
 
 
 @register(
@@ -1150,31 +1092,23 @@ def q333(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.anchors import (
         fixed_k_anchors,
     )
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
 
     li = load_table(spark, sf_dir, "lineitem")
-    e0 = copurchase_pairs(li)
-    adj = truncate_lineage(
-        e0.select(F.col("u").alias("v"), F.col("v").alias("w")).unionByName(
-            e0.select(F.col("v").alias("v"), F.col("u").alias("w"))
-        )
-    )
-    nodes = adj.select("v").distinct()
+    adj = truncate_lineage(undirected(copurchase_pairs(li)))
+    nodes = adj.select(F.col("src").alias("v")).distinct()
     seeds = truncate_lineage(
         fixed_k_anchors(nodes, "v", _Q333_K).select(
             F.col("v").alias("seed")
         )
     )
     n1 = truncate_lineage(
-        seeds.join(adj, F.col("seed") == F.col("v")).select(
-            "seed", F.col("w").alias("nbr")
+        seeds.join(adj, F.col("seed") == F.col("src")).select(
+            "seed", F.col("dst").alias("nbr")
         )
     )
     n2 = (
         n1.join(
-            adj.select(F.col("v").alias("nbr"), F.col("w").alias("cand")),
+            adj.select(F.col("src").alias("nbr"), F.col("dst").alias("cand")),
             "nbr",
         )
         .where(F.col("cand") != F.col("seed"))
@@ -1223,20 +1157,8 @@ def q333(spark: SparkSession, sf_dir: str) -> DataFrame:
 # per community).  The per-community terms are identical doubles both
 # engines; the Σ over communities is float (6dp absorbs add order).
 _Q342_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-e AS MATERIALIZED (
-  SELECT a.l_partkey AS u, b.l_partkey AS v
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
-),
-sym AS MATERIALIZED (
-  SELECT u AS src, v AS dst FROM e UNION ALL SELECT v, u FROM e
-),
-l0 AS MATERIALIZED (
-  SELECT DISTINCT src AS node, CAST(src AS BIGINT) AS lbl FROM sym
-),
-{", ".join(_lpa_cte(r) for r in range(1, _Q257_ROUNDS + 1))},
+WITH {copurchase_ctes(2)},
+{_LPA_CTES},
 lab AS (SELECT node, lbl FROM l{_Q257_ROUNDS}),
 m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM e),
 mc AS (
@@ -1270,41 +1192,18 @@ FROM terms
         "Q = Σ_c [m_c/m − (D_c/2m)²] with every count exact integer "
         "(within-community edges by ONE label-comparison join of "
         "edge endpoints, degree mass by one keyed rollup) and only "
-        "the |communities|-term final sum floating (6dp).  Reuses "
-        "the identical LPA rounds engine- and oracle-side, so the "
-        "partition under audit is bit-identical to q257's"
+        "the |communities|-term final sum floating (6dp).  Runs "
+        "q257's operators.graph.label_propagation engine-side and its "
+        "_LPA_CTES oracle-side, so the partition under audit is "
+        "q257's by construction"
     ),
     tables=("lineitem",),
 )
 def q342(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     e = truncate_lineage(copurchase_pairs(li))
-    sym = truncate_lineage(
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-    )
-    labels = sym.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").cast("long").alias("lbl")
-    )
-    for _ in range(_Q257_ROUNDS):
-        msg = sym.join(
-            labels.withColumnRenamed("node", "src"), "src"
-        ).groupBy(F.col("dst").alias("node"), "lbl").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
-        labels = truncate_lineage(
-            msg.groupBy("node").agg(
-                F.max_by(
-                    "lbl",
-                    F.col("cnt") * F.lit(1_000_000_000) - F.col("lbl"),
-                ).alias("lbl")
-            )
-        )
+    sym = truncate_lineage(undirected(e))
+    labels = label_propagation(sym, _Q257_ROUNDS)
     m = e.agg(F.count(F.lit(1)).cast("long").alias("m"))
     lu = labels.select(F.col("node").alias("u"), F.col("lbl").alias("lu"))
     lv = labels.select(F.col("node").alias("v"), F.col("lbl").alias("lv"))

@@ -15,11 +15,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.operators.anchors import per_anchor_topk
 from osm_changesets_to_parquet_spark.operators.graph import (
     copurchase_pairs,
     pagerank,
+    undirected,
 )
+from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
 from osm_changesets_to_parquet_spark.queries import register
+from osm_changesets_to_parquet_spark.queries.graph import (
+    copurchase_ctes,
+    min_label_ctes,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -165,48 +172,71 @@ def q335(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Linden et al. 2003): similarity of two items = cosine over their
 # order-incidence vectors = co_count / sqrt(deg_a * deg_b), support
 # >= 2.  Degrees and co-counts are exact integers, the cosine an
-# identical double both engines; the per-item top-5 runs through
+# identical double both engines; the per-item top-k runs through
 # operators/anchors.per_anchor_topk (local-then-global rank — no
 # reducer ever sees an item's full candidate list, the q179
 # discipline for hub items whose candidate fan is corpus-shaped) on
-# the ROUNDED cosine with the neighbor id as total tie-break.
+# the ROUNDED cosine with the neighbor id as total tie-break.  One
+# scorer per side serves q336, q338 and q347.
 _Q336_K = 5
 
 
 _Q336_MIN_CO = 2
 
 
-_Q336_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+def _item_cf(co: DataFrame, deg: DataFrame, k: int) -> DataFrame:
+    """Per-item top-``k`` neighbors ``(p, nbr, c, cosine, rnk)`` by
+    ``c / sqrt(d_p * d_nbr)`` over co-counts ``co(u, v, c)`` and item
+    degrees ``deg(p, d)``."""
+    scored = (
+        undirected(co)
+        .join(deg.select(F.col("p").alias("src"), F.col("d").alias("da")), "src")
+        .join(deg.select(F.col("p").alias("dst"), F.col("d").alias("db")), "dst")
+        .select(
+            F.col("src").alias("p"),
+            F.col("dst").alias("nbr"),
+            "c",
+            F.round(
+                F.col("c")
+                / F.sqrt((F.col("da") * F.col("db")).cast("double")),
+                6,
+            ).alias("cosine"),
+        )
+    )
+    return per_anchor_topk(scored, ["p"], [F.desc("cosine"), F.col("nbr")], k)
+
+
+def _item_cf_ctes(k: int) -> str:
+    """Oracle of :func:`_item_cf`: CTE ``rec(p, nbr, c, cosine, rnk)``
+    over ``sym(src, dst, m)`` and ``deg(p, d)``."""
+    return f"""scored AS (
+  SELECT s.src AS p, s.dst AS nbr, s.m AS c,
+         ROUND(s.m / SQRT(CAST(da.d * db.d AS DOUBLE)), 6) AS cosine
+  FROM sym s JOIN deg da ON da.p = s.src JOIN deg db ON db.p = s.dst
+),
+rec AS (
+  SELECT * FROM (
+    SELECT p, nbr, c, cosine,
+           ROW_NUMBER() OVER (PARTITION BY p
+                              ORDER BY cosine DESC, nbr) AS rnk
+    FROM scored
+  ) WHERE rnk <= {k}
+)"""
+
+
+# shared with q347
+_Q336_CTES = f"""
+WITH {copurchase_ctes(_Q336_MIN_CO)},
 deg AS (
   SELECT l_partkey AS p, CAST(COUNT(*) AS BIGINT) AS d
   FROM inc GROUP BY 1
 ),
-co AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= {_Q336_MIN_CO}
-),
-sym AS (
-  SELECT pa AS p, pb AS nbr, c FROM co
-  UNION ALL
-  SELECT pb AS p, pa AS nbr, c FROM co
-),
-scored AS (
-  SELECT s.p, s.nbr, s.c,
-         ROUND(s.c / SQRT(CAST(da.d * db.d AS DOUBLE)), 6) AS cosine
-  FROM sym s JOIN deg da ON da.p = s.p JOIN deg db ON db.p = s.nbr
-),
-rk AS (
-  SELECT p, nbr, c, cosine,
-         ROW_NUMBER() OVER (PARTITION BY p
-                            ORDER BY cosine DESC, nbr) AS rnk
-  FROM scored
-)
+{_item_cf_ctes(_Q336_K)}"""
+
+
+_Q336_SQL = f"""{_Q336_CTES}
 SELECT p, nbr, c AS co_count, cosine, CAST(rnk AS BIGINT) AS rnk
-FROM rk WHERE rnk <= {_Q336_K}
+FROM rec
 ORDER BY p, rnk
 """
 
@@ -224,18 +254,12 @@ ORDER BY p, rnk
         "neighbor id as total tie-break, and the per-item top-5 runs "
         "through operators/anchors.per_anchor_topk so no reducer ever "
         "materializes a hub item's full candidate fan (the q179 "
-        "two-phase discipline)"
+        "two-phase discipline); one scorer (_item_cf / _item_cf_ctes) "
+        "serves q336, q338 and q347"
     ),
     tables=("lineitem",),
 )
 def q336(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        per_anchor_topk,
-    )
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     inc = truncate_lineage(
         li.select("l_orderkey", "l_partkey").distinct()
@@ -243,37 +267,8 @@ def q336(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = inc.groupBy(F.col("l_partkey").alias("p")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
-    co = copurchase_pairs(
-        li, min_orders=_Q336_MIN_CO, src="pa", dst="pb", weight_col="c"
-    )
-    sym = co.select(
-        F.col("pa").alias("p"), F.col("pb").alias("nbr"), "c"
-    ).unionByName(
-        co.select(F.col("pb").alias("p"), F.col("pa").alias("nbr"), "c")
-    )
-    da = deg.select(F.col("p"), F.col("d").alias("da"))
-    db = deg.select(F.col("p").alias("nbr"), F.col("d").alias("db"))
-    scored = (
-        sym.join(da, "p")
-        .join(db, "nbr")
-        .select(
-            "p",
-            "nbr",
-            "c",
-            F.round(
-                F.col("c")
-                / F.sqrt((F.col("da") * F.col("db")).cast("double")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    top = per_anchor_topk(
-        scored,
-        ["p"],
-        [F.desc("cosine"), F.col("nbr")],
-        _Q336_K,
-    )
-    return top.select(
+    co = copurchase_pairs(li, min_orders=_Q336_MIN_CO, weight_col="c")
+    return _item_cf(co, deg, _Q336_K).select(
         "p",
         "nbr",
         F.col("c").alias("co_count"),
@@ -306,15 +301,6 @@ _Q337_MINPTS = 4  # neighbors (excluding self) required for a core
 _Q337_ROUNDS = 64
 
 
-def _q337_cc_cte(r: int) -> str:
-    prev = f"l{r - 1}"
-    return f"""l{r} AS MATERIALIZED (
-  SELECT n.id, LEAST(n.lbl, MIN(x.lbl)) AS lbl
-  FROM {prev} n JOIN cadj a ON a.u = n.id JOIN {prev} x ON x.id = a.v
-  GROUP BY n.id, n.lbl
-)"""
-
-
 _Q337_SQL = f"""
 WITH e AS (
   SELECT vec_id,
@@ -335,16 +321,12 @@ sym AS MATERIALIZED (
 deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS d FROM sym GROUP BY p),
 core AS MATERIALIZED (SELECT p FROM deg WHERE d >= {_Q337_MINPTS}),
 cadj AS MATERIALIZED (
-  SELECT s.p AS u, s.q AS v FROM sym s
+  SELECT s.p AS src, s.q AS dst FROM sym s
   WHERE s.p IN (SELECT p FROM core) AND s.q IN (SELECT p FROM core)
 ),
-l0 AS MATERIALIZED (
-  SELECT p AS id, p AS lbl FROM core
-),
-{", ".join(_q337_cc_cte(r) for r in range(1, _Q337_ROUNDS + 1))},
+{min_label_ctes("cadj", _Q337_ROUNDS)},
 iso AS (
-  -- core points with no core neighbor keep their own label (l0 rows
-  -- never entering cadj joins)
+  -- core points with no core neighbor keep their own label
   SELECT id, lbl FROM l{_Q337_ROUNDS}
   UNION ALL
   SELECT p AS id, p AS lbl FROM core
@@ -357,23 +339,14 @@ border AS (
   GROUP BY s.p
 ),
 member AS (SELECT id, lbl FROM iso UNION ALL SELECT id, lbl FROM border),
-sizes AS (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS sz FROM member GROUP BY lbl),
-guard AS (
-  SELECT CASE WHEN (SELECT COALESCE(SUM(lbl), 0) FROM l{_Q337_ROUNDS})
-                <> (SELECT COALESCE(SUM(lbl), 0)
-                    FROM l{_Q337_ROUNDS - 1})
-              THEN error('q337 oracle: min-label propagation not '
-                         || 'converged within {_Q337_ROUNDS} rounds '
-                         || '- raise _Q337_ROUNDS')
-              ELSE 1 END AS ok
-)
+sizes AS (SELECT lbl, CAST(COUNT(*) AS BIGINT) AS sz FROM member GROUP BY lbl)
 SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM e) AS n_points,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM core) AS n_core,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM border) AS n_border,
        (SELECT CAST(COUNT(*) AS BIGINT) FROM e)
          - (SELECT CAST(COUNT(*) AS BIGINT) FROM core)
          - (SELECT CAST(COUNT(*) AS BIGINT) FROM border) AS n_noise,
-       (SELECT CAST(COUNT(*) AS BIGINT) FROM sizes) * (SELECT ok FROM guard)
+       (SELECT CAST(COUNT(*) AS BIGINT) FROM sizes) * (SELECT ok FROM conv)
          AS n_clusters,
        (SELECT CAST(MAX(sz) AS BIGINT) FROM sizes) AS max_cluster
 """
@@ -405,9 +378,6 @@ def q337(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.intervals import (
         grid_neighbor_pairs_2d,
     )
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     pts = emb.select(
@@ -416,12 +386,10 @@ def q337(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("embedding", 2).cast("double").alias("y"),
     )
     pr = grid_neighbor_pairs_2d(pts, "vec_id", "x", "y", _Q337_EPS).select(
-        "id_a", "id_b"
+        F.col("id_a").alias("u"), F.col("id_b").alias("v")
     )
     sym = truncate_lineage(
-        pr.select(F.col("id_a").alias("p"), F.col("id_b").alias("q")).unionByName(
-            pr.select(F.col("id_b").alias("p"), F.col("id_a").alias("q"))
-        )
+        undirected(pr).select(F.col("src").alias("p"), F.col("dst").alias("q"))
     )
     deg = sym.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("d"))
     core = truncate_lineage(
@@ -506,28 +474,13 @@ WITH inc AS (
 tr AS (SELECT o, p FROM inc WHERE {_Q338_SPLIT} < 80),
 te AS (SELECT o, p FROM inc WHERE {_Q338_SPLIT} >= 80),
 deg AS (SELECT p, CAST(COUNT(*) AS BIGINT) AS d FROM tr GROUP BY p),
-co AS (
-  SELECT a.p AS pa, b.p AS pb, CAST(COUNT(*) AS BIGINT) AS c
+e AS (
+  SELECT a.p AS u, b.p AS v, CAST(COUNT(*) AS BIGINT) AS m
   FROM tr a JOIN tr b ON a.o = b.o AND a.p < b.p
   GROUP BY 1, 2 HAVING COUNT(*) >= {_Q338_MIN_CO}
 ),
-sym AS (
-  SELECT pa AS p, pb AS nbr, c FROM co
-  UNION ALL SELECT pb AS p, pa AS nbr, c FROM co
-),
-scored AS (
-  SELECT s.p, s.nbr,
-         ROUND(s.c / SQRT(CAST(da.d * db.d AS DOUBLE)), 6) AS cosine
-  FROM sym s JOIN deg da ON da.p = s.p JOIN deg db ON db.p = s.nbr
-),
-rec AS (
-  SELECT p, nbr FROM (
-    SELECT p, nbr,
-           ROW_NUMBER() OVER (PARTITION BY p
-                              ORDER BY cosine DESC, nbr) AS rnk
-    FROM scored
-  ) WHERE rnk <= {_Q338_K}
-),
+sym AS (SELECT u AS src, v AS dst, m FROM e UNION ALL SELECT v, u, m FROM e),
+{_item_cf_ctes(_Q338_K)},
 pop AS (SELECT p FROM deg ORDER BY d DESC, p LIMIT {_Q338_K}),
 cases AS (
   SELECT a.o, a.p AS i, b.p AS j
@@ -578,12 +531,6 @@ ORDER BY method
     tables=("lineitem",),
 )
 def q338(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        per_anchor_topk,
-    )
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
     from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -594,41 +541,12 @@ def q338(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = truncate_lineage(inc.where(bkt < 80))
     te = truncate_lineage(inc.where(bkt >= 80))
     deg = tr.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    a = tr.alias("a")
-    b = tr.alias("b")
-    co = (
-        a.join(b, F.col("a.o") == F.col("b.o"))
-        .where(F.col("a.p") < F.col("b.p"))
-        .groupBy(F.col("a.p").alias("pa"), F.col("b.p").alias("pb"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .where(F.col("c") >= _Q338_MIN_CO)
+    co = copurchase_pairs(
+        tr.select(F.col("o").alias("l_orderkey"), F.col("p").alias("l_partkey")),
+        min_orders=_Q338_MIN_CO,
+        weight_col="c",
     )
-    sym = co.select(
-        F.col("pa").alias("p"), F.col("pb").alias("nbr"), "c"
-    ).unionByName(
-        co.select(F.col("pb").alias("p"), F.col("pa").alias("nbr"), "c")
-    )
-    scored = (
-        sym.join(deg.select("p", F.col("d").alias("da")), "p")
-        .join(
-            deg.select(F.col("p").alias("nbr"), F.col("d").alias("db")),
-            "nbr",
-        )
-        .select(
-            "p",
-            "nbr",
-            F.round(
-                F.col("c")
-                / F.sqrt((F.col("da") * F.col("db")).cast("double")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    rec = truncate_lineage(
-        per_anchor_topk(
-            scored, ["p"], [F.desc("cosine"), F.col("nbr")], _Q338_K
-        ).select("p", "nbr")
-    )
+    rec = truncate_lineage(_item_cf(co, deg, _Q338_K).select("p", "nbr"))
     pop = truncate_lineage(
         deg.orderBy(F.desc("d"), "p").limit(_Q338_K).select("p")
     )
@@ -693,35 +611,7 @@ def q338(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the long-tail starvation number).  All counts are exact integers
 # from the same incidence/degree rollups q336 builds; the audit is a
 # single scalar row.
-_Q347_SQL = f"""
-WITH inc AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-deg AS (
-  SELECT l_partkey AS p, CAST(COUNT(*) AS BIGINT) AS d FROM inc GROUP BY 1
-),
-co AS (
-  SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-         CAST(COUNT(*) AS BIGINT) AS c
-  FROM inc a JOIN inc b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= {_Q336_MIN_CO}
-),
-sym AS (
-  SELECT pa AS p, pb AS nbr, c FROM co
-  UNION ALL SELECT pb AS p, pa AS nbr, c FROM co
-),
-scored AS (
-  SELECT s.p, s.nbr,
-         ROUND(s.c / SQRT(CAST(da.d * db.d AS DOUBLE)), 6) AS cosine
-  FROM sym s JOIN deg da ON da.p = s.p JOIN deg db ON db.p = s.nbr
-),
-rec AS (
-  SELECT p, nbr FROM (
-    SELECT p, nbr,
-           ROW_NUMBER() OVER (PARTITION BY p
-                              ORDER BY cosine DESC, nbr) AS rnk
-    FROM scored
-  ) WHERE rnk <= {_Q336_K}
-),
+_Q347_SQL = f"""{_Q336_CTES},
 cat AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_catalog,
                CAST(SUM(d) AS BIGINT) AS sum_deg FROM deg),
 rc AS (
@@ -761,13 +651,6 @@ FROM cat CROSS JOIN rc CROSS JOIN rd
     tables=("lineitem",),
 )
 def q347(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        per_anchor_topk,
-    )
-    from osm_changesets_to_parquet_spark.operators.iterutils import (
-        truncate_lineage,
-    )
-
     li = load_table(spark, sf_dir, "lineitem")
     inc = truncate_lineage(li.select("l_orderkey", "l_partkey").distinct())
     deg = truncate_lineage(
@@ -775,35 +658,8 @@ def q347(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("d")
         )
     )
-    co = copurchase_pairs(
-        li, min_orders=_Q336_MIN_CO, src="pa", dst="pb", weight_col="c"
-    )
-    sym = co.select(
-        F.col("pa").alias("p"), F.col("pb").alias("nbr"), "c"
-    ).unionByName(
-        co.select(F.col("pb").alias("p"), F.col("pa").alias("nbr"), "c")
-    )
-    scored = (
-        sym.join(deg.select("p", F.col("d").alias("da")), "p")
-        .join(
-            deg.select(F.col("p").alias("nbr"), F.col("d").alias("db")),
-            "nbr",
-        )
-        .select(
-            "p",
-            "nbr",
-            F.round(
-                F.col("c")
-                / F.sqrt((F.col("da") * F.col("db")).cast("double")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    rec = truncate_lineage(
-        per_anchor_topk(
-            scored, ["p"], [F.desc("cosine"), F.col("nbr")], _Q336_K
-        ).select("p", "nbr")
-    )
+    co = copurchase_pairs(li, min_orders=_Q336_MIN_CO, weight_col="c")
+    rec = truncate_lineage(_item_cf(co, deg, _Q336_K).select("p", "nbr"))
     cat = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_catalog"),
         F.sum("d").cast("long").alias("sum_deg"),

@@ -21,11 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.operators.graph import copurchase_pairs
 from osm_changesets_to_parquet_spark.operators.quality import (
     hash_bucket,
     sql_hash_bucket,
 )
 from osm_changesets_to_parquet_spark.queries import register
+from osm_changesets_to_parquet_spark.queries.graph import copurchase_ctes
 
 # ---------------------------------------------------------------------------
 # q206: stratified sampling — per-stratum rates in one pushable predicate
@@ -226,15 +228,9 @@ _Q210_K = 20
 
 
 _Q210_SQL = f"""
-WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-pairs AS (
-  SELECT a.l_partkey AS p1, b.l_partkey AS p2
-  FROM li a JOIN li b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)
-SELECT p1, p2, CAST(COUNT(*) AS BIGINT) AS n_co_orders
-FROM pairs GROUP BY p1, p2
-ORDER BY n_co_orders DESC, p1, p2 LIMIT {_Q210_K}
+WITH {copurchase_ctes(1)}
+SELECT u AS p1, v AS p2, m AS n_co_orders
+FROM e ORDER BY n_co_orders DESC, p1, p2 LIMIT {_Q210_K}
 """
 
 
@@ -244,29 +240,24 @@ ORDER BY n_co_orders DESC, p1, p2 LIMIT {_Q210_K}
     doc=(
         "bipartite graph projection (order-part incidence -> part-part "
         "co-purchase edges, the item-item collaborative-filtering "
-        "precompute): DISTINCT incidence first, then a SELF-equi-join "
-        "keyed on the order — pair volume is Σ k_i² over per-order "
-        "basket sizes (bounded: ~4-13 lines/order), NOT |lineitem|², "
-        "and the join shuffles on l_orderkey so each basket's pairs "
-        "materialize on one task; top-k is TakeOrderedAndProject.  At "
-        "100 TB the guard is the basket-size cap (a pathological "
-        "mega-basket is the q133 skew-profile case first)"
+        "precompute) through operators.graph.copurchase_pairs: one "
+        "shuffle on l_orderkey collects each basket's part set, and "
+        "its pairs expand in-row — pair volume is Σ k_i² over "
+        "per-order basket sizes (bounded: ~4-13 lines/order), NOT "
+        "|lineitem|²; the pair counts take a map-side partial count "
+        "and top-k is TakeOrderedAndProject.  At 100 TB the guard is "
+        "the basket-size cap (a pathological mega-basket is the q133 "
+        "skew-profile case first).  The oracle is the DISTINCT-"
+        "incidence self-join keyed on the order"
     ),
     tables=("lineitem",),
 )
 def q210(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p1"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("p2"))
+    li = load_table(spark, sf_dir, "lineitem")
     return (
-        a.join(b, "k")
-        .where(F.col("p1") < F.col("p2"))
-        .groupBy("p1", "p2")
-        .agg(F.count(F.lit(1)).alias("n_co_orders"))
+        copurchase_pairs(
+            li, min_orders=1, src="p1", dst="p2", weight_col="n_co_orders"
+        )
         .orderBy(F.col("n_co_orders").desc(), "p1", "p2")
         .limit(_Q210_K)
     )

@@ -32,20 +32,42 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_broadcast_hints_do_not_grow():
+# Spellings with one home each, and how many package lines may hold
+# them: the co-purchase pair self-join (queries.graph.copurchase_ctes),
+# the min-label round (queries.graph.min_label_ctes), the item-CF
+# cosine (queries.graph_apps._item_cf) and the LSH banding generator,
+# which operators.dedup.band_keys returns whole.
+_ONE_HOME = {
+    "a.l_partkey < b.l_partkey": 1,
+    "LEAST(n.lbl, MIN(x.lbl))": 1,
+    'F.sqrt((F.col("da") * F.col("db"))': 1,
+    "posexplode(F.array(*band_keys": 0,
+}
+
+
+def _package_lines(needle: str) -> list[str]:
     pkg = Path(Q.__file__).resolve().parent.parent
-    hits = [
+    return [
         f"{path.relative_to(pkg)}:{i}"
         for path in sorted(pkg.rglob("*.py"))
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "F.broadcast(" in line
+        if needle in line
     ]
+
+
+def test_broadcast_hints_do_not_grow():
+    hits = _package_lines("F.broadcast(")
     assert len(hits) <= _BROADCAST_HINT_LINES, (
         f"{len(hits)} lines force F.broadcast(), cap {_BROADCAST_HINT_LINES}. "
         "A hint overrides spark.sql.autoBroadcastJoinThreshold, so on a table "
         "that grows with the data it can OOM the driver. Add one only together "
         "with an sf0.1 plan that changes without it (README, 'Join strategy')."
     )
+
+
+def test_shared_spellings_are_not_pasted():
+    hits = {needle: _package_lines(needle) for needle in _ONE_HOME}
+    assert {n: len(h) for n, h in hits.items()} == _ONE_HOME, hits
 
 
 def test_q10_dim_joins_broadcast(spark, sf_dir):
@@ -727,8 +749,9 @@ def test_q211_haversine_candidates_equi_join(spark, sf_dir):
 
 
 def test_q210_projection_keyed_join_partial_agg(spark, sf_dir):
-    # the bipartite projection must equi-join on the order key and
-    # take map-side partial counts on the (p1, p2) pairs
+    # the bipartite projection must group baskets on the order key and
+    # expand pairs in-row (never a cross join), then take map-side
+    # partial counts on the (p1, p2) pairs
     plan = _plan(spark, sf_dir, "q210_bipartite_projection")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -297,10 +297,14 @@ def test_pq_adc_exact_for_codebook_seeds(spark, sf_dir):
     # so ADC(query, seed) must equal the exact quantized distance —
     # the defining PQ identity that catches LUT/join-key mistakes
     import numpy as np
+    from pyspark.sql import functions as F
 
+    from osm_changesets_to_parquet_spark.catalog import load_table
+    from osm_changesets_to_parquet_spark.operators.similarity import pq_adc
     from osm_changesets_to_parquet_spark.queries.ann import (
         _Q243_K,
         _Q243_M,
+        _Q243_NQ,
         _Q243_SUB,
     )
 
@@ -318,6 +322,17 @@ def test_pq_adc_exact_for_codebook_seeds(spark, sf_dir):
         sl = slice(m * _Q243_SUB, (m + 1) * _Q243_SUB)
         d = ((q[seeds][:, None, sl] - q[seeds][None, :, sl]) ** 2).sum(axis=2)
         assert (np.argmin(d, axis=1) == np.arange(len(seeds))).all()
+    # ... and on the engine, for every (query, seed) pair
+    _, adc, exact = pq_adc(
+        load_table(spark, sf_dir, "embeddings"), _Q243_SUB, _Q243_K, _Q243_NQ
+    )
+    got = (
+        adc.join(exact, ["qid", "vec_id"])
+        .where(F.col("vec_id").isin([int(i) for i in ids[seeds]]))
+        .collect()
+    )
+    assert len(got) == _Q243_NQ * _Q243_K
+    assert all(r.adc_d == r.ex_d for r in got), got
 
 
 def test_activity_streaks_matches_brute(spark, sf_dir):
