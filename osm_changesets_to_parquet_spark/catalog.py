@@ -5,9 +5,12 @@ lineitem events documents embeddings — one parquet each under
 ``/root/testdata/sf{0.001,0.01,0.1}``.
 
 Scale notes:
-- Loads are plain ``spark.read.parquet`` — schema comes from the files
-  (no inference pass), predicate pushdown and column pruning flow into
-  the scan for free.
+- Loads are ``spark.read.parquet`` scans; predicate pushdown and column
+  pruning flow into the scan for free.  The schema is read from the
+  file's footer once per SparkContext and table file (one Spark job,
+  ``mergeSchemasInParallel``); every later load of that file passes the
+  remembered schema and starts no job.  Each load is still a fresh
+  relation with fresh attribute ids and a fresh file listing.
 - ``events.ts``: ``load_table`` normalizes BOTH timestamp encodings a
   fixture generation may carry.  TIMESTAMP(NANOS) parquet (unreadable
   by Spark's vectorized reader) loads via
@@ -37,6 +40,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -56,12 +60,38 @@ def _table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def _file_identity(path: str) -> str:
+    """The file's resolved path, size and mtime: a rewrite in place, or
+    another file under the same name, gives another identity."""
+    src = os.path.realpath(path)
+    st = os.stat(src)
+    return f"{src}:{st.st_size}:{st.st_mtime_ns}"
+
+
+# (applicationId, file identity) -> the schema Spark inferred for it
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
+def _read_table(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark
+    job reading the footer) only on the first read of the file in this
+    SparkContext, and hands it to every later read, which starts no
+    job."""
+    key = (spark.sparkContext.applicationId, _file_identity(path))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, normalizing the events timestamp."""
     path = _table_path(sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_table(spark, path)
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # TIMESTAMP(NANOS) parquet + nanosAsLong: epoch-nanos long ->
@@ -78,7 +108,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = df.withColumn("ts", F.col("ts").cast("timestamp"))
             df = df.withColumn("ts_us", F.unix_micros("ts"))
         return df
-    return spark.read.parquet(path)
+    return _read_table(spark, path)
 
 
 def table_store(
@@ -94,9 +124,7 @@ def table_store(
     ``build`` returns and outlives the process: a torn build is redone
     from an empty dir, a finished one is reused by every later run.
     """
-    src = os.path.realpath(_table_path(sf_dir, table))
-    st = os.stat(src)
-    key = hashlib.sha1(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()
+    key = hashlib.sha1(_file_identity(_table_path(sf_dir, table)).encode()).hexdigest()
     store = os.path.join(
         tempfile.gettempdir(),
         f"{name}_{os.path.basename(sf_dir.rstrip('/'))}_{key[:12]}",

@@ -182,7 +182,9 @@ def triangle_count(
     triangle exactly once.  All keyed DataFrame ops; no driver-side
     graph.
     """
-    und = (
+    # cut once: both of oriented_triangles' cuts read it, and would each
+    # recompute the caller's edge build (q107: a self-join plus distinct)
+    und = truncate_lineage(
         edges.select(F.col(src_col).cast("long").alias("a"), F.col(dst_col).cast("long").alias("b"))
         .where(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))

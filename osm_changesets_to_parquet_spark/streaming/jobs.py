@@ -28,7 +28,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osm_changesets_to_parquet_spark.catalog import load_table, table_store, temp_dir
+from osm_changesets_to_parquet_spark.catalog import (
+    _read_table,
+    load_table,
+    table_store,
+    temp_dir,
+)
 
 # 5 deterministic micro-batches: enough files to advance the watermark
 # across real batch boundaries, few enough that per-batch state-store
@@ -123,7 +128,7 @@ def prepare_replay_dir(
 
 
 def _read_stream(spark: SparkSession, replay_dir: str) -> DataFrame:
-    schema = spark.read.parquet(os.path.join(replay_dir, "000.parquet")).schema
+    schema = _read_table(spark, os.path.join(replay_dir, "000.parquet")).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
