@@ -22,10 +22,11 @@ candidate list landed on a single reducer via
   runs on at most k·num_partitions rows.  No reducer ever sees a
   corpus-sized window frame.
 
-The oracle-side spelling of the anchor draw is
-``ORDER BY ((id % 2147483648) * 2654435761) % 1000000007, id LIMIT k``
-(:func:`sql_anchor_order`) — identical integer math in any engine
-(see ``operators/quality.py`` for the 31-bit fold overflow analysis).
+The oracle-side spelling of the anchor draw orders by
+:func:`sql_anchor_order` of the id (its ``sql_hash_bucket`` modulo
+``ANCHOR_MOD``), then the id, ``LIMIT k`` — identical integer math in
+any engine (see ``operators/quality.py`` for the 31-bit fold overflow
+analysis).
 """
 
 from __future__ import annotations

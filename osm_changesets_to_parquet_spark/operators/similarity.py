@@ -14,6 +14,11 @@ Two paths behind one API:
   the bucket join prunes the scan to a fixed expected fraction
   (2^-bits per table).
 
+Every exact score goes through one fold per measure — :func:`dot`,
+:func:`sq_norm`, :func:`sq_dist` and :func:`cosine_similarity_col` —
+each with a ``sql_`` twin that the oracles use to replay the identical
+double arithmetic in DuckDB.
+
 ``cosine_topk``/``lsh_topk`` run no Python at all; the IVF family
 (:func:`ivf_build` / :func:`ivf_topk`) uses one Arrow-batched pandas
 UDF for the broadcast-centroid argmin (numpy matmul per batch) — the
@@ -46,23 +51,74 @@ from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
 from osm_changesets_to_parquet_spark.operators.quality import hash_bucket
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+# The vector folds, one spelling per engine.  Each Column fold is a
+# sequential left fold over doubles, ``((0 + t_1) + t_2) + ...``, and
+# its ``sql_`` twin is the same fold as a DuckDB ``list_reduce`` from
+# 0.0 over the same double casts, so both engines add the same doubles
+# in the same order and agree bit for bit.
 
 
-def _sq_norm(a):
+def _sq_diff(x, y):
+    d = x.cast("double") - y.cast("double")
+    return d * d
+
+
+def _fold(terms):
+    return F.aggregate(terms, F.lit(0.0).cast("double"), lambda acc, t: acc + t)
+
+
+def dot(a, b):
+    """Dot product of two array<float|double|long> columns."""
+    return _fold(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
+
+
+def sq_norm(a):
+    """Squared L2 norm of an array column."""
     return F.aggregate(
         a, F.lit(0.0).cast("double"), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
 
 
+def sq_dist(a, b):
+    """Squared L2 distance between two array columns."""
+    return _fold(F.zip_with(a, b, _sq_diff))
+
+
 def cosine_similarity_col(a, b):
-    """Column-level cosine similarity between two array<float|double> cols."""
-    return _dot(a, b) / (F.sqrt(_sq_norm(a)) * F.sqrt(_sq_norm(b)))
+    """Cosine similarity between two array columns; NULL when either
+    vector has zero norm (the direction is undefined), as in the oracle,
+    whose ``x / 0`` is NULL."""
+    return F.try_divide(dot(a, b), F.sqrt(sq_norm(a)) * F.sqrt(sq_norm(b)))
+
+
+def _sql_fold(terms: str) -> str:
+    return f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {terms}), (x, y) -> x + y)"
+
+
+def _sql_zip(a: str, b: str, term) -> str:
+    # over the longer list, as zip_with pads the shorter one with NULLs
+    x, y = f"CAST({a}[i] AS DOUBLE)", f"CAST({b}[i] AS DOUBLE)"
+    return f"list_transform(range(1, GREATEST(len({a}), len({b})) + 1), i -> {term(x, y)})"
+
+
+def sql_dot(a: str, b: str) -> str:
+    """:func:`dot` as a DuckDB expression over two list expressions."""
+    return _sql_fold(_sql_zip(a, b, lambda x, y: f"{x} * {y}"))
+
+
+def sql_sq_norm(a: str) -> str:
+    """:func:`sq_norm` as a DuckDB expression."""
+    return _sql_fold(f"list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
+
+
+def sql_sq_dist(a: str, b: str) -> str:
+    """:func:`sq_dist` as a DuckDB expression."""
+    return _sql_fold(_sql_zip(a, b, lambda x, y: f"({x} - {y}) * ({x} - {y})"))
+
+
+def sql_cosine(a: str, b: str) -> str:
+    """:func:`cosine_similarity_col` as a DuckDB expression."""
+    return f"{sql_dot(a, b)} / (SQRT({sql_sq_norm(a)}) * SQRT({sql_sq_norm(b)}))"
 
 
 def cosine_topk(
@@ -179,7 +235,7 @@ def srp_signature(vec_col, planes: list[list[float]]):
     """Signed-random-projection bit signature as a long (<=63 planes)."""
     sig = F.lit(0).cast("long")
     for i, plane in enumerate(planes):
-        d = _dot(vec_col, F.array(*[F.lit(float(v)) for v in plane]))
+        d = dot(vec_col, F.array(*[F.lit(float(v)) for v in plane]))
         sig = sig + F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
     return sig
 
@@ -223,45 +279,6 @@ def lsh_topk(
         cand.select(id_col, sim.alias("sim"))
         .orderBy(F.col("sim").desc(), F.col(id_col))
         .limit(k)
-    )
-
-
-def pairwise_cosine_neardup(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = 6,
-    n_tables: int = 3,
-    dim: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, sim >= threshold).
-
-    LSH-bucketed: only pairs sharing a bucket in some table are compared —
-    the all-pairs quadratic join never materializes.  Returns
-    (id_a, id_b, sim) with sim rounded to 4.
-    """
-    tables = make_planes(dim, bits, n_tables, seed)
-    pairs = None
-    for planes in tables:
-        sigged = embeddings.select(
-            F.col(id_col), F.col(vec_col), srp_signature(F.col(vec_col), planes).alias("sig")
-        )
-        a = sigged.select(
-            F.col("sig"), F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-        )
-        b = sigged.select(
-            F.col("sig"), F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-        )
-        p = a.join(b, "sig").where(F.col("id_a") < F.col("id_b")).drop("sig")
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    sim = F.round(cosine_similarity_col(F.col("va"), F.col("vb")), 4)
-    return (
-        pairs.select("id_a", "id_b", sim.alias("sim"))
-        .where(F.col("sim") >= threshold)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -359,7 +376,7 @@ def normalize_vectors(df: DataFrame, vec_col: str = "embedding", out_col: str | 
     Zero vectors stay zero (no NaN): the norm is coalesced to 1.
     """
     out = out_col or vec_col
-    norm = F.sqrt(_sq_norm(F.col(vec_col)))
+    norm = F.sqrt(sq_norm(F.col(vec_col)))
     safe = F.when(norm > 0, norm).otherwise(F.lit(1.0))
     return df.withColumn(
         out, F.transform(F.col(vec_col), lambda x: x.cast("double") / safe)
@@ -579,10 +596,9 @@ def semdedup(
     of n_cells); the pairwise compare is per-cell, so the quadratic
     term is bounded by the largest cell, not the corpus (pick n_cells
     so cells fit the executor; the all-pairs join never materializes).
-    Differs from :func:`pairwise_cosine_neardup` (SRP-LSH buckets) in
-    recall shape: clustering guarantees each vector is compared against
-    its whole semantic neighborhood cell, the standard trade for
-    curation-grade semantic dedup.
+    Unlike SRP-LSH buckets (:func:`lsh_topk`), clustering guarantees
+    each vector is compared against its whole semantic neighborhood
+    cell, the standard trade for curation-grade semantic dedup.
     """
     from osm_changesets_to_parquet_spark.operators.clusters import (
         connected_components,
@@ -655,13 +671,6 @@ def _kmeans_assign_hof():
     strictly smaller distance, ties break to the lower cid.  Kept as
     the executable specification the vectorized kernel is
     equivalence-tested against (tests/test_merge_pii_kmeans.py)."""
-
-    def sq_dist(v, c):
-        return F.aggregate(
-            F.zip_with(v, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
 
     return F.aggregate(
         F.transform(
@@ -991,18 +1000,21 @@ def mmr_rerank(
     selected: list[tuple] = []
     chosen: list = []
     for rank in range(1, select_k + 1):
-        best = None
+        scored = []
         for cid, sq in cands:
             if cid in chosen:
                 continue
-            pen = max((sims[(cid, s)] for s in chosen), default=0.0)
-            score = lam * sq - (1.0 - lam) * pen
-            # raw-double compare, id tie-break — mirrors the oracle's
-            # ORDER BY score DESC, id LIMIT 1
-            if best is None or score > best[0] or (score == best[0] and cid < best[1]):
-                best = (score, cid, sq)
-        if best is None:
+            # SQL NULL semantics: a zero-norm vector's cosine is NULL,
+            # MAX skips NULLs, and a NULL term makes the score NULL
+            pens = [p for p in (sims[(cid, s)] for s in chosen) if p is not None]
+            pen = max(pens) if pens else (None if chosen else 0.0)
+            score = None if sq is None or pen is None else lam * sq - (1.0 - lam) * pen
+            scored.append((score, cid, sq))
+        if not scored:
             break
+        # raw-double compare, id tie-break — mirrors the oracle's
+        # ORDER BY score DESC NULLS LAST, id LIMIT 1
+        best = min(scored, key=lambda t: (t[0] is None, -(t[0] or 0.0), t[1]))
         selected.append((rank, best[1], best[2], best[0]))
         chosen.append(best[1])
     spark = embeddings.sparkSession
@@ -1045,21 +1057,13 @@ def k_center_greedy(
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
 
-    def sqd(v, center: list[float]):
-        arr = F.array(*[F.lit(float(x)) for x in center])
-        return F.aggregate(
-            F.zip_with(v, arr, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-
     seed = e.where(F.col("id") == seed_id).collect()[0]
     picked: list[tuple] = [(1, seed["id"], None)]
     chosen_ids = [seed["id"]]
     state = None
     center = list(seed["v"])
     for step in range(2, k + 1):
-        upd = sqd(F.col("v"), center)
+        upd = sq_dist(F.col("v"), F.array(*[F.lit(float(x)) for x in center]))
         state = (
             e.withColumn("mind", upd)
             if state is None
@@ -1119,18 +1123,14 @@ def pca_power_top(
     mu_arr = F.array(*[F.lit(float(m)) for m in mu])
     c = e.select(F.zip_with("v", mu_arr, lambda x, y: x - y).alias("c"))
 
-    def fold_dot(col, w: list[float]):
-        arr = F.array(*[F.lit(float(x)) for x in w])
-        return F.aggregate(
-            F.zip_with(col, arr, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-
     w: list[float] | None = None  # None => v0 = e_1, s = c[1] exactly
     w_df = None
     for it in range(iters):
-        s = F.element_at("c", 1) if w is None else fold_dot(F.col("c"), w)
+        s = (
+            F.element_at("c", 1)
+            if w is None
+            else dot(F.col("c"), F.array(*[F.lit(float(x)) for x in w]))
+        )
         w_df = (
             c.select(s.alias("s"), F.posexplode("c").alias("pos", "x"))
             .groupBy("pos")

@@ -210,8 +210,8 @@ def int_key_hash(col: Column) -> Column:
 
     The same overflow-safe spelling as operators.quality.hash_bucket
     (fold below 2^31, Knuth multiply) so the SQL mirror is
-    ``((key % 2147483648) * 2654435761) % 1000000007`` — identical
-    integer math in any engine.
+    ``sql_hash_bucket(key, HASH_MOD)`` — identical integer math in any
+    engine.
     """
     from osm_changesets_to_parquet_spark.operators.quality import ID_FOLD, KNUTH
 

@@ -20,15 +20,18 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table, table_store
 from osm_changesets_to_parquet_spark.operators.anchors import (
+    fixed_k_anchors,
     per_anchor_topk,
     sql_anchor_order as _sql_anchor_order,
 )
 from osm_changesets_to_parquet_spark.operators.similarity import (
+    cosine_similarity_col,
     cosine_topk,
     ivf_build,
     ivf_topk,
     lsh_topk,
     pq_adc,
+    sql_cosine,
 )
 from osm_changesets_to_parquet_spark.queries import FixtureGateError, register
 
@@ -57,24 +60,13 @@ def _require_calibrated(sf_dir: str, ok: frozenset, name: str) -> None:
             "before its brute-force oracle is meaningful"
         )
 
-# brute-force cosine top-10 vs vec_id=0, identical to q36's oracle — the
-# recall-property queries must reproduce these exact rows through the
-# approximate path
-BRUTE_TOPK_SQL = """
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    z AS (
-      SELECT e.vec_id,
-             CAST(unnest(e.embedding) AS DOUBLE) AS x,
-             CAST(unnest(q.qe) AS DOUBLE) AS y
-      FROM embeddings e, q
-    ),
-    d AS (
-      SELECT vec_id, SUM(x*y) AS dot, SUM(x*x) AS nx, SUM(y*y) AS ny
-      FROM z GROUP BY vec_id
-    )
-    SELECT vec_id, ROUND(dot / (SQRT(nx) * SQRT(ny)), 4) AS sim
-    FROM d ORDER BY sim DESC, vec_id LIMIT 10
-    """
+# brute-force cosine top-10 vs vec_id=0: q36's oracle, and the rows the
+# recall-property queries must reproduce through the approximate path
+BRUTE_TOPK_SQL = f"""
+WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+SELECT e.vec_id, ROUND({sql_cosine("e.embedding", "q.qe")}, 4) AS sim
+FROM embeddings e, q ORDER BY sim DESC, vec_id LIMIT 10
+"""
 
 
 def _recall_verdict(ann: DataFrame, exact: DataFrame, floor: float) -> DataFrame:
@@ -187,6 +179,86 @@ def a52_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(assigned, centroids, qvec, k=10, nprobe=6)
 
 
+def _double_vectors(emb: DataFrame) -> DataFrame:
+    return emb.select(
+        "vec_id",
+        "label",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+    )
+
+
+# shared by q121 (ann_ranking.py), q132 and q179 (ann_embeddings.py)
+def _anchor_panel(emb: DataFrame, k: int) -> DataFrame:
+    """``(qid, qlab, cid, clab, sim)``: each of the ``k`` fixed-k
+    hash-rank anchors (operators.anchors) against every other vector,
+    ``sim`` the exact cosine rounded to 4.  The anchors broadcast, so
+    the candidate pass is Θ(k·n), never corpus-proportional."""
+    e = _double_vectors(emb)
+    a = fixed_k_anchors(e, "vec_id", k).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("qlab"),
+        F.col("v").alias("qv"),
+    )
+    sim = F.round(cosine_similarity_col(F.col("qv"), F.col("v")), 4)
+    return (
+        e.crossJoin(a)
+        .where(F.col("vec_id") != F.col("qid"))
+        .select(
+            "qid",
+            "qlab",
+            F.col("vec_id").alias("cid"),
+            F.col("label").alias("clab"),
+            sim.alias("sim"),
+        )
+    )
+
+
+def _panel_sql(anchors: str) -> str:
+    """The oracle's ``e``, ``a`` and ``d`` CTEs: ``d`` is
+    :func:`_anchor_panel`'s ``(qid, qlab, cid, clab, sim)`` for the
+    anchor rows ``anchors`` selects from ``e``."""
+    return f"""e AS (
+  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+  FROM embeddings
+),
+a AS ({anchors}),
+d AS (
+  SELECT a.vec_id AS qid, a.label AS qlab, e.vec_id AS cid, e.label AS clab,
+         ROUND({sql_cosine("a.v", "e.v")}, 4) AS sim
+  FROM a JOIN e ON e.vec_id != a.vec_id
+)"""
+
+
+def _hash_anchors_sql(k: int) -> str:
+    """The oracle spelling of :func:`_anchor_panel`'s anchor draw."""
+    return f"SELECT * FROM e ORDER BY {_sql_anchor_order('vec_id')}, vec_id LIMIT {k}"
+
+
+def _contrastive_sql(anchors: str) -> str:
+    """The oracle of :func:`_contrastive_argmax` over :func:`_panel_sql`:
+    per anchor, the top positive and top negative by (sim DESC, cid).  A
+    NULL sim (a zero-norm vector) is neither; an anchor lacking either
+    is dropped."""
+    side = """SELECT qid, cid AS {0}_id, sim AS {0}_sim FROM (
+    SELECT qid, cid, sim,
+           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
+    FROM d WHERE clab {1} qlab AND sim IS NOT NULL
+  ) WHERE rn = 1"""
+    return f"""
+WITH {_panel_sql(anchors)},
+pos AS (
+  {side.format("pos", "=")}
+),
+neg AS (
+  {side.format("neg", "!=")}
+)
+SELECT pos.qid AS vec_id, pos_id, pos_sim, neg_id, neg_sim,
+       ROUND(pos_sim - neg_sim, 4) AS margin
+FROM pos JOIN neg ON neg.qid = pos.qid
+ORDER BY vec_id
+"""
+
+
 # shared by q132 (ann_embeddings.py) and q135 below: the per-anchor
 # hardest-positive/hardest-negative argmax over a scored candidate set
 def _contrastive_argmax(d: DataFrame) -> DataFrame:
@@ -197,14 +269,17 @@ def _contrastive_argmax(d: DataFrame) -> DataFrame:
     the key in F.when(...) makes min_by skip the other class's rows
     (NULL ordering keys are ignored), so both argmaxes come out of a
     single map-side-partial aggregation: zero windows, one shuffle of
-    k·n tiny rows keyed by k distinct anchors.
+    k·n tiny rows keyed by k distinct anchors.  A NULL sim (a zero-norm
+    vector has no direction) is skipped the same way, as in
+    :func:`_contrastive_sql`.
     """
     ordk = F.struct((-F.col("sim")).alias("ns"), F.col("cid").alias("c"))
     val = F.struct(F.col("cid").alias("cid"), F.col("sim").alias("sim"))
     same = F.col("clab") == F.col("qlab")
+    scored = F.col("sim").isNotNull()
     agg = d.groupBy("qid").agg(
-        F.min_by(val, F.when(same, ordk)).alias("pos"),
-        F.min_by(val, F.when(~same, ordk)).alias("neg"),
+        F.min_by(val, F.when(scored & same, ordk)).alias("pos"),
+        F.min_by(val, F.when(scored & ~same, ordk)).alias("neg"),
     )
     return (
         # anchors lacking either class are dropped (the oracle's inner
@@ -259,42 +334,9 @@ _N135_PROBE = 12
 # while the SAME machinery on a 16-cluster gaussian fixture is exact at
 # nprobe=4/16.  The limitation is the fixture, not the operator; a
 # hash-panel q135 at nprobe<16 would be a lie and at 16 would not
-# prune.  Hence the %100 panel and its separate oracle stay.
-_Q135_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-a AS (SELECT * FROM e WHERE vec_id % 100 = 0),
-z AS (
-  SELECT a.vec_id AS qid, a.label AS qlab, e.vec_id AS cid, e.label AS clab,
-         CAST(unnest(a.v) AS DOUBLE) AS x, CAST(unnest(e.v) AS DOUBLE) AS y
-  FROM a JOIN e ON e.vec_id != a.vec_id
-),
-d AS (
-  SELECT qid, qlab, cid, clab,
-         ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-  FROM z GROUP BY qid, qlab, cid, clab
-),
-pos AS (
-  SELECT qid, cid AS pos_id, sim AS pos_sim FROM (
-    SELECT qid, cid, sim,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-    FROM d WHERE clab = qlab
-  ) WHERE rn = 1
-),
-neg AS (
-  SELECT qid, cid AS neg_id, sim AS neg_sim FROM (
-    SELECT qid, cid, sim,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-    FROM d WHERE clab != qlab
-  ) WHERE rn = 1
-)
-SELECT pos.qid AS vec_id, pos_id, pos_sim, neg_id, neg_sim,
-       ROUND(pos_sim - neg_sim, 4) AS margin
-FROM pos JOIN neg ON neg.qid = pos.qid
-ORDER BY vec_id
-"""
+# prune.  Hence the %100 panel stays, and q135's oracle is q132's with
+# this anchor CTE.
+_Q135_SQL = _contrastive_sql("SELECT * FROM e WHERE vec_id % 100 = 0")
 
 
 @register(
@@ -313,23 +355,18 @@ ORDER BY vec_id
         "anchor (q132's full-scan-per-anchor is the oracle-side cost). "
         "Candidate volume ~ anchors x nprobe/n_cells of the corpus; at "
         "scale n_cells grows with the corpus so cells stay "
-        "executor-sized. Calibration-gated exact oracle (= q132's SQL)"
+        "executor-sized. Calibration-gated exact oracle (q132's SQL over "
+        "this anchor panel)"
     ),
     tables=("embeddings",),
 )
 def q135(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.similarity import (
-        cosine_similarity_col,
         ivf_probe_cells_udf,
     )
 
     _require_calibrated(sf_dir, Q135_CALIBRATED_SFS, "q135_contrastive_ann")
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
+    e = _double_vectors(load_table(spark, sf_dir, "embeddings"))
     assigned, centroids = ivf_build(e, n_cells=_N135_CELLS, vec_col="v")
     probe = ivf_probe_cells_udf(spark, centroids, nprobe=_N135_PROBE)
     anchors = e.where(F.col("vec_id") % 100 == 0).select(
@@ -378,16 +415,9 @@ _Q146_NQ = 4
 
 _Q146_SQL = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < {_Q146_NQ}),
-z AS (
-  SELECT q.qid, e.vec_id,
-         CAST(unnest(e.embedding) AS DOUBLE) AS x,
-         CAST(unnest(q.qe) AS DOUBLE) AS y
-  FROM embeddings e, q
-),
 d AS (
-  SELECT qid, vec_id,
-         ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-  FROM z GROUP BY qid, vec_id
+  SELECT q.qid, e.vec_id, ROUND({sql_cosine("e.embedding", "q.qe")}, 4) AS sim
+  FROM embeddings e, q
 ),
 r AS (
   SELECT qid, vec_id, sim,

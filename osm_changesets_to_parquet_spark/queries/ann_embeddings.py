@@ -7,7 +7,10 @@ re-ranking (q165), k-center coresets (q177), PCA power iteration
 (q178), kNN label audits (q179) and classification (q339), embedding
 dimension statistics (q194), negative sampling (q195), random matrix
 projection (q202), and ALS factorization (q348).  Shared vector
-machinery (DIM, brute-force oracle SQL) imports from ann.py.
+machinery (DIM, the fixed-k anchor panel and its oracle CTEs) imports
+from ann.py; every vector fold is one of operators.similarity's
+dot / sq_norm / sq_dist / cosine_similarity_col on the engine side and
+its ``sql_`` twin in the oracle.
 """
 
 from __future__ import annotations
@@ -16,8 +19,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.operators.anchors import sql_anchor_order
+from osm_changesets_to_parquet_spark.operators.quality import sql_hash_bucket
+from osm_changesets_to_parquet_spark.operators.similarity import (
+    cosine_similarity_col,
+    dot,
+    sq_dist,
+    sq_norm,
+    sql_cosine,
+    sql_dot,
+    sql_sq_dist,
+    sql_sq_norm,
+)
 from osm_changesets_to_parquet_spark.queries import register
-from osm_changesets_to_parquet_spark.queries.ann import DIM, _contrastive_argmax
+from osm_changesets_to_parquet_spark.queries.ann import (
+    DIM,
+    _anchor_panel,
+    _contrastive_argmax,
+    _contrastive_sql,
+    _double_vectors,
+    _hash_anchors_sql,
+    _panel_sql,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -30,13 +53,10 @@ _KM_K = 4
 _KM_ITERS = 2
 
 # exact engine-lockstep recipe (see kmeans_lloyd docstring): doubles from
-# the same float32 casts, sequential left-fold distances (list_reduce ==
-# F.aggregate bit-for-bit), centroid components rounded to 6dp after
-# every update, argmin ties to the lower cid
-_KM_DIST = (
-    f"list_reduce(list_transform(range(1, {DIM + 1}), "
-    "i -> (v[i]-c[i])*(v[i]-c[i])), (x,y) -> x+y)"
-)
+# the same float32 casts, sequential left-fold distances (sql_sq_dist ==
+# sq_dist bit-for-bit), centroid components rounded to 6dp after every
+# update, argmin ties to the lower cid
+_KM_DIST = sql_sq_dist("v", "c")
 
 
 _Q115_SQL = f"""
@@ -77,7 +97,7 @@ c2 AS (
   ) GROUP BY cid
 )
 SELECT a.cid, COUNT(*) AS n_points,
-       ROUND(ANY_VALUE({'list_reduce(list_transform(c, x -> x*x), (x,y) -> x+y)'}), 4) AS c_norm2
+       ROUND(ANY_VALUE({sql_sq_norm("c")}), 4) AS c_norm2
 FROM a2 a JOIN c2 ON a.cid = c2.cid
 GROUP BY a.cid ORDER BY a.cid
 """
@@ -102,12 +122,7 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, cent = kmeans_lloyd(emb, k=_KM_K, iters=_KM_ITERS)
-    norm2 = F.round(
-        F.aggregate(
-            F.col("c"), F.lit(0.0).cast("double"), lambda acc, x: acc + x * x
-        ),
-        4,
-    )
+    norm2 = F.round(sq_norm(F.col("c")), 4)
     counts = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_points"))
     return (
         counts.join(cent.select("cid", norm2.alias("c_norm2")), "cid")
@@ -125,43 +140,7 @@ def q115(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q132_ANCHORS = 8  # FIXED anchor count — independent of corpus size
 
 
-_Q132_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-a AS (SELECT * FROM e
-      ORDER BY ((vec_id % 2147483648) * 2654435761) % 1000000007, vec_id
-      LIMIT {_Q132_ANCHORS}),
-z AS (
-  SELECT a.vec_id AS qid, a.label AS qlab, e.vec_id AS cid, e.label AS clab,
-         CAST(unnest(a.v) AS DOUBLE) AS x, CAST(unnest(e.v) AS DOUBLE) AS y
-  FROM a JOIN e ON e.vec_id != a.vec_id
-),
-d AS (
-  SELECT qid, qlab, cid, clab,
-         ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-  FROM z GROUP BY qid, qlab, cid, clab
-),
-pos AS (
-  SELECT qid, cid AS pos_id, sim AS pos_sim FROM (
-    SELECT qid, cid, sim,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-    FROM d WHERE clab = qlab
-  ) WHERE rn = 1
-),
-neg AS (
-  SELECT qid, cid AS neg_id, sim AS neg_sim FROM (
-    SELECT qid, cid, sim,
-           ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rn
-    FROM d WHERE clab != qlab
-  ) WHERE rn = 1
-)
-SELECT pos.qid AS vec_id, pos_id, pos_sim, neg_id, neg_sim,
-       ROUND(pos_sim - neg_sim, 4) AS margin
-FROM pos JOIN neg ON neg.qid = pos.qid
-ORDER BY vec_id
-"""
+_Q132_SQL = _contrastive_sql(_hash_anchors_sql(_Q132_ANCHORS))
 
 
 @register(
@@ -182,45 +161,8 @@ ORDER BY vec_id
     tables=("embeddings",),
 )
 def q132(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import fixed_k_anchors
-
     emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    a = fixed_k_anchors(e, "vec_id", _Q132_ANCHORS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlab"),
-        F.col("v").alias("qv"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
-    d = (
-        e.crossJoin(a)
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "qlab",
-            F.col("vec_id").alias("cid"),
-            F.col("label").alias("clab"),
-            F.round(dot / (nrm(F.col("qv")) * nrm(F.col("v"))), 4).alias("sim"),
-        )
-    )
-    return _contrastive_argmax(d)
-
-
+    return _contrastive_argmax(_anchor_panel(emb, _Q132_ANCHORS))
 
 
 # ---------------------------------------------------------------------------
@@ -263,14 +205,10 @@ def _mmr_sql(pool_k: int, select_k: int, lam: float) -> str:
     )
     return f"""
 WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-z AS (
-  SELECT e.vec_id, CAST(unnest(e.embedding) AS DOUBLE) AS x,
-         CAST(unnest(q.qe) AS DOUBLE) AS y
+sims AS (
+  SELECT e.vec_id, ROUND({sql_cosine("e.embedding", "q.qe")}, 4) AS simq
   FROM embeddings e, q WHERE e.vec_id != 0
 ),
-d AS (SELECT vec_id, SUM(x*y) AS dot, SUM(x*x) AS nx, SUM(y*y) AS ny
-      FROM z GROUP BY vec_id),
-sims AS (SELECT vec_id, ROUND(dot / (SQRT(nx) * SQRT(ny)), 4) AS simq FROM d),
 pool AS (
   SELECT vec_id, simq FROM (
     SELECT vec_id, simq,
@@ -279,14 +217,11 @@ pool AS (
   ) WHERE rn <= {pool_k}
 ),
 pv AS (SELECT p.vec_id, e.embedding FROM pool p JOIN embeddings e USING (vec_id)),
-zz AS (
+pp AS (
   SELECT a.vec_id AS av, b.vec_id AS bv,
-         CAST(unnest(a.embedding) AS DOUBLE) AS x,
-         CAST(unnest(b.embedding) AS DOUBLE) AS y
+         ROUND({sql_cosine("a.embedding", "b.embedding")}, 4) AS s
   FROM pv a, pv b WHERE a.vec_id != b.vec_id
 ),
-pp AS (SELECT av, bv, ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4)
-         AS s FROM zz GROUP BY 1, 2),
 {", ".join(steps)}
 SELECT rank, vec_id, simq, mmr_score FROM ({union}) ORDER BY rank
 """
@@ -326,14 +261,7 @@ def q165(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q177_K = 4
 
 
-_Q177_DIST_TPL = (
-    f"list_reduce(list_transform(range(1, {DIM + 1}), "
-    "i -> ({v}[i]-{c}[i])*({v}[i]-{c}[i])), (x,y) -> x+y)"
-)
-
-
 def _q177_sql() -> str:
-    d = _Q177_DIST_TPL.format
     return f"""
 WITH e AS (
   SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -341,17 +269,17 @@ WITH e AS (
 ),
 s1 AS (SELECT id, v FROM e WHERE id = 0),
 d2 AS (
-  SELECT e.id, e.v, {d(v='e.v', c='s1.v')} AS mind
+  SELECT e.id, e.v, {sql_sq_dist("e.v", "s1.v")} AS mind
   FROM e, s1 WHERE e.id <> s1.id
 ),
 s2 AS (SELECT id, v, mind FROM d2 ORDER BY mind DESC, id LIMIT 1),
 d3 AS (
-  SELECT d2.id, d2.v, LEAST(d2.mind, {d(v='d2.v', c='s2.v')}) AS mind
+  SELECT d2.id, d2.v, LEAST(d2.mind, {sql_sq_dist("d2.v", "s2.v")}) AS mind
   FROM d2, s2 WHERE d2.id <> s2.id
 ),
 s3 AS (SELECT id, v, mind FROM d3 ORDER BY mind DESC, id LIMIT 1),
 d4 AS (
-  SELECT d3.id, d3.v, LEAST(d3.mind, {d(v='d3.v', c='s3.v')}) AS mind
+  SELECT d3.id, d3.v, LEAST(d3.mind, {sql_sq_dist("d3.v", "s3.v")}) AS mind
   FROM d3, s3 WHERE d3.id <> s3.id
 ),
 s4 AS (SELECT id, v, mind FROM d4 ORDER BY mind DESC, id LIMIT 1)
@@ -389,10 +317,6 @@ def q177(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _q178_sql() -> str:
-    dot = (
-        f"list_reduce(list_transform(range(1, {DIM + 1}), "
-        "i -> c[i]*{w}[i]), (x,y) -> x+y)"
-    ).format
     return f"""
 WITH e AS (
   SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings
@@ -413,14 +337,14 @@ w1 AS (
   GROUP BY pos
 ),
 w1l AS (SELECT list(w ORDER BY pos) AS w FROM w1),
-s2 AS (SELECT c, {dot(w='w')} AS s FROM c, w1l),
+s2 AS (SELECT c, {sql_dot("c", "w")} AS s FROM c, w1l),
 w2 AS (
   SELECT pos, ROUND(SUM(x * s), 6) AS w
   FROM (SELECT s, generate_subscripts(c, 1) AS pos, unnest(c) AS x FROM s2)
   GROUP BY pos
 ),
 w2l AS (SELECT list(w ORDER BY pos) AS w FROM w2),
-s3 AS (SELECT c, {dot(w='w')} AS s FROM c, w2l),
+s3 AS (SELECT c, {sql_dot("c", "w")} AS s FROM c, w2l),
 w3 AS (
   SELECT pos, ROUND(SUM(x * s), 6) AS w
   FROM (SELECT s, generate_subscripts(c, 1) AS pos, unnest(c) AS x FROM s3)
@@ -465,23 +389,7 @@ _Q179_ANCHORS = 20  # FIXED anchor count — independent of corpus size
 
 
 _Q179_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-a AS (SELECT * FROM e
-      ORDER BY ((vec_id % 2147483648) * 2654435761) % 1000000007, vec_id
-      LIMIT {_Q179_ANCHORS}),
-z AS (
-  SELECT a.vec_id AS qid, a.label AS qlab, e.vec_id AS cid, e.label AS clab,
-         CAST(unnest(a.v) AS DOUBLE) AS x, CAST(unnest(e.v) AS DOUBLE) AS y
-  FROM a JOIN e ON e.vec_id != a.vec_id
-),
-d AS (
-  SELECT qid, qlab, cid, clab,
-         ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-  FROM z GROUP BY qid, qlab, cid, clab
-),
+WITH {_panel_sql(_hash_anchors_sql(_Q179_ANCHORS))},
 r AS (
   SELECT qid, qlab, clab,
          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rnk
@@ -518,45 +426,9 @@ FROM t ORDER BY vec_id
     tables=("embeddings",),
 )
 def q179(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import (
-        fixed_k_anchors,
-        per_anchor_topk,
-    )
+    from osm_changesets_to_parquet_spark.operators.anchors import per_anchor_topk
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    a = fixed_k_anchors(e, "vec_id", _Q179_ANCHORS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlab"),
-        F.col("v").alias("qv"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
-    d = (
-        e.crossJoin(a)
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "qlab",
-            F.col("vec_id").alias("cid"),
-            F.col("label").alias("clab"),
-            F.round(dot / (nrm(F.col("qv")) * nrm(F.col("v"))), 4).alias("sim"),
-        )
-    )
+    d = _anchor_panel(load_table(spark, sf_dir, "embeddings"), _Q179_ANCHORS)
     t = (
         per_anchor_topk(
             d, ["qid"], [F.col("sim").desc(), F.col("cid")], _Q179_K
@@ -651,16 +523,11 @@ cand AS (
   SELECT a.aid, a.alab, a.av, j.j,
          ((((a.aid % {ID_FOLD}) * {KNUTH} + j.j * 97) % {ID_FOLD}) % n.n_ids) AS nid
   FROM a CROSS JOIN (SELECT unnest(range(1, {_Q195_K + 1})) AS j) j CROSS JOIN n
-),
-m AS (
-  SELECT c.aid, c.j, c.nid, e.label AS nlab,
-         CAST(unnest(c.av) AS DOUBLE) AS x, CAST(unnest(e.v) AS DOUBLE) AS y
-  FROM cand c JOIN e ON e.vec_id = c.nid
-  WHERE c.nid != c.aid AND e.label != c.alab
 )
-SELECT aid AS anchor_id, j AS draw, nid AS neg_id,
-       ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-FROM m GROUP BY aid, j, nid
+SELECT c.aid AS anchor_id, c.j AS draw, c.nid AS neg_id,
+       ROUND({sql_cosine("c.av", "e.v")}, 4) AS sim
+FROM cand c JOIN e ON e.vec_id = c.nid
+WHERE c.nid != c.aid AND e.label != c.alab
 ORDER BY anchor_id, draw
 """
 
@@ -684,12 +551,7 @@ ORDER BY anchor_id, draw
 def q195(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.quality import ID_FOLD, KNUTH
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
+    e = _double_vectors(load_table(spark, sf_dir, "embeddings"))
     n = e.agg(F.count(F.lit(1)).alias("n_ids"))
     a = e.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("aid"),
@@ -722,23 +584,12 @@ def q195(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(neg, "nid")
         .where((F.col("nid") != F.col("aid")) & (F.col("nlab") != F.col("alab")))
     )
-    dot = F.aggregate(
-        F.zip_with("av", "nv", lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
+    sim = F.round(cosine_similarity_col(F.col("av"), F.col("nv")), 4)
     return m.select(
         F.col("aid").alias("anchor_id"),
         F.col("j").cast("long").alias("draw"),
         F.col("nid").alias("neg_id"),
-        F.round(dot / (nrm(F.col("av")) * nrm(F.col("nv"))), 4).alias("sim"),
+        sim.alias("sim"),
     ).orderBy("anchor_id", "draw")
 
 
@@ -756,14 +607,9 @@ _Q202_P = [
 
 
 def _q202_sql() -> str:
-    rows = []
-    for j, row in enumerate(_Q202_P):
-        lits = ", ".join(repr(x) for x in row)
-        rows.append(
-            f"list_reduce(list_transform(range(1, {DIM + 1}), "
-            f"i -> v[i] * ([{lits}])[i]), (x, y) -> x + y)"
-        )
-    comps = ", ".join(rows)
+    comps = ", ".join(
+        sql_dot("v", f"([{', '.join(repr(x) for x in row)}])") for row in _Q202_P
+    )
     return f"""
 WITH e AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -773,9 +619,7 @@ p AS (
   SELECT vec_id, [{comps}] AS pv FROM e
 ),
 n AS (
-  SELECT vec_id,
-         ROUND(SQRT(list_reduce(list_transform(pv, x -> x * x),
-                                (x, y) -> x + y)), 4) AS pnorm
+  SELECT vec_id, ROUND(SQRT({sql_sq_norm("pv")}), 4) AS pnorm
   FROM p
 )
 SELECT vec_id, pnorm FROM n ORDER BY pnorm DESC, vec_id LIMIT 10
@@ -803,25 +647,10 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
 
-    def comp(row: list[float]):
-        arr = F.array(*[F.lit(x) for x in row])
-        return F.aggregate(
-            F.zip_with("v", arr, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-
-    pv = F.array(*[comp(row) for row in _Q202_P])
-    pnorm = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.transform(pv, lambda x: x * x),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x,
-            )
-        ),
-        4,
+    pv = F.array(
+        *[dot(F.col("v"), F.array(*[F.lit(x) for x in row])) for row in _Q202_P]
     )
+    pnorm = F.round(F.sqrt(sq_norm(pv)), 4)
     return (
         e.select("vec_id", pnorm.alias("pnorm"))
         .orderBy(F.col("pnorm").desc(), "vec_id")
@@ -834,8 +663,8 @@ def q202(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # The classifier twin of q179's label-noise audit: exact 5-NN
-# majority vote (squared-L2 over the shared-idiom sequential left-fold
-# doubles — list_reduce == F.aggregate bit-for-bit, the q115 recipe)
+# majority vote (squared-L2 through operators.similarity's sq_dist and
+# its oracle twin sql_sq_dist, bit-identical — the q115 recipe)
 # from the 80% train split, evaluated on a FIXED 40-vector hash-rank
 # panel of the test split (operators/anchors — the eval cost is
 # panel x train, never test x train; the ANN indexes a51/a52 are the
@@ -850,29 +679,21 @@ _Q339_K = 5
 _Q339_PANEL = 40
 
 
-_Q339_DIST = (
-    f"list_reduce(list_transform(range(1, {DIM + 1}), "
-    "i -> (t.v[i]-r.v[i])*(t.v[i]-r.v[i])), (x,y) -> x+y)"
-)
-
-
 _Q339_SQL = f"""
 WITH e AS (
   SELECT vec_id AS id, label,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
   FROM embeddings
 ),
-tr AS (SELECT * FROM e WHERE ((id % 2147483648) * 2654435761) % 100 < 80),
-te AS (SELECT * FROM e WHERE ((id % 2147483648) * 2654435761) % 100 >= 80),
+tr AS (SELECT * FROM e WHERE {sql_hash_bucket("id")} < 80),
+te AS (SELECT * FROM e WHERE {sql_hash_bucket("id")} >= 80),
 panel AS (
-  SELECT * FROM te
-  ORDER BY ((id % 2147483648) * 2654435761) % 1000000007, id
-  LIMIT {_Q339_PANEL}
+  SELECT * FROM te ORDER BY {sql_anchor_order("id")}, id LIMIT {_Q339_PANEL}
 ),
 nn AS (
   SELECT t.id, t.label AS true_label, r.label AS nbr_label,
          ROW_NUMBER() OVER (PARTITION BY t.id
-                            ORDER BY {_Q339_DIST}, r.id) AS rn
+                            ORDER BY {sql_sq_dist("t.v", "r.v")}, r.id) AS rn
   FROM panel t CROSS JOIN tr r
 ),
 vote AS (
@@ -905,8 +726,8 @@ FROM pred GROUP BY true_label ORDER BY label
         f"exact {_Q339_K}-NN majority-vote classifier accuracy on a "
         f"FIXED {_Q339_PANEL}-vector hash-rank test panel (the q179 "
         "audit's classifier twin): squared-L2 via the shared "
-        "sequential-left-fold idiom (list_reduce == F.aggregate "
-        "bit-for-bit, q115's recipe) against the 80% train split, "
+        "sq_dist / sql_sq_dist fold (bit-identical, q115's recipe) "
+        "against the 80% train split, "
         "neighbor ranks through operators/anchors.per_anchor_topk "
         "(no reducer sees a panel member's full candidate list), "
         "integer votes tie-broken to the smaller label.  Eval cost "
@@ -949,13 +770,7 @@ def q339(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("nbr_label"),
         F.col("v").alias("rv"),
     )
-    dist = F.aggregate(
-        F.zip_with(
-            F.col("tv"), F.col("rv"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dist = sq_dist(F.col("tv"), F.col("rv"))
     pairs = t.crossJoin(r).select(
         "id", "true_label", "nbr_label", F.col("rid"), dist.alias("dist")
     )
@@ -1088,7 +903,7 @@ WITH rt AS MATERIALIZED (
 ),
 q0 AS MATERIALIZED (
   SELECT p, CAST({_Q348_Q} AS BIGINT) AS f1m,
-         CAST((((p % 2147483648) * 2654435761) % 1000) * 1000 AS BIGINT)
+         CAST(({sql_hash_bucket("p", 1000)}) * 1000 AS BIGINT)
            AS f2m
   FROM (SELECT DISTINCT p FROM rt)
 ),

@@ -33,6 +33,9 @@ from osm_changesets_to_parquet_spark.queries.ann import (
     _Q243_K,
     _Q243_NQ,
     _Q243_SUB,
+    _anchor_panel,
+    _hash_anchors_sql,
+    _panel_sql,
 )
 
 
@@ -55,23 +58,7 @@ _Q121_ANCHORS = 8  # FIXED anchor count — independent of corpus size
 
 
 _Q121_SQL = f"""
-WITH e AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-a AS (SELECT * FROM e
-      ORDER BY ((vec_id % 2147483648) * 2654435761) % 1000000007, vec_id
-      LIMIT {_Q121_ANCHORS}),
-z AS (
-  SELECT a.vec_id AS qid, a.label AS qlab, e.vec_id AS cid, e.label AS clab,
-         CAST(unnest(a.v) AS DOUBLE) AS x, CAST(unnest(e.v) AS DOUBLE) AS y
-  FROM a JOIN e ON e.vec_id != a.vec_id
-),
-d AS (
-  SELECT qid, qlab, cid, clab,
-         ROUND(SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))), 4) AS sim
-  FROM z GROUP BY qid, qlab, cid, clab
-),
+WITH {_panel_sql(_hash_anchors_sql(_Q121_ANCHORS))},
 r AS (
   SELECT qid, qlab, cid, clab, sim,
          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid) AS rnk
@@ -111,40 +98,7 @@ ORDER BY vec_id
     tables=("embeddings",),
 )
 def q121(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-    )
-    a = fixed_k_anchors(e, "vec_id", _Q121_ANCHORS).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlab"),
-        F.col("v").alias("qv"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    nrm = lambda c: F.sqrt(
-        F.aggregate(
-            F.transform(c, lambda x: x * x),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
-    d = (
-        e.crossJoin(a)
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "qlab",
-            F.col("vec_id").alias("cid"),
-            F.col("label").alias("clab"),
-            F.round(dot / (nrm(F.col("qv")) * nrm(F.col("v"))), 4).alias("sim"),
-        )
-    )
+    d = _anchor_panel(load_table(spark, sf_dir, "embeddings"), _Q121_ANCHORS)
     rel = (F.col("clab") == F.col("qlab")).cast("int")
     # n_rel over ALL candidates is a plain keyed aggregate (map-side
     # partials) — only the top-k ranking needs the two-phase window

@@ -14,6 +14,14 @@ from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table, table_store
 from osm_changesets_to_parquet_spark.operators import dedup as D
+from osm_changesets_to_parquet_spark.operators.anchors import (
+    fixed_k_anchors,
+    sql_anchor_order,
+)
+from osm_changesets_to_parquet_spark.operators.similarity import (
+    cosine_similarity_col,
+    sql_cosine,
+)
 from osm_changesets_to_parquet_spark.queries import FixtureGateError, register
 
 P = D.HASH_MOD
@@ -337,37 +345,26 @@ _E46_ANCHORS = 8  # FIXED anchor count — independent of corpus size
     "e46_embedding_neardup",
     f"""
     WITH anchors AS (SELECT vec_id, embedding FROM embeddings
-                     ORDER BY ((vec_id % 2147483648) * 2654435761) % 1000000007, vec_id
+                     ORDER BY {sql_anchor_order("vec_id")}, vec_id
                      LIMIT {_E46_ANCHORS}),
-    z AS (
-      SELECT a.vec_id AS id_a, e.vec_id AS id_b,
-             CAST(unnest(a.embedding) AS DOUBLE) AS x,
-             CAST(unnest(e.embedding) AS DOUBLE) AS y
-      FROM anchors a JOIN embeddings e ON e.vec_id != a.vec_id
-    ),
     d AS (
-      SELECT id_a, id_b, SUM(x*y) AS dot, SUM(x*x) AS nx, SUM(y*y) AS ny
-      FROM z GROUP BY id_a, id_b
+      SELECT a.vec_id AS id_a, e.vec_id AS id_b,
+             ROUND({sql_cosine("a.embedding", "e.embedding")}, 4) AS sim
+      FROM anchors a JOIN embeddings e ON e.vec_id != a.vec_id
     )
-    SELECT id_a, id_b, ROUND(dot / (SQRT(nx) * SQRT(ny)), 4) AS sim
-    FROM d
-    WHERE ROUND(dot / (SQRT(nx) * SQRT(ny)), 4) >= 0.3
+    SELECT id_a, id_b, sim FROM d WHERE sim >= 0.3
     ORDER BY id_a, id_b
     """,
     doc=(
         "embedding-cosine near-dup vs a FIXED-k hash-rank anchor set "
         "(operators.anchors.fixed_k_anchors — anchor count independent "
         "of corpus size, so the broadcast pass is Θ(k·n); VERDICT r06 "
-        "item 3 respell), sim >= 0.3; the all-pairs scale path is "
-        "operators.similarity.pairwise_cosine_neardup (SRP-LSH "
-        "bucketed), property-tested"
+        "item 3 respell), sim >= 0.3; all-pairs embedding dedup at "
+        "scale is q102's SemDeDup (cluster, then compare within a cell)"
     ),
     tables=("embeddings",),
 )
 def e46(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osm_changesets_to_parquet_spark.operators.anchors import fixed_k_anchors
-    from osm_changesets_to_parquet_spark.operators.similarity import cosine_similarity_col
-
     emb = load_table(spark, sf_dir, "embeddings")
     anchors = fixed_k_anchors(emb, "vec_id", _E46_ANCHORS).select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
@@ -1726,7 +1723,7 @@ def q298(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q325_CLAMP_LO = 0.001
 _Q325_CLAMP_HI = 0.999
 
-_Q325_B = "(((c_custkey % 2147483648) * 2654435761) % 100)"
+_Q325_B = f"({_sql_hb('c_custkey', 100)})"
 
 _Q325_FILES = f"""
 a AS (

@@ -20,6 +20,7 @@ from osm_changesets_to_parquet_spark.operators.dq import (
     rule_violations,
     violation_count,
 )
+from osm_changesets_to_parquet_spark.operators.quality import sql_hash_bucket
 from osm_changesets_to_parquet_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -545,7 +546,7 @@ WITH c AS (
 ),
 h AS (
   SELECT event_type, n_true,
-         ((({_Q327_CHARHASH} % 2147483648) * 2654435761) % 1000000007) AS b
+         ({sql_hash_bucket(_Q327_CHARHASH, 1000000007)}) AS b
   FROM c
 ),
 u AS (
@@ -633,8 +634,8 @@ WITH u AS (
 ),
 r AS (
   SELECT CAST(cents >= {_Q341_CENTS} AS BIGINT) AS truth,
-         CAST(((user_id % 2147483648) * 2654435761) % {_Q341_P_DEN}
-              = {_Q341_P_DEN - 1} AS BIGINT) AS lie
+         CAST({sql_hash_bucket("user_id", _Q341_P_DEN)} = {_Q341_P_DEN - 1}
+              AS BIGINT) AS lie
   FROM u
 ),
 s AS (

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osm_changesets_to_parquet_spark.catalog import load_table
+from osm_changesets_to_parquet_spark.operators.anchors import sql_anchor_order
 from osm_changesets_to_parquet_spark.operators.graph import (
     copurchase_pairs,
     k_core,
@@ -1043,7 +1044,7 @@ WITH {copurchase_ctes(2)},
 nodes AS (SELECT DISTINCT src AS v FROM sym),
 seeds AS (
   SELECT v AS seed FROM nodes
-  ORDER BY ((v % 2147483648) * 2654435761) % 1000000007, v LIMIT {_Q333_K}
+  ORDER BY {sql_anchor_order("v")}, v LIMIT {_Q333_K}
 ),
 n1 AS (
   SELECT s.seed, a.dst AS nbr FROM seeds s JOIN sym a ON a.src = s.seed

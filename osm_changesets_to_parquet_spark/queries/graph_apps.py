@@ -22,6 +22,7 @@ from osm_changesets_to_parquet_spark.operators.graph import (
     undirected,
 )
 from osm_changesets_to_parquet_spark.operators.iterutils import truncate_lineage
+from osm_changesets_to_parquet_spark.operators.quality import sql_hash_bucket
 from osm_changesets_to_parquet_spark.queries import register
 from osm_changesets_to_parquet_spark.queries.graph import (
     copurchase_ctes,
@@ -464,7 +465,7 @@ _Q338_K = 5
 _Q338_MIN_CO = 2
 
 
-_Q338_SPLIT = "(((o % 2147483648) * 2654435761) % 100)"
+_Q338_SPLIT = f"({sql_hash_bucket('o')})"
 
 
 _Q338_SQL = f"""

@@ -16,6 +16,7 @@ from osm_changesets_to_parquet_spark.catalog import load_table
 from osm_changesets_to_parquet_spark.operators import text as T
 from osm_changesets_to_parquet_spark.operators.similarity import cosine_topk
 from osm_changesets_to_parquet_spark.queries import register
+from osm_changesets_to_parquet_spark.queries.ann import BRUTE_TOPK_SQL
 
 # ---------------------------------------------------------------------------
 # Dedup
@@ -55,21 +56,7 @@ def q34(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q36_cosine_topk",
-    """
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-    z AS (
-      SELECT e.vec_id,
-             CAST(unnest(e.embedding) AS DOUBLE) AS x,
-             CAST(unnest(q.qe) AS DOUBLE) AS y
-      FROM embeddings e, q
-    ),
-    d AS (
-      SELECT vec_id, SUM(x*y) AS dot, SUM(x*x) AS nx, SUM(y*y) AS ny
-      FROM z GROUP BY vec_id
-    )
-    SELECT vec_id, ROUND(dot / (SQRT(nx) * SQRT(ny)), 4) AS sim
-    FROM d ORDER BY sim DESC, vec_id LIMIT 10
-    """,
+    BRUTE_TOPK_SQL,
     doc=(
         "exact cosine top-10 vs the vec_id=0 vector: JVM-side zip_with/"
         "aggregate fold + TakeOrderedAndProject (no global sort)"
@@ -132,8 +119,8 @@ def q37(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_changesets_to_parquet_spark.operators.similarity import (
-        _sq_norm,
         normalize_vectors,
+        sq_norm,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -141,7 +128,7 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normed.select(
         "vec_id",
         F.round(F.element_at("nv", 1), 4).alias("n1"),
-        F.round(F.round(F.sqrt(_sq_norm(F.col("nv"))), 6), 4).alias("unit_norm"),
+        F.round(F.round(F.sqrt(sq_norm(F.col("nv"))), 6), 4).alias("unit_norm"),
     ).orderBy("vec_id")
 
 

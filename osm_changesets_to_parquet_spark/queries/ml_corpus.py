@@ -1477,7 +1477,7 @@ def q307(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q332_D = 0.75
 
 
-_Q332_TRAIN = "((doc_id % 2147483648) * 2654435761) % 100 < 80"
+_Q332_TRAIN = f"{sql_hash_bucket('doc_id')} < 80"
 
 
 _Q332_SQL = f"""

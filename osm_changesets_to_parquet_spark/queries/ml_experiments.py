@@ -632,7 +632,7 @@ outc AS (
 ),
 users AS (
   SELECT p.user_id, p.pc,
-         CASE WHEN ((p.user_id % 2147483648) * 2654435761) % 100 >= 50
+         CASE WHEN {sql_hash_bucket("p.user_id")} >= 50
               THEN 1 ELSE 0 END AS treat,
          COALESCE(o.y, 0) AS y
   FROM pre p LEFT JOIN outc o ON o.user_id = p.user_id
@@ -849,7 +849,7 @@ post AS (
   FROM e WHERE d >= {_Q345_SPLIT_DAY} GROUP BY user_id
 ),
 u AS (
-  SELECT CASE WHEN ((us.user_id % 2147483648) * 2654435761) % 100 >= 50
+  SELECT CASE WHEN {sql_hash_bucket("us.user_id")} >= 50
               THEN 1 ELSE 0 END AS z,
          COALESCE(po.qc, 0) AS qc, COALESCE(po.y, 0) AS y
   FROM (SELECT DISTINCT user_id FROM e) us

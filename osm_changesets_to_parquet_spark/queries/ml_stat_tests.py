@@ -1705,7 +1705,7 @@ SELECT u.user_id, u.n, u.x,
        ROUND((u.x + alpha) / (u.n + alpha + beta), 6) AS shrunk_rate,
        ROUND(alpha, 4) AS alpha, ROUND(beta, 4) AS beta
 FROM u CROSS JOIN ab2
-WHERE ((u.user_id % 2147483648) * 2654435761) % 100 < {_Q328_PANEL}
+WHERE {sql_hash_bucket("u.user_id")} < {_Q328_PANEL}
 ORDER BY u.user_id
 """
 

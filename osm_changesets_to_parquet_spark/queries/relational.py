@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from osm_changesets_to_parquet_spark.catalog import fan_out, load_table
+from osm_changesets_to_parquet_spark.operators.similarity import sq_norm, sql_sq_norm
 from osm_changesets_to_parquet_spark.queries import register
 
 # ---------------------------------------------------------------------------
@@ -935,26 +936,24 @@ def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q33_array_funcs",
-    """
+    f"""
     SELECT vec_id,
            len(embedding) AS dim,
            ROUND(CAST(embedding[1] AS DOUBLE), 4) AS first_val,
-           ROUND(CAST(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS DOUBLE), 4) AS sq_norm
+           ROUND({sql_sq_norm("embedding")}, 4) AS sq_norm
     FROM embeddings ORDER BY vec_id
     """,
-    doc="array size / element_at / lambda fold (F.aggregate) over embeddings",
+    doc=(
+        "array size / element_at / lambda fold (operators.similarity."
+        "sq_norm, an F.aggregate) over embeddings"
+    ),
     tables=("embeddings",),
 )
 def q33(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    sq = F.aggregate(
-        F.col("embedding"),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
     return emb.select(
         "vec_id",
         F.size("embedding").cast("long").alias("dim"),
         F.round(F.element_at("embedding", 1).cast("double"), 4).alias("first_val"),
-        F.round(sq, 4).alias("sq_norm"),
+        F.round(sq_norm(F.col("embedding")), 4).alias("sq_norm"),
     ).orderBy("vec_id")

@@ -12,7 +12,6 @@ from osm_changesets_to_parquet_spark.operators import dedup as D
 from osm_changesets_to_parquet_spark.operators.similarity import (
     lsh_topk,
     cosine_topk,
-    pairwise_cosine_neardup,
 )
 
 
@@ -72,15 +71,6 @@ def test_lsh_topk_recall(spark, sf_dir):
     ]
     overlap = len(set(exact) & set(approx))
     assert overlap >= 5, f"LSH top-k recall too low: {overlap}/10"
-
-
-def test_pairwise_neardup_runs(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = pairwise_cosine_neardup(emb, threshold=0.3)
-    rows = out.collect()
-    for r in rows:
-        assert r.id_a < r.id_b
-        assert r.sim >= 0.3
 
 
 def test_lsh_pairs_share_one_shingle_frame(spark, sf_dir):

@@ -36,12 +36,21 @@ def _plan(spark, sf_dir, name: str) -> str:
 # them: the co-purchase pair self-join (queries.graph.copurchase_ctes),
 # the min-label round (queries.graph.min_label_ctes), the item-CF
 # cosine (queries.graph_apps._item_cf) and the LSH banding generator,
-# which operators.dedup.band_keys returns whole.
+# which operators.dedup.band_keys returns whole.  The vector folds live
+# in operators.similarity (dot, sq_norm, sq_dist, cosine_similarity_col
+# and their sql_ twins) and the Knuth id hash in operators.quality
+# (hash_bucket / sql_hash_bucket, and anchors.sql_anchor_order): the
+# unnest-and-SUM cosine, the pasted squared-difference and squared-norm
+# folds and the hand-written hash literal are retired spellings.
 _ONE_HOME = {
     "a.l_partkey < b.l_partkey": 1,
     "LEAST(n.lbl, MIN(x.lbl))": 1,
     'F.sqrt((F.col("da") * F.col("db"))': 1,
     "posexplode(F.array(*band_keys": 0,
+    "SUM(x*y)": 0,
+    "(x - y) * (x - y)": 0,
+    "F.transform(c, lambda x: x * x)": 0,
+    "2147483648) * 2654435761": 0,
 }
 
 
